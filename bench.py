@@ -244,11 +244,10 @@ def run_crawl_round(spark, world_dir: str) -> dict:
             "selected": stats["selected"],
             "success": stats["success"],
             "urls_per_sec": round(stats["selected"] / round_s, 1) if round_s else 0.0,
-            # the round's ~parallelism-independent tail (snapshot commit
-            # + bloom delta): lets the scaling harness separate the
-            # Amdahl serial section from the data-proportional stages
+            # the round's ~parallelism-independent tail (snapshot
+            # commit): lets the scaling harness separate the Amdahl
+            # serial section from the data-proportional stages
             "frontier_write_sec": stats.get("frontier_write_seconds"),
-            "bloom_merge_sec": stats.get("bloom_merge_seconds"),
             "sections": stats.get("sections"),
         }
     finally:

@@ -118,12 +118,24 @@ def _edges_explode(pages):
     )
 
 
-def main():
+def _at_least_one(value: str) -> int:
+    n = int(value)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
+def parse_args(argv=None) -> argparse.Namespace:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--rows", type=int, default=100_000)
-    ap.add_argument("--cpus", type=int, default=32)
-    ap.add_argument("--trials", type=int, default=3)
-    args = ap.parse_args()
+    ap.add_argument("--rows", type=_at_least_one, default=100_000)
+    ap.add_argument("--cpus", type=_at_least_one, default=32)
+    # best-of-N needs at least one timed trial
+    ap.add_argument("--trials", type=_at_least_one, default=3)
+    return ap.parse_args(argv)
+
+
+def main(argv=None):
+    args = parse_args(argv)
 
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")

@@ -3,13 +3,11 @@
 SURVEY §7.1 M4's local stand-in: does the PER-ROUND cost stay
 budget-proportional while the frontier (10M rows) and the seen set
 (growing by ~budget per round) dwarf the per-round selection? The
-killers this catches: re-scanning the full seen set per round
-(bloom rebuild instead of OR-merge), frontier-proportional politeness
-work, snapshot writes that grow with history.
+killers this catches: frontier-proportional politeness work, snapshot
+writes that grow with history.
 
-Reported per round: wall, selected, seen_total, frontier-snapshot
-write cost, bloom OR-merge cost, urls/sec — plus the frontier-growth
-curve. Writes BENCH/steady_state_10m.json.
+Reported per round: wall, selected, seen_total, frontier write cost,
+urls/sec — plus the frontier-growth curve. Writes BENCH/steady_state_10m.json.
 
     python benchkit/steady_state.py --hosts 5000 --yachts 72 --rounds 3
 """
@@ -105,7 +103,6 @@ def main() -> int:
                     "frontier_rows": n_frontier,
                     "wall_seconds": round(stats["wall_seconds"], 1),
                     "frontier_write_seconds": stats["frontier_write_seconds"],
-                    "bloom_merge_seconds": stats["bloom_merge_seconds"],
                     "urls_per_sec": round(
                         stats["selected"] / stats["wall_seconds"], 1
                     ),

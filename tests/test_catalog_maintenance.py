@@ -49,8 +49,8 @@ def test_expire_never_drops_current_after_rollback(spark, catalog):
 
 
 def test_engine_snapshot_retention(spark, world):
-    """snapshot_retention=1 keeps only the latest frontier/seen_bloom
-    versions after each committed round, and resume still works."""
+    """snapshot_retention=1 keeps only the latest frontier version
+    after each committed round, and resume still works."""
     from web_scraper_spark.plans.rounds import CrawlEngine
     from web_scraper_spark.sources.pages_source import (
         resolve_pages,

@@ -56,3 +56,25 @@ def test_compress_ratio_contract(spark):
         assert out[doc_id]["compress_ratio"] == len(zlib.compress(raw, 6)) / len(raw)
     # and the signal actually orders template-vs-prose
     assert out[1]["compress_ratio"] < out[2]["compress_ratio"]
+
+
+def test_id_column_keeps_its_name_and_type(spark):
+    """A string page key (the engine's ``url``) and a custom long id both
+    come back under their own name and type, not as ``doc_id long``."""
+    by_url = char_signal_features(
+        spark.createDataFrame([("https://h/a", "aabb"), ("https://h/b", None)],
+                              "url string, text string"),
+        id_col="url",
+    )
+    assert by_url.schema["url"].dataType.simpleString() == "string"
+    assert "doc_id" not in by_url.columns
+    out = {r["url"]: r for r in by_url.collect()}
+    assert out["https://h/a"]["char_entropy"] == 1.0
+    assert out["https://h/b"]["n_chars"] is None
+
+    by_page = char_signal_features(
+        spark.createDataFrame([(7, "aaaa")], "page_id long, text string"),
+        id_col="page_id",
+    )
+    assert by_page.columns[0] == "page_id"
+    assert [tuple(r) for r in by_page.select("page_id", "n_chars").collect()] == [(7, 4)]

@@ -115,3 +115,21 @@ def test_link_header_entries(spark):
         ("https://a/b", "prefetch"),
     ]
     assert out[2] == [] and out[3] is None
+
+
+def test_duplicate_url_rows_merge_by_value(spark):
+    """Duplicate-url input rows merge by value, not row order: page-level
+    scalars take the max, same-position first-wins ties the min."""
+    url = "https://w.example.com/p"
+    rows = [
+        (url, '<html lang="de"><head><title>B title</title>'
+              '<link rel="canonical" href="https://w.example.com/z"></head>'),
+        (url, '<html lang="fr"><head><title>A title</title>'
+              '<link rel="canonical" href="https://w.example.com/a"></head>'),
+    ]
+    for ordered in (rows, rows[::-1]):
+        df = spark.createDataFrame(ordered, "url string, html string")
+        out = parse_head_meta(df).collect()
+        assert len(out) == 1
+        assert (out[0]["title"], out[0]["lang"]) == ("B title", "fr")
+        assert out[0]["canonical"] == "https://w.example.com/a"

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from web_scraper_spark.oracle.crawler import OracleCrawler
-from web_scraper_spark.plans.rounds import CrawlEngine
+from web_scraper_spark.plans.rounds import FRONTIER_COLS, CrawlEngine
 from web_scraper_spark.sources.catalog import ParquetSnapshotCatalog
 from web_scraper_spark.sources.fixtures import build_world
 from web_scraper_spark.sources.pages_source import resolve_pages, write_world_parquet
@@ -117,3 +117,51 @@ def test_engine_equals_oracle_after_resume(env):
         for r in cat.read("frontier").filter("state='fetched'").select("url").collect()
     }
     assert eng_seen == oracle.seen
+
+
+class _CrashAtCommit(ParquetSnapshotCatalog):
+    """Raises at ``commit_round`` of one round, once: every data write of
+    that round has landed, its manifest has not."""
+
+    def __init__(self, spark, root, crash_round):
+        super().__init__(spark, root)
+        self.crash_round = crash_round
+
+    def commit_round(self, round_id, info):
+        if round_id == self.crash_round:
+            self.crash_round = None
+            raise RuntimeError(f"crash at commit_round({round_id})")
+        return super().commit_round(round_id, info)
+
+
+def test_mor_compaction_crash_at_commit_resumes_exactly(env):
+    """A merge-on-read compaction round that crashes at its manifest
+    commit must resume to the uninterrupted state: the deltas it folded
+    stay readable until the commit lands."""
+    spark, cfg, world, tmp, seeds, robots, pages = env
+
+    def engine(catalog):
+        return CrawlEngine(
+            spark, catalog, cfg.politeness, n_buckets=8,
+            frontier_mode="mor", mor_compact_every=2,
+        )
+
+    cat_a = ParquetSnapshotCatalog(spark, tmp + "/state_mor_a")
+    eng_a = engine(cat_a)
+    eng_a.init_frontier(seeds, cfg.period_start, cfg.period_end)
+    eng_a.run(3, pages, robots, seeds)
+
+    cat_b = _CrashAtCommit(spark, tmp + "/state_mor_b", crash_round=2)
+    eng_b = engine(cat_b)
+    eng_b.init_frontier(seeds, cfg.period_start, cfg.period_end)
+    with pytest.raises(RuntimeError, match="crash at commit_round"):
+        eng_b.run(2, pages, robots, seeds)
+    assert cat_b.last_committed_round() == 1
+    eng_b.run(3, pages, robots, seeds)
+
+    def rows(eng):
+        return sorted(
+            tuple(r) for r in eng._read_frontier(3).select(*FRONTIER_COLS).collect()
+        )
+
+    assert rows(eng_b) == rows(eng_a)

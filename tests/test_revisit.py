@@ -156,9 +156,9 @@ def test_incremental_stats_match_batch_window(spark):
 
 def test_engine_revisit_round_trip(spark, world):
     """Engine integration: with a RevisitPolicy, fetched URLs come due
-    after default_interval rounds, re-fetch successfully, bypass the
-    seen anti-join, and do not inflate the seen total. In a static
-    world the final frontier must match a no-revisit engine exactly."""
+    after default_interval rounds, re-fetch successfully, and do not
+    inflate the seen total. In a static world the final frontier must
+    match a no-revisit engine exactly."""
     import shutil
     import tempfile
 

@@ -13,8 +13,6 @@ from collections import Counter
 
 from pyspark.sql import functions as F
 
-from tests.conftest import N_ROUNDS
-
 
 def test_round_counts_match(oracle, engine_run):
     _, _, stats, _ = engine_run
@@ -136,22 +134,3 @@ def test_discoveries_enter_frontier_at_depth_1(oracle, engine_run):
     assert eng_d1 == ora_d1
     assert len(eng_d1) > 0
 
-
-def test_seen_bloom_persisted_and_incremental(engine_run):
-    """The URL-seen filter is snapshotted every round and maintained by
-    OR-merge: geometry is stable across rounds (no per-round rebuild)
-    and the item count only grows."""
-    _, catalog, _, _ = engine_run
-    assert catalog.current_version("seen_bloom") == N_ROUNDS
-    geoms, items = [], []
-    for v in range(1, N_ROUNDS + 1):
-        rows = catalog.read("seen_bloom", version=v).collect()
-        assert rows, f"empty bloom snapshot v{v}"
-        geoms.append({(r.m_bits, r.k_hashes) for r in rows})
-        items.append(sum(r.n_items for r in rows))
-    assert all(g == geoms[0] and len(g) == 1 for g in geoms)
-    assert items == sorted(items)
-    # and the filter agrees with the frontier's seen set size
-    frontier = catalog.read("frontier")
-    n_seen = frontier.filter("state = 'fetched'").count()
-    assert items[-1] == n_seen

@@ -1,0 +1,102 @@
+"""The invariant the round's URL-seen handling rests on.
+
+A round applies the URL-seen test to discoveries only (the exact
+``(url_hash, url)`` anti-join against the frontier keys), like the
+reference oracle. Fetch candidates get no seen check: they are the
+frontier's ``pending`` rows and the seen set is its ``fetched`` rows,
+which cannot overlap as long as the frontier holds exactly one row per
+key. These tests pin that invariant after every round in copy-on-write,
+merge-on-read and revisit-on mode, and pin that the candidate-side
+probe (a co-grouped bloom ``applyInPandas``) and its ``seen_bloom``
+table stay gone.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+import tempfile
+
+import pytest
+from pyspark.sql import functions as F
+
+from web_scraper_spark.operators.revisit import RevisitPolicy
+from web_scraper_spark.plans.rounds import CrawlEngine
+from web_scraper_spark.sources.catalog import ParquetSnapshotCatalog
+from web_scraper_spark.sources.pages_source import resolve_pages, write_world_parquet
+
+N_ROUNDS = 4
+KEYS = ["url_hash", "url"]
+
+MODES = {
+    "cow": {},
+    "mor": {"frontier_mode": "mor", "mor_compact_every": 2},
+    "revisit": {"revisit": RevisitPolicy(default_interval=2, max_interval=4)},
+}
+
+
+class _PlanRecordingCatalog(ParquetSnapshotCatalog):
+    """Records the physical plan of every extractions write and the
+    names of every table the round writes."""
+
+    def __init__(self, spark, root):
+        super().__init__(spark, root)
+        self.extraction_plans: list[str] = []
+        self.written: set[str] = set()
+
+    def write_snapshot(self, name, df, version, partition_by=None):
+        self.written.add(name)
+        return super().write_snapshot(name, df, version, partition_by)
+
+    def write_round_partition(self, name, df):
+        self.written.add(name)
+        if name == "extractions":
+            self.extraction_plans.append(
+                df._jdf.queryExecution().executedPlan().toString()
+            )
+        return super().write_round_partition(name, df)
+
+
+def _key_violations(frontier) -> tuple[int, int]:
+    """(keys with more than one row, pending keys also in the fetched set)."""
+    dup = frontier.groupBy(*KEYS).count().filter(F.col("count") > 1).count()
+    pending = frontier.filter(F.col("state") == "pending").select(*KEYS)
+    fetched = frontier.filter(F.col("state") == "fetched").select(*KEYS)
+    return dup, pending.join(fetched, KEYS, "inner").count()
+
+
+@pytest.fixture(scope="module", params=sorted(MODES))
+def crawl(request, spark, world):
+    """(engine, catalog, per-round key violations) for one mode."""
+    tmp = tempfile.mkdtemp(prefix="wss_seen_inv_")
+    paths = write_world_parquet(world, tmp + "/world")
+    seeds = spark.read.parquet(paths["seeds"])
+    robots = spark.read.parquet(paths["robots"])
+    pages = resolve_pages(spark.read.parquet(paths["pages"]))
+    catalog = _PlanRecordingCatalog(spark, tmp + "/state")
+    engine = CrawlEngine(
+        spark, catalog, world.config.politeness, n_buckets=8,
+        **MODES[request.param],
+    )
+    engine.init_frontier(seeds, world.config.period_start, world.config.period_end)
+    violations = {}
+    for r in range(1, N_ROUNDS + 1):
+        engine.run_round(r, pages, robots, seeds)
+        violations[r] = _key_violations(engine._read_frontier(r))
+    yield engine, catalog, violations
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_frontier_one_row_per_key_every_round(crawl):
+    _, _, violations = crawl
+    assert violations == {r: (0, 0) for r in range(1, N_ROUNDS + 1)}
+
+
+def test_no_candidate_side_seen_probe(crawl):
+    _, catalog, _ = crawl
+    assert len(catalog.extraction_plans) == N_ROUNDS
+    # round 2 is the first with a non-empty seen set
+    assert "FlatMapCoGroupsInPandas" not in catalog.extraction_plans[1]
+    assert "seen_bloom" not in catalog.written
+    assert not catalog.exists("seen_bloom")
+    assert not os.path.exists(os.path.join(catalog.root, "seen_bloom"))

@@ -1,4 +1,8 @@
-"""Dev smoke: build fixture world, run oracle + engine 3 rounds, diff."""
+"""Dev smoke: build fixture world, run oracle + engine 3 rounds, diff.
+
+Exits 1 when any parity check fails or the final frontier holds more
+than one row for a (url_hash, url) key.
+"""
 
 from __future__ import annotations
 
@@ -54,6 +58,14 @@ def main(n_rounds: int = 3) -> int:
 
     # --- parity checks ---
     frontier = catalog.read("frontier")
+    # the invariant the round's URL-seen handling rests on: one frontier
+    # row per (url_hash, url), so pending candidates never overlap the
+    # fetched (seen) set
+    dup_keys = (
+        frontier.groupBy("url_hash", "url").count().filter(F.col("count") > 1).count()
+    )
+    keys_unique = dup_keys == 0
+    print("frontier keys unique:", keys_unique, dup_keys)
     eng_seen = {r.url for r in frontier.filter("state='fetched'").select("url").collect()}
     print("seen equal:", eng_seen == oracle.seen, len(eng_seen), len(oracle.seen))
     if eng_seen != oracle.seen:
@@ -91,7 +103,8 @@ def main(n_rounds: int = 3) -> int:
                 print(" oracle:", repr(ora_text[u])[:200])
                 break
 
-    return 0 if (eng_seen == oracle.seen and ok and eng_text == ora_text) else 1
+    parity = eng_seen == oracle.seen and ok and eng_text == ora_text
+    return 0 if (keys_unique and parity) else 1
 
 
 if __name__ == "__main__":

@@ -39,26 +39,31 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 __all__ = ["char_signal_features"]
 
-_SCHEMA = (
-    "doc_id long, n_chars int, n_distinct_chars int, "
-    "char_entropy double, compress_ratio double"
-)
+_SIGNAL_FIELDS = [
+    StructField("n_chars", IntegerType()),
+    StructField("n_distinct_chars", IntegerType()),
+    StructField("char_entropy", DoubleType()),
+    StructField("compress_ratio", DoubleType()),
+]
 
 
 def char_signal_features(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(doc_id, n_chars, n_distinct_chars, char_entropy, compress_ratio)
-    per document; one Arrow pass over the projected (id, text) pair."""
+    """(id_col, n_chars, n_distinct_chars, char_entropy, compress_ratio)
+    per document; one Arrow pass over the projected (id, text) pair.
+    The id column keeps its input name and type (a long ``doc_id``, a
+    string ``url``, ...)."""
+    schema = StructType([docs.schema[id_col], *_SIGNAL_FIELDS])
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            ids, n_chars, n_distinct, ent, ratio = [], [], [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                ids.append(doc_id)
+            n_chars, n_distinct, ent, ratio = [], [], [], []
+            for text in pdf[text_col]:
                 if text is None:
                     n_chars.append(None)
                     n_distinct.append(None)
@@ -84,7 +89,7 @@ def char_signal_features(
                 ratio.append(len(zlib.compress(raw, 6)) / len(raw))
             yield pd.DataFrame(
                 {
-                    "doc_id": pd.array(ids, dtype="Int64"),
+                    id_col: pdf[id_col].reset_index(drop=True),
                     "n_chars": pd.array(n_chars, dtype="Int32"),
                     "n_distinct_chars": pd.array(n_distinct, dtype="Int32"),
                     "char_entropy": pd.array(ent, dtype="Float64"),
@@ -92,4 +97,4 @@ def char_signal_features(
                 }
             )
 
-    return docs.select(id_col, text_col).mapInPandas(batches, _SCHEMA)
+    return docs.select(id_col, text_col).mapInPandas(batches, schema)

@@ -40,8 +40,12 @@ at corpus scale it is noise next to the scan; first-wins and array
 results are map-side combinable.
 
 Output is one row per distinct ``url`` (the page key of every table
-this engine feeds); duplicate-url inputs merge first-wins by document
-position within each page row.
+this engine feeds). Within one page row, tag-level fields are
+first-wins by document position. Duplicate-url input rows merge by
+value, not by row order: the page-level scalars (``title``, ``lang``,
+``base_href``) take the greatest non-NULL value (``max``), and since
+tag positions restart in every row, a first-wins tie between rows at
+the same position goes to the smaller value.
 """
 
 from __future__ import annotations

@@ -15,6 +15,15 @@ re-expression, two phases:
 
 Correctness invariant: output == plain ``left_anti`` on ``url_hash``
 (Bloom has no false negatives) — asserted in tests/test_seen.py.
+
+The crawl round does not call this operator. Its URL-seen test is the
+exact ``(url_hash, url)`` anti-join of each round's discoveries against
+the frontier keys (plans/rounds.py), which is where the reference
+applies its seen check. Fetch candidates need none: they are the
+frontier's ``pending`` rows, the seen set is its ``fetched`` rows, and
+the frontier holds one row per key (tests/test_seen_invariant.py).
+This operator serves candidate sets that CAN overlap a separate seen
+set (the ``seen_antijoin`` battery entry).
 """
 
 from __future__ import annotations

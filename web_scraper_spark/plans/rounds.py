@@ -3,11 +3,17 @@
 One round = one driver invocation (the reference's daily-scheduler cycle,
 bot_controller.py:89-107, with wall-clock sleeps re-expressed as budgets):
 
-    frontier ─ pending/not_before ─ robots gate ─ seen anti-join
-             ─ politeness select ─ fetch (pages-table lookup join)
+    frontier ─ pending/not_before ─ robots gate ─ politeness select
+             ─ fetch (pages-table lookup join)
              ─ outcome split (success / empty / timeout)
-             ─ extract (Arrow UDF) ─ discoveries merge-back
+             ─ extract (Arrow UDF) ─ discoveries anti-join + merge-back
              ─ snapshot commits (frontier v<round>) + round manifest
+
+The URL-seen test is the exact (url_hash, url) anti-join of each
+round's discoveries against the frontier keys — the reference applies
+its seen check to discovered links only, never to fetch candidates.
+The frontier holds one row per key, so its ``pending`` candidates and
+its ``fetched`` (seen) rows can never overlap and need no dedup.
 
 Every write is idempotent for a fixed round id (snapshot version =
 round id; log partitions = dynamic overwrite on round_id), so a crashed
@@ -17,7 +23,8 @@ resumed round re-derives the identical set (SURVEY.md §4.2).
 
 Scale notes (10^10 frontier):
 - candidates/frontier stay bucket-partitioned by ``pmod(url_hash, B)``;
-  the seen anti-join and discovery merge are then co-partitioned joins.
+  the discovery anti-join (the URL-seen test) and merge-back are then
+  co-partitioned joins.
 - the politeness window shuffles by host once; its budget output bounds
   per-host rows, killing hot-host skew for the fetch/extract stages.
 - the fetch join broadcasts nothing big; AQE handles residual skew.
@@ -49,7 +56,6 @@ from ..operators.revisit import (
     schedule_from_stats,
     update_revisit_stats,
 )
-from ..operators.seen import build_seen_bloom, filter_unseen
 from ..sources.catalog import ParquetSnapshotCatalog
 from ..sources.fixtures import PolitenessSpec
 
@@ -208,8 +214,6 @@ class CrawlEngine:
     catalog: ParquetSnapshotCatalog
     spec: PolitenessSpec
     n_buckets: int = 16
-    use_bloom: bool = True
-    bloom_fpp: float = 0.01
     # html-fetch join strategy: "broadcast" ships the politeness-bounded
     # selection to the pages scan (html never shuffles; driver builds the
     # hash table — right when the budget is small); "shuffle" hash-joins
@@ -226,7 +230,7 @@ class CrawlEngine:
     # downstream (parity pinned by tests/test_live_round.py). None =
     # offline lookup mode (the only network-free mode in this sandbox).
     client_factory: Callable[[], object] | None = None
-    # keep this many frontier/seen_bloom snapshot versions (None = all).
+    # keep this many frontier snapshot versions (None = all).
     # Every round is a copy-on-write snapshot; an unbounded daily crawl
     # retains its full history forever without this. Resume only ever
     # needs the last committed round; deeper time travel is a retention
@@ -255,11 +259,11 @@ class CrawlEngine:
     # derived from a compact per-URL stats snapshot (`revisit_stats`,
     # one row per content URL: visit/interval/change counters + last
     # fingerprint) merged each round with that round's extractions —
-    # budget-proportional maintenance like the seen-bloom OR-merge,
-    # never a rescan of the extraction history. Revisit candidates
-    # bypass the URL-seen anti-join (seen dedup gates *discovery*;
-    # revisit gates *freshness*) but still pass the robots gate and
-    # compete for the same politeness budget.
+    # budget-proportional maintenance, never a rescan of the
+    # extraction history. Revisit candidates are seen URLs by
+    # definition (seen dedup gates *discovery*; revisit gates
+    # *freshness*); they still pass the robots gate and compete for the
+    # same politeness budget.
     revisit: "RevisitPolicy | None" = None
     # politeness identity: "host" (reference-parity default) or
     # "domain" — budget per registrable domain (eTLD+1), closing the
@@ -442,81 +446,6 @@ class CrawlEngine:
         )
         return survivors.unionByName(latest)
 
-    # how much larger than the current seen set a (re)built filter is
-    # sized — the headroom later rounds grow into before the next rebuild
-    BLOOM_HEADROOM: int = 4
-
-    def _bloom_geometry(self, seen_total: int) -> tuple[int, int]:
-        from ..operators.bloom import bloom_params
-
-        expected = max(1000, seen_total // self.n_buckets * self.BLOOM_HEADROOM)
-        return bloom_params(expected, self.bloom_fpp)
-
-    def _probe_bloom(
-        self, seen: DataFrame, seen_total_prev: int, round_id: int
-    ) -> tuple[DataFrame, tuple[int, int]]:
-        """(bloom table, (m_bits, k)) for this round's prefilter.
-
-        Reuses the persisted ``seen_bloom`` snapshot when it is exactly
-        one round old and still has capacity at the target FPP;
-        otherwise rebuilds from the seen set, sized with
-        ``BLOOM_HEADROOM`` so subsequent rounds go back to incremental
-        merges (scalable-bloom amortization: rebuilds are O(log growth)
-        over the crawl's life, not per-round).
-        """
-        from ..operators.bloom import bloom_capacity
-
-        if self.catalog.current_version("seen_bloom") == round_id - 1:
-            tbl = self.catalog.read("seen_bloom", version=round_id - 1)
-            row = tbl.select("m_bits", "k_hashes").first()
-            per_bucket = max(1, seen_total_prev // self.n_buckets)
-            if row is not None and bloom_capacity(
-                int(row.m_bits), self.bloom_fpp
-            ) >= per_bucket:
-                return tbl, (int(row.m_bits), int(row.k_hashes))
-        geom = self._bloom_geometry(seen_total_prev)
-        tbl = build_seen_bloom(
-            seen, n_buckets=self.n_buckets, fpp=self.bloom_fpp,
-            expected_items_per_bucket=1, params=geom,
-        )
-        return tbl, geom
-
-    def _write_bloom_snapshot(
-        self,
-        fetched: DataFrame,
-        seen: DataFrame,
-        bloom: DataFrame | None,
-        bloom_geom: tuple[int, int] | None,
-        seen_total_prev: int,
-        round_id: int,
-    ) -> None:
-        """Maintain the persisted seen-filter: OR-merge this round's
-        newly-seen hashes into the probe filter, or bootstrap a full
-        filter when none existed (round 1 / geometry reset)."""
-        from ..operators.bloom import merge_bloom_tables
-
-        new_seen = fetched.filter(
-            F.col("outcome").isin("success", "empty")
-        ).select("url_hash")
-        if bloom is not None and bloom_geom is not None:
-            delta = build_seen_bloom(
-                new_seen, n_buckets=self.n_buckets, fpp=self.bloom_fpp,
-                expected_items_per_bucket=1, params=bloom_geom,
-            )
-            merged = merge_bloom_tables(bloom, delta)
-        else:
-            # bootstrap: seen set is (pre-round seen ∪ this round's new);
-            # size by the budget bound — no count job needed
-            geom = self._bloom_geometry(
-                seen_total_prev + self.spec.global_budget
-            )
-            merged = build_seen_bloom(
-                seen.select("url_hash").unionByName(new_seen),
-                n_buckets=self.n_buckets, fpp=self.bloom_fpp,
-                expected_items_per_bucket=1, params=geom,
-            )
-        self.catalog.write_snapshot("seen_bloom", merged, version=round_id)
-
     # ------------------------------------------------------------------
     def _fetch_live(
         self, selected: DataFrame, round_id: int
@@ -576,11 +505,6 @@ class CrawlEngine:
         return self.catalog.versions("revisit_stats")
 
     # ------------------------------------------------------------------
-    def _seen(self, frontier: DataFrame) -> DataFrame:
-        # url rides along as the collision confirm key for the exact
-        # anti-join (the bloom build only reads url_hash)
-        return frontier.filter(F.col("state") == "fetched").select("url_hash", "url")
-
     def _log_rows(self, df: DataFrame, round_id: int, status, error) -> DataFrame:
         status_col = status if not isinstance(status, str) else F.lit(status)
         error_col = error if not isinstance(error, (str, type(None))) else F.lit(error)
@@ -619,8 +543,8 @@ class CrawlEngine:
         round_caches: list = []
         frontier = self._read_frontier(round_id - 1)
         if self.frontier_mode == "mor":
-            # The merged (base ⊕ deltas) view is consumed by ~5 jobs per
-            # round (candidates, seen, count, discovery anti-join, state
+            # The merged (base ⊕ deltas) view is consumed by several jobs
+            # per round (candidates, discovery anti-join, state
             # transitions). Unpersisted, EVERY one re-runs the overlay
             # window + anti-join over the full frontier — measured 10-60 s
             # of recompute per job at a 10M-row frontier, dwarfing the
@@ -664,50 +588,35 @@ class CrawlEngine:
         # R9 robots gate (broadcast join)
         allowed, blocked = split_robots(candidates, robots)
 
-        # S6/J1 URL-seen dedup: bloom prefilter + exact anti-join.
-        # The seen-set size comes from the previous round's manifest
-        # (driver-side JSON) — no count job; bloom is skipped entirely
-        # while the seen set is empty (round 1). The filter itself is
-        # PERSISTED per round and maintained incrementally (bitwise-OR
-        # of this round's delta) — at a 10^10 seen set a per-round full
-        # rebuild would rescan every seen hash, while the merge touches
-        # only n_buckets bitset rows + the budget-bounded delta.
-        seen = self._seen(frontier)
+        # S6/J1 URL-seen dedup needs no step here: candidates are the
+        # frontier's `pending` rows and the seen set is its `fetched`
+        # rows, and the frontier holds one row per (url_hash, url) (the
+        # init, the discovery anti-join below, and the MoR overlay's
+        # latest-per-key all keep it so), so the two never overlap.
+        # The URL-seen test runs where the reference runs it: on
+        # discoveries (the exact anti-join against the frontier keys).
+        # The seen total is carried forward from the previous round's
+        # manifest (a JSON read, no Spark job).
         seen_total_prev = 0
         if round_id > 1 and self.catalog.round_committed(round_id - 1):
             seen_total_prev = self.catalog.read_round_manifest(round_id - 1).get(
                 "seen_total", 0
             )
-        bloom = None
-        bloom_geom = None
-        if self.use_bloom and seen_total_prev > 0:
-            bloom, bloom_geom = self._probe_bloom(seen, seen_total_prev, round_id)
-        # string-confirmed anti-join: at 10^10 URLs xxhash64 collisions
-        # exist, and a collision here would silently skip a real URL.
-        # Revisit candidates (state `fetched`) are BY DEFINITION seen —
-        # they skip the anti-join instead of being killed by it.
-        if revisit_on:
-            unseen = filter_unseen(
-                allowed.filter(F.col("state") == "pending"),
-                seen,
-                bloom,
-                self.n_buckets,
-                confirm_cols=["url_hash", "url"],
-            ).unionByName(allowed.filter(F.col("state") == "fetched"))
-        else:
-            unseen = filter_unseen(
-                allowed, seen, bloom, self.n_buckets,
-                confirm_cols=["url_hash", "url"],
-            )
 
-        # R1-R5 politeness + R8 priority + global budget. The frontier
-        # row count (one footer-only statistics job) serves two
-        # plan-time decisions: skipping the global-limit machinery when
-        # the budget provably cannot bind, and the fetch-join strategy.
-        frontier_rows = frontier.count()
+        # R1-R5 politeness + R8 priority + global budget. A frontier row
+        # count only matters past the broadcast threshold, where it can
+        # cap the selection estimate (fetch-join strategy) and prove the
+        # distributed global limit unnecessary; below it the budget alone
+        # decides and the count job is skipped (select_polite is exact
+        # either way).
+        frontier_rows = (
+            frontier.count()
+            if self.spec.global_budget > self.BROADCAST_FETCH_THRESHOLD
+            else None
+        )
         _section("plan_prep")
         selected = select_polite(
-            unseen,
+            allowed,
             robots,
             self.spec,
             cache_handles=round_caches,
@@ -963,8 +872,10 @@ class CrawlEngine:
                 F.lit(0).alias("attempts"),
                 F.lit(0).alias("not_before"),
             )
-            # (url_hash, url) anti-join: hash alone would drop a new URL
-            # that collides with an existing frontier entry
+            # S6/J1 URL-seen test, exact: (url_hash, url) anti-join
+            # against every frontier key (pending, fetched or failed) —
+            # hash alone would drop a new URL that collides with an
+            # existing frontier entry
             .join(frontier.select("url_hash", "url"), ["url_hash", "url"], "left_anti")
         )
 
@@ -1018,15 +929,6 @@ class CrawlEngine:
             and round_id % self.mor_compact_every != 0
         )
 
-        def _write_bloom() -> float:
-            if not self.use_bloom:
-                return 0.0
-            tb = time.monotonic()
-            self._write_bloom_snapshot(
-                fetched, seen, bloom, bloom_geom, seen_total_prev, round_id
-            )
-            return time.monotonic() - tb
-
         # discovery count rides the state write as an OBSERVATION —
         # previously a separate count job that re-scanned the entire
         # just-written snapshot (frontier-proportional: a full-table
@@ -1037,21 +939,6 @@ class CrawlEngine:
             F.when(F.col("discovery_round") == round_id, 1).otherwise(0)
         ).alias("n")
 
-        bloom_merge_s = 0.0
-        if mor_delta_round:
-            # ORDER MATTERS: commit the seen-bloom BEFORE the delta
-            # write. The delta lands under the same `frontier_delta`
-            # path the merged view READS, and Spark's recacheByPath
-            # invalidates every cached plan touching that path — the
-            # persisted frontier and the cached fetch classification
-            # included. Writing the bloom first lets it consume the
-            # still-valid caches (measured: 1.2 s vs 30-57 s of overlay
-            # recompute when it ran after the delta write). A crash
-            # between the two leaves seen_bloom at round_id with no
-            # committed round — the re-run's probe sees the version
-            # mismatch and falls back to a full rebuild, so correctness
-            # is unaffected.
-            bloom_merge_s = _write_bloom()
         tw = time.monotonic()
         if mor_delta_round:
             # W4 as an Iceberg-style row delta: ONLY the rows this round
@@ -1101,16 +988,7 @@ class CrawlEngine:
                 new_frontier.repartition(self.n_buckets, "host_bucket"),
                 version=round_id,
             )
-            if self.frontier_mode == "mor":
-                # compaction point: deltas ≤ round_id are folded into
-                # the snapshot just committed
-                self.catalog.drop_log_partitions("frontier_delta", round_id)
         frontier_write_s = time.monotonic() - tw
-
-        # persist the incremental URL-seen filter for the next round
-        # (delta rounds already committed it above, pre-invalidation)
-        if not mor_delta_round:
-            bloom_merge_s = _write_bloom()
         _section("state_commit")
 
         # metrics rollup (A6): per-host counts + throughput. All counts
@@ -1145,7 +1023,7 @@ class CrawlEngine:
         }
 
         # revisits re-fetch already-seen URLs: they must not inflate
-        # the seen total (which sizes the bloom and gates its rebuild)
+        # the seen total
         n_revisit_seen = 0
         if revisit_on:
             counts["revisited"] = fetched.filter(
@@ -1163,12 +1041,10 @@ class CrawlEngine:
             + counts["empty"]
             - n_revisit_seen,
             "wall_seconds": wall_s,
-            # state-maintenance split: per-round cost of the frontier
-            # CoW snapshot and the incremental seen-filter OR-merge —
-            # the two writes that must stay budget-proportional as the
-            # frontier/seen set grows (steady-state bench evidence)
+            # per-round cost of the frontier write (CoW snapshot, MoR
+            # delta or compaction) — the state write that must stay
+            # budget-proportional as the frontier grows
             "frontier_write_seconds": round(frontier_write_s, 3),
-            "bloom_merge_seconds": round(bloom_merge_s, 3),
             "urls_per_sec": counts["selected"] / wall_s if wall_s > 0 else 0.0,
             # mor delta rounds do not advance the snapshot version —
             # the round's state lives in its frontier_delta partition
@@ -1177,15 +1053,20 @@ class CrawlEngine:
         _section("metrics_rollup")
         info["sections"] = sections
         self.catalog.commit_round(round_id, info)
+        # maintenance only AFTER the round commit, so a crash anywhere in
+        # the round leaves every input a resume reads in place
+        if self.frontier_mode == "mor" and not mor_delta_round:
+            # compaction point: deltas ≤ round_id are folded into the
+            # snapshot this round committed. Dropped earlier, a crash
+            # before the commit would make the re-run read the older
+            # base without them. A crash after the commit leaves folded
+            # partitions that later rounds' reads skip (they start above
+            # the base version) and the next compaction removes.
+            self.catalog.drop_log_partitions("frontier_delta", round_id)
         if self.snapshot_retention is not None:
-            # maintenance AFTER the round commit: expiring only versions
-            # older than the retention window can never touch the
-            # snapshot a resume would read
+            # expiring only versions older than the retention window can
+            # never touch the snapshot a resume would read
             self.catalog.expire_snapshots("frontier", self.snapshot_retention)
-            if self.use_bloom:
-                self.catalog.expire_snapshots(
-                    "seen_bloom", self.snapshot_retention
-                )
             if self.revisit is not None:
                 self.catalog.expire_snapshots(
                     "revisit_stats", self.snapshot_retention
