@@ -203,9 +203,10 @@ _CHECK_FIRST = [
     "registrable_domain",
     "weekly_periods",
     "parse_price",
-    # ---- window boundary (~50): every entry below holds a green driver
-    # row from r3/r4 with operator code unchanged since (COVERAGE.md
-    # per-entry ledger) ----
+    # ---- ordered positions 86 on (the 86 entries above are all
+    # registered, so this is past the driver's 0-49 window): every entry
+    # below holds a green driver row from r3/r4 with operator code
+    # unchanged since (COVERAGE.md per-entry ledger) ----
     "price_regex_parse",
     "format_currency",
     "collect_periods",

@@ -58,15 +58,31 @@ def oracle(world):
     return o
 
 
-@pytest.fixture(scope="session", params=["broadcast", "semi", "shuffle"])
+# join regimes the parity gates run under: (ATTRS_BROADCAST_THRESHOLD,
+# spark.sql.autoBroadcastJoinThreshold, or None to keep the session's)
+JOIN_REGIMES = {
+    # session defaults: at these budgets every join of the round
+    # broadcasts, the crawl attrs onto the extraction output included
+    "broadcast": (CrawlEngine.ATTRS_BROADCAST_THRESHOLD, None),
+    # Spark's auto-broadcast off: the fetch's two hinted joins (the
+    # key-semi into the pages scan, the attrs join) still broadcast,
+    # every unhinted join of the round takes a shuffle
+    "semi": (CrawlEngine.ATTRS_BROADCAST_THRESHOLD, "-1"),
+    # as "semi" with the attrs hint off (a selection past
+    # ATTRS_BROADCAST_THRESHOLD): the attrs join shuffles too
+    "shuffle": (0, "-1"),
+}
+
+
+@pytest.fixture(scope="session", params=list(JOIN_REGIMES))
 def engine_run(request, spark, world):
     """(engine, catalog, stats, tables dict) after N_ROUNDS rounds.
 
-    Parametrized over all three html-fetch join strategies — parity must
-    hold on the broadcast path (small budgets), the key-semi path
-    (budget-scale selections, html never exchanged), and the
-    salted-shuffle path (frontier-scale budgets) alike.
+    Parametrized over the join regimes in ``JOIN_REGIMES`` — parity must
+    hold whether the round's joins broadcast, shuffle around the fetch's
+    hinted joins, or shuffle the attrs join as well.
     """
+    attrs_threshold, auto_broadcast = JOIN_REGIMES[request.param]
     tmp = tempfile.mkdtemp(prefix="wss_test_")
     paths = write_world_parquet(world, tmp + "/world")
     catalog = ParquetSnapshotCatalog(spark, tmp + "/state")
@@ -75,13 +91,20 @@ def engine_run(request, spark, world):
         catalog,
         world.config.politeness,
         n_buckets=8,
-        fetch_join=request.param,
+        ATTRS_BROADCAST_THRESHOLD=attrs_threshold,
     )
     seeds = spark.read.parquet(paths["seeds"])
     robots = spark.read.parquet(paths["robots"])
     pages = resolve_pages(spark.read.parquet(paths["pages"]))
-    engine.init_frontier(seeds, world.config.period_start, world.config.period_end)
-    stats = engine.run(N_ROUNDS, pages, robots, seeds)
+    conf_key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(conf_key)
+    if auto_broadcast is not None:
+        spark.conf.set(conf_key, auto_broadcast)
+    try:
+        engine.init_frontier(seeds, world.config.period_start, world.config.period_end)
+        stats = engine.run(N_ROUNDS, pages, robots, seeds)
+    finally:
+        spark.conf.set(conf_key, saved)
     tables = {"seeds": seeds, "robots": robots, "pages": pages, "paths": paths, "tmp": tmp}
     yield engine, catalog, stats, tables
     shutil.rmtree(tmp, ignore_errors=True)

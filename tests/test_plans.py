@@ -97,46 +97,6 @@ def test_compare_query_is_single_sort_merge_or_hash_full_outer(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_fetch_join_auto_selection(spark):
-    """auto picks broadcast for small selections (min of budget and
-    frontier size) and the salted shuffle for frontier-scale budgets."""
-    from web_scraper_spark.plans.rounds import CrawlEngine
-    from web_scraper_spark.sources.fixtures import PolitenessSpec
-
-    small_frontier = spark.range(5_000).toDF("id")
-    big_frontier = spark.range(300_000).toDF("id")
-
-    big_budget = PolitenessSpec(
-        round_seconds=86400, global_batch_urls=2_000_000, global_pause_s=86400
-    )
-    small_budget = PolitenessSpec(
-        round_seconds=600, global_batch_urls=500, global_pause_s=600
-    )
-
-    eng = CrawlEngine(spark, None, big_budget, fetch_join="auto")
-    # 2M budget but only 5k frontier rows -> selection is small -> broadcast
-    assert eng._resolve_fetch_join(small_frontier) == "broadcast"
-    # 2M budget, 300k frontier -> key-set still broadcasts -> semi
-    # (html stays on the scan layout; no exchange)
-    assert eng._resolve_fetch_join(big_frontier) == "semi"
-    # beyond the semi key-set cap -> shuffle
-    huge = PolitenessSpec(
-        round_seconds=86400,
-        global_batch_urls=50_000_000,
-        global_pause_s=86400,
-    )
-    eng_huge = CrawlEngine(spark, None, huge, fetch_join="auto")
-    huge_frontier = spark.range(30_000_000).toDF("id")
-    assert eng_huge._resolve_fetch_join(huge_frontier) == "shuffle"
-
-    eng2 = CrawlEngine(spark, None, small_budget, fetch_join="auto")
-    # budget alone already below threshold: no count job needed
-    assert eng2._resolve_fetch_join(big_frontier) == "broadcast"
-
-    forced = CrawlEngine(spark, None, big_budget, fetch_join="shuffle")
-    assert forced._resolve_fetch_join(small_frontier) == "shuffle"
-
-
 def test_bloom_prefilter_node_in_seen_plan(spark):
     """Plan-shape guard (VERDICT r3 #8): the 10^10-scale seen path =
     bloom probe (definitely-new bypass) + exact LeftAnti confirm. If the

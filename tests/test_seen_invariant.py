@@ -8,12 +8,15 @@ which cannot overlap as long as the frontier holds exactly one row per
 key. These tests pin that invariant after every round in copy-on-write,
 merge-on-read and revisit-on mode, and pin that the candidate-side
 probe (a co-grouped bloom ``applyInPandas``) and its ``seen_bloom``
-table stay gone.
+table stay gone. The same crawls pin the round's one html-fetch path:
+a broadcast key left-semi into the pages scan, with extraction fused
+to that scan so html crosses no exchange.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import tempfile
 
@@ -65,6 +68,21 @@ def _key_violations(frontier) -> tuple[int, int]:
     return dup, pending.join(fetched, KEYS, "inner").count()
 
 
+def _first_child_chain(plan: str, top: str) -> list[str]:
+    """Node lines of a plan tree string from the first node starting
+    with ``top`` down its first (streamed) children to a leaf."""
+    nodes = []
+    for line in plan.splitlines():
+        m = re.match(r"^((?:[ :]  )*)[+:]- (.*)$", line)
+        nodes.append((len(m.group(1)) // 3 + 1, m.group(2)) if m else (0, line))
+    i = next(i for i, (_, text) in enumerate(nodes) if text.startswith(top))
+    chain = [nodes[i][1]]
+    while i + 1 < len(nodes) and nodes[i + 1][0] == nodes[i][0] + 1:
+        i += 1
+        chain.append(nodes[i][1])
+    return chain
+
+
 @pytest.fixture(scope="module", params=sorted(MODES))
 def crawl(request, spark, world):
     """(engine, catalog, per-round key violations) for one mode."""
@@ -72,7 +90,12 @@ def crawl(request, spark, world):
     paths = write_world_parquet(world, tmp + "/world")
     seeds = spark.read.parquet(paths["seeds"])
     robots = spark.read.parquet(paths["robots"])
-    pages = resolve_pages(spark.read.parquet(paths["pages"]))
+    # resolve once at ingest, as resolve_pages documents: the round then
+    # reads the pages table as a plain file scan
+    resolve_pages(spark.read.parquet(paths["pages"])).write.parquet(
+        tmp + "/pages_resolved"
+    )
+    pages = spark.read.parquet(tmp + "/pages_resolved")
     catalog = _PlanRecordingCatalog(spark, tmp + "/state")
     engine = CrawlEngine(
         spark, catalog, world.config.politeness, n_buckets=8,
@@ -100,3 +123,17 @@ def test_no_candidate_side_seen_probe(crawl):
     assert "seen_bloom" not in catalog.written
     assert not catalog.exists("seen_bloom")
     assert not os.path.exists(os.path.join(catalog.root, "seen_bloom"))
+
+
+def test_fetch_semi_joins_keys_into_pages_scan(crawl):
+    """Round 2's html fetch: the success keys reach the pages scan as a
+    broadcast left-semi, and no exchange sits between that scan and the
+    Arrow extraction, so the wide html column is never exchanged."""
+    _, catalog, _ = crawl
+    chain = _first_child_chain(catalog.extraction_plans[1], "MapInPandas")
+    assert chain[-1].startswith("FileScan parquet") and "html" in chain[-1], chain
+    assert any(
+        n.startswith("BroadcastHashJoin") and "LeftSemi, BuildRight" in n
+        for n in chain
+    ), chain
+    assert not [n for n in chain if "Exchange" in n], chain

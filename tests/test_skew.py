@@ -2,16 +2,17 @@
 
 The scale claim (BENCH/BASELINE.md, north rule 'salt-and-repartition by
 host-hash to kill hot-host skew'): a host with millions of frontier rows
-must not translate into a hot reducer downstream. Two mechanisms, both
-pinned here:
+must not translate into a hot reducer downstream. Two mechanisms;
+mechanism 1 is pinned here:
 
 1. the per-host window compiles to WindowGroupLimit with a PARTIAL
    map-side pass — each map task forwards at most ``host_budget`` rows
    per host into the shuffle, so the hot host's reducer receives
    O(n_map_tasks x budget) rows, never its full frontier volume;
-2. the fetch/extraction layout re-salts by (host_bucket, url_hash % P)
-   (plans/rounds.py shuffle path), spreading one host's selected rows
-   over all workers.
+2. extraction runs on the pages-scan file splits (the fetch ships only
+   the selected keys to the scan as a broadcast left-semi), so its
+   layout does not depend on host at all; tests/test_seen_invariant.py
+   pins that plan shape.
 """
 
 from __future__ import annotations
@@ -193,26 +194,10 @@ def test_domain_grain_one_budget_monotonic_in_priority(spark):
 
 
 def test_round_level_hot_host_layout_balanced(spark):
-    """VERDICT r4 #8 — the adversarial round-shape check: a frontier
-    where ONE host owns 99% of rows must still produce a balanced
-    fetch/extraction layout. Two gates, matching the two mechanisms:
-
-    1. politeness cap: the hot host contributes exactly its budget to
-       the selected batch, independent of its 99% share;
-    2. re-hash: after the engine's exact fetch-layout expression —
-       ``repartition(par, url_hash)`` (plans/rounds.py shuffle path) —
-       the max partition holds no more than 2x the mean (in practice
-       within a few %: per-row 64-bit hash, multinomial balance).
-       Extraction cost is per-row (Arrow batch over rows), so
-       partition-row balance IS the deterministic stand-in for
-       max-task-time <= ~2x median; asserting wall-clock per task
-       would be boot-lottery noise. The earlier
-       ``(host_bucket, url_hash % par)`` salt FAILED this bar at 2.2x
-       (8 salt values into 8 partitions collide); this test is the
-       regression pin for the fix.
+    """VERDICT r4 #8 — the adversarial round-shape check: in a frontier
+    where ONE host owns 99% of rows, the hot host contributes exactly its
+    politeness budget to the selected batch, independent of its share.
     """
-    from web_scraper_spark.functions.urls import url_hash
-
     # 99% hot: 99k hot rows vs 25 cold hosts x 40 rows = 1k cold
     frontier = _skewed_frontier(spark, hot_rows=99_000, cold_hosts=25, cold_rows=40)
     robots = spark.createDataFrame(
@@ -229,19 +214,3 @@ def test_round_level_hot_host_layout_balanced(spark):
     }
     assert per_host["hot.example.com"] == 1500  # capped, not 99k
     assert per_host["cold0.example.com"] == 40
-
-    # the engine's fetch/extraction layout on the selected batch
-    par = spark.sparkContext.defaultParallelism
-    laid_out = sel.withColumn("url_hash", url_hash(F.col("url"))).repartition(
-        par, F.col("url_hash")
-    )
-    sizes = laid_out.rdd.glom().map(len).collect()
-    filled = [s for s in sizes if s > 0]
-    mean = sum(filled) / len(filled)
-    assert len(filled) >= par // 2  # the hot host spread across workers
-    assert max(filled) <= 2 * mean, (max(filled), mean, sizes)
-    # WITHOUT the salt (host-only layout) the hot host is one partition:
-    # pin the counterfactual so the salt stays load-bearing
-    unsalted = sel.repartition(par, F.col("host"))
-    worst = max(unsalted.rdd.glom().map(len).collect())
-    assert worst >= per_host["hot.example.com"]  # all 1500 on one task

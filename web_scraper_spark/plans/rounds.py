@@ -26,15 +26,16 @@ Scale notes (10^10 frontier):
   the discovery anti-join (the URL-seen test) and merge-back are then
   co-partitioned joins.
 - the politeness window shuffles by host once; its budget output bounds
-  per-host rows, killing hot-host skew for the fetch/extract stages.
-- the fetch join broadcasts nothing big; AQE handles residual skew.
-- the wide ``html`` column is dropped inside the extract stage, so only
-  selected rows' pages are ever decoded and nothing wide shuffles on.
+  per-host rows, killing hot-host skew before the fetch.
+- the fetch ships only the success rows' 64-bit keys to the pages scan
+  (a broadcast left-semi); extraction runs fused with that scan on its
+  file splits, so its layout does not depend on host and the wide
+  ``html`` column crosses no exchange. Only selected rows' pages are
+  ever decoded, and html is dropped inside the extract stage.
 """
 
 from __future__ import annotations
 
-import os
 import time
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -44,7 +45,11 @@ from pyspark.sql import functions as F
 
 from ..functions.urls import canonicalize_url, host_bucket, url_hash
 from ..operators.extract import extract_pages
-from ..operators.politeness import select_polite, split_robots
+from ..operators.politeness import (
+    DISTRIBUTED_LIMIT_THRESHOLD,
+    select_polite,
+    split_robots,
+)
 from ..operators.priority import (
     DISCOVERED_PERIOD_IDX,
     DISCOVERED_SEED_RANK,
@@ -214,15 +219,6 @@ class CrawlEngine:
     catalog: ParquetSnapshotCatalog
     spec: PolitenessSpec
     n_buckets: int = 16
-    # html-fetch join strategy: "broadcast" ships the politeness-bounded
-    # selection to the pages scan (html never shuffles; driver builds the
-    # hash table — right when the budget is small); "shuffle" hash-joins
-    # both sides with a salted repartition (right when the selection is
-    # large relative to driver memory). "auto" (default) picks by the
-    # round's global budget — the politeness stage caps the selection at
-    # exactly spec.global_budget rows, so the budget is a sound size
-    # estimate known at plan time. Env override for benches.
-    fetch_join: str = os.environ.get("WSS_FETCH_JOIN", "auto")
     # live-fetch mode: a client factory (one construction per Python
     # worker, P12) switches the round's fetch stage from the pages-table
     # lookup join to the Arrow-batched HTTP stage — same politeness-
@@ -271,49 +267,11 @@ class CrawlEngine:
     # (functions/domains.py; operators/politeness.select_polite grain)
     politeness_grain: str = "host"
 
-    # above this many selected URLs, broadcasting the selection means a
-    # multi-hundred-MB driver hash table (measured: 600k rows needed a
-    # 20 GiB heap) — switch to the salted shuffle join
-    BROADCAST_FETCH_THRESHOLD: int = 100_000
-    # up to here the 8-byte selected-key set ships to the pages scan as
-    # a broadcast left-semi (~160 MB at the cap) and html never leaves
-    # the scan layout; beyond it the shuffle join takes over. On a real
-    # cluster a bloom-filter key set extends the semi window further.
-    SEMI_FETCH_THRESHOLD: int = 20_000_000
     # selection sizes up to here broadcast the narrow crawl attrs onto
-    # the extraction output so extracted text never shuffles either
+    # the extraction output so extracted text never shuffles either;
+    # beyond it the attrs join shuffles rather than build a driver-side
+    # hash table of every selected row
     ATTRS_BROADCAST_THRESHOLD: int = 1_000_000
-
-    def _resolve_fetch_join(self, frontier: DataFrame, frontier_rows: int | None = None) -> str:
-        """Pick the html-fetch join strategy from a sound plan-time
-        bound on the selection size: the politeness stage emits at most
-        ``min(global_budget, frontier rows)`` rows. The frontier count
-        is a footer-only parquet scan (count(*) prunes every column),
-        so the estimate costs no data I/O; pass ``frontier_rows`` to
-        reuse a count the round already took.
-
-        Ladder: ``broadcast`` (whole selection broadcasts into the
-        scan) → ``semi`` (only the 64-bit keys broadcast; extraction
-        runs on the scan partitioning and the wide html column crosses
-        ZERO exchanges) → ``shuffle`` (both sides exchange on the URL
-        identity; the uniform hash key kills hot-host skew)."""
-        if self.fetch_join != "auto":
-            return self.fetch_join
-        est = self._selection_upper_bound(frontier, frontier_rows)
-        if est <= self.BROADCAST_FETCH_THRESHOLD:
-            return "broadcast"
-        return "semi" if est <= self.SEMI_FETCH_THRESHOLD else "shuffle"
-
-    def _selection_upper_bound(
-        self, frontier: DataFrame, frontier_rows: int | None = None
-    ) -> int:
-        est = self.spec.global_budget
-        if est > self.BROADCAST_FETCH_THRESHOLD:
-            est = min(
-                est,
-                frontier_rows if frontier_rows is not None else frontier.count(),
-            )
-        return est
 
     # ------------------------------------------------------------------
     # frontier bootstrap: T1 (weekly periods) + T3 (seeds x periods)
@@ -452,12 +410,14 @@ class CrawlEngine:
     ) -> tuple[DataFrame, DataFrame]:
         """Live-mode fetch: Arrow HTTP stage (one client per Python
         worker, P12) + idempotent raw materialization — the WARC-analog
-        store. The raw round partition is written BEFORE any consumer
-        runs, making the at-least-once task-level fetch exactly-once at
-        round level: re-runs of a committed round never refetch, and
-        every downstream consumer (outcome split, extraction, fetch
-        log) reads the WRITTEN bytes with column pruning — wide bodies
-        are never cached and never refetched.
+        store. Returns ``(fetched, extracted)``: the outcome-classified
+        selection and the Arrow extraction of its HTTP-200 bodies. The
+        raw round partition is written BEFORE any consumer runs, making
+        the at-least-once task-level fetch exactly-once at round level:
+        re-runs of a committed round never refetch, and every downstream
+        consumer (outcome split, extraction, fetch log) reads the
+        WRITTEN bytes with column pruning — wide bodies are never cached
+        and never refetched.
 
         F3 status map, mirroring the lookup path's page_status split:
         HTTP 200 → success, any other HTTP status → empty (fetched, no
@@ -496,7 +456,62 @@ class CrawlEngine:
         with_html = back.filter(F.col("status") == 200).drop(
             "status", "worker_pid", "client_seq", "round_id"
         )
-        return fetched, with_html
+        return fetched, extract_pages(with_html)
+
+    def _fetch_lookup(
+        self,
+        selected: DataFrame,
+        pages_resolved: DataFrame,
+        broadcast_attrs: bool,
+    ) -> tuple[DataFrame, DataFrame]:
+        """Offline fetch: a lookup join against the pages table. Returns
+        ``(fetched, extracted)`` like ``_fetch_live``.
+
+        Two phases, for width. Phase 1 classifies outcomes with a NARROW
+        projection (url identity + page_status, no html), joined on the
+        64-bit key and string-confirmed (hash-collision guard). Phase 2
+        reads html for the success rows only, and never moves it: their
+        8-byte keys ship to the pages scan as a broadcast left-semi,
+        extraction runs fused with that scan on its file splits, and the
+        crawl attrs attach to the html-FREE extraction output on the
+        exact ``(url_hash, url)`` key — a 64-bit collision extracts one
+        extra page, which that join drops. With ``broadcast_attrs`` (a
+        budget-bounded selection) the extracted text crosses no
+        exchange either. Event-log evidence (BENCH/scaling_round.md): a
+        shuffle join moved the wide html through two ~530 MB exchanges
+        per round; this path moves none.
+        """
+        page_keys = pages_resolved.select(
+            F.col("url_hash").alias("p_hash"),
+            F.col("url_canon").alias("p_url"),
+            "page_status",
+        )
+        fetched = (
+            selected.join(
+                page_keys,
+                (selected.url_hash == page_keys.p_hash)
+                & (selected.url == page_keys.p_url),
+                "left",
+            )
+            .withColumn(
+                "outcome",
+                F.when(F.col("p_url").isNull(), "timeout")
+                .when(F.col("page_status") == "error", "empty")
+                .otherwise("success"),
+            )
+            .drop("p_hash", "p_url", "page_status")
+            .cache()
+        )
+        successes = fetched.filter(F.col("outcome") == "success").drop("outcome")
+        success_keys = successes.select(F.col("url_hash").alias("k_hash"))
+        pages_sel = pages_resolved.join(
+            F.broadcast(success_keys),
+            F.col("url_hash") == F.col("k_hash"),
+            "left_semi",
+        ).select("url_hash", F.col("url_canon").alias("url"), "html")
+        attrs = F.broadcast(successes) if broadcast_attrs else successes
+        extracted = extract_pages(pages_sel).join(attrs, ["url_hash", "url"])
+        return fetched, extracted
 
     # ------------------------------------------------------------------
     def _revisit_versions(self) -> list[int]:
@@ -604,14 +619,14 @@ class CrawlEngine:
             )
 
         # R1-R5 politeness + R8 priority + global budget. A frontier row
-        # count only matters past the broadcast threshold, where it can
-        # cap the selection estimate (fetch-join strategy) and prove the
-        # distributed global limit unnecessary; below it the budget alone
+        # count only matters past the distributed-limit threshold, where
+        # it can prove the global limit unnecessary and bound the
+        # selection for the fetch's attrs join; below it the budget alone
         # decides and the count job is skipped (select_polite is exact
         # either way).
         frontier_rows = (
             frontier.count()
-            if self.spec.global_budget > self.BROADCAST_FETCH_THRESHOLD
+            if self.spec.global_budget > DISTRIBUTED_LIMIT_THRESHOLD
             else None
         )
         _section("plan_prep")
@@ -624,113 +639,25 @@ class CrawlEngine:
             grain=self.politeness_grain,
         )
 
-        semi_extracted = None
+        # P1 fetch + extraction — the only Python stage, Arrow-batched
         if self.client_factory is not None:
             # live mode: Arrow-batched HTTP stage, no join at all
-            fetched, with_html = self._fetch_live(selected, round_id)
+            fetched, extracted = self._fetch_live(selected, round_id)
         else:
-            # offline mode: fetch = lookup join against the pages table
-            # on the 64-bit key, string-confirmed (hash-collision
-            # guard). Two-phase for width: phase 1 joins a NARROW
-            # projection (url identity + page_status, no html) to
-            # classify outcomes; phase 2 re-joins html for the success
-            # rows only — the wide binary column is never read for
-            # timeouts/errors and never shuffles with the outcome split.
-            page_keys = pages_resolved.select(
-                F.col("url_hash").alias("p_hash"),
-                F.col("url_canon").alias("p_url"),
-                "page_status",
+            # the politeness stage emits at most this many rows
+            selection_bound = (
+                self.spec.global_budget
+                if frontier_rows is None
+                else min(self.spec.global_budget, frontier_rows)
             )
-            fetched = (
-                selected.join(
-                    page_keys,
-                    (selected.url_hash == page_keys.p_hash)
-                    & (selected.url == page_keys.p_url),
-                    "left",
-                )
-                .withColumn(
-                    "outcome",
-                    F.when(F.col("p_url").isNull(), "timeout")
-                    .when(F.col("page_status") == "error", "empty")
-                    .otherwise("success"),
-                )
-                .drop("p_hash", "p_url", "page_status")
-                .cache()
+            fetched, extracted = self._fetch_lookup(
+                selected,
+                pages_resolved,
+                broadcast_attrs=selection_bound <= self.ATTRS_BROADCAST_THRESHOLD,
             )
-            successes = fetched.filter(F.col("outcome") == "success").drop(
-                "outcome"
-            )
-
-            # Pull html ONLY for success rows.
-            page_html = pages_resolved.select(
-                F.col("url_hash").alias("p2h"),
-                F.col("url_canon").alias("p2u"),
-                "html",
-            )
-            join_cond = (successes.url_hash == page_html.p2h) & (
-                successes.url == page_html.p2u
-            )
-            fetch_strategy = self._resolve_fetch_join(frontier, frontier_rows)
-            if fetch_strategy == "broadcast":
-                # html never shuffles: the selection ships to the pages scan
-                with_html = page_html.join(
-                    F.broadcast(successes), join_cond
-                ).drop("p2h", "p2u")
-            elif fetch_strategy == "semi":
-                # html never leaves the SCAN layout even at budget-scale
-                # selections: only the 8-byte key set ships to the pages
-                # scan (left-semi on the 64-bit identity — a collision
-                # false-positive just extracts one extra page, dropped
-                # by the exact attrs join below), extraction runs fused
-                # with the scan stage on its file-split granularity, and
-                # the crawl attrs attach to the html-FREE extraction
-                # output. With the attrs side broadcast (budget-bounded,
-                # narrow) the extracted text crosses zero exchanges too.
-                # Event-log evidence (BENCH/scaling_round.md): the
-                # shuffle path moved the ~wide html through TWO ~530 MB
-                # exchanges per round; this path moves none.
-                sel_keys = successes.select(F.col("url_hash").alias("k_hash"))
-                pages_sel = page_html.join(
-                    F.broadcast(sel_keys),
-                    page_html.p2h == F.col("k_hash"),
-                    "left_semi",
-                ).select(
-                    F.col("p2h").alias("url_hash"),
-                    F.col("p2u").alias("url"),
-                    "html",
-                )
-                ext_raw = extract_pages(pages_sel)
-                est = self._selection_upper_bound(frontier, frontier_rows)
-                attrs = (
-                    F.broadcast(successes)
-                    if est <= self.ATTRS_BROADCAST_THRESHOLD
-                    else successes
-                )
-                # exact (url_hash, url) inner join: restores string-
-                # confirmed identity, same contract as the other paths
-                semi_extracted = ext_raw.join(attrs, ["url_hash", "url"])
-            else:
-                # shuffle hash join + per-row re-hash: html shuffles
-                # once, but no driver-side hash-table build; extraction
-                # runs hash-partitioned on the 64-bit url_hash itself,
-                # so rows land uniformly no matter how skewed the host
-                # mix is. (The earlier (host_bucket, url_hash % par)
-                # salt gave a hot host only `par` salt values hashed
-                # into `par` partitions — balls-in-bins collisions left
-                # the max partition 2-3x the mean; pinned adversarially
-                # in tests/test_skew.py round-level layout test.)
-                par = self.spark.sparkContext.defaultParallelism
-                with_html = (
-                    successes.join(page_html, join_cond)
-                    .drop("p2h", "p2u")
-                    .repartition(par, F.col("url_hash"))
-                )
         timeouts = fetched.filter(F.col("outcome") == "timeout").drop("outcome")
         empties = fetched.filter(F.col("outcome") == "empty").drop("outcome")
 
-        # P1 extraction — the only Python stage, Arrow-batched. Per-host
-        # volume is already bounded upstream by the politeness budget,
-        # which is what kills hot-host skew before this stage.
         # The extraction product is materialized ONCE to the catalog and
         # every downstream consumer (fetch log, discoveries) reads the
         # WRITTEN partition with column pruning. Never .cache() this
@@ -741,12 +668,6 @@ class CrawlEngine:
         # is not an option at all. ``partition_id`` (the extraction
         # task's lineage) is materialized into the table so the re-read
         # preserves W3 per-partition lineage.
-        extracted = (
-            semi_extracted
-            if semi_extracted is not None
-            else extract_pages(with_html)
-        )
-
         extractions = extracted.select(
             F.lit(round_id).alias("round_id"),
             "url",
