@@ -79,7 +79,6 @@ HEADLINE = [
     "nation_volume",
     "events_hour_window",
     # round-4 operators
-    "image_header_decode",
     "content_extract",
     "redirect_resolve",
     "canonical_collapse",
@@ -101,36 +100,12 @@ HEADLINE = [
     "focus_scores",
     "c4_filters",
     "gopher_filters",
-    # round-4 additions: frontier scoring, real media decode, state
+    # round-4 additions: frontier scoring, state
     "trustrank_scores",
     "opic_scores",
     "budget_allocation",
-    "png_pixel_decode",
-    "gif_pixel_decode",
-    "jpeg_pixel_decode",
-    "mp4_frame_index",
-    "webm_frame_index",
-    "mp3_frame_index",
-    "media_pipeline",
     "cuckoo_evict",
-    "audio_wav_decode",
-    "ogg_page_index",
-    # round-5 additions: elementary-stream NAL indexes
-    "h264_nal_index",
-    "hevc_nal_index",
-    "av1_obu_index",
-    "vp9_frame_index",
-    "adts_frame_index",
-    "mpegts_packet_index",
-    # round-5 additions (second batch): FLAC/EXIF/WebVTT
-    "flac_frame_index",
-    "exif_index",
-    "webvtt_cue_index",
-    # round-5 additions (third batch): WebP/SRT/ID3
-    "webp_chunk_index",
-    "srt_cue_index",
-    "id3_tag_index",
-    # round-5 additions (fourth batch): head-metadata family
+    # round-5 additions: head-metadata family
     "feed_parse",
     "head_metadata",
     "jsonld_extract",
@@ -138,15 +113,7 @@ HEADLINE = [
     "hreflang_clusters",
     "mirror_hosts",
     "link_header_parse",
-    # round-5 additions (fifth batch): PDF document indexes
-    "pdf_object_index",
-    "pdf_page_index",
-    "pdf_text_extract",
-    "zip_entry_index",
-    "docx_text_extract",
-    "epub_text_extract",
-    "xlsx_text_extract",
-    "tar_entry_index",
+    # round-5 additions (second batch): sitemap hints, text signals
     "sitemap_hints",
     "doc_entropy",
     "retry_after_parse",

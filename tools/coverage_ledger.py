@@ -25,8 +25,7 @@ WINDOW = 50  # driver checks ~the first 50 queries() entries per round
 # rotation queue even though they hold a historical green row
 STALE_GREEN = {
     "cosine_topk", "dedup_embedding_neardup", "ann_lsh_topk",
-    "ann_ivf_topk", "multimodal_meta", "multimodal_decode",
-    "multimodal_frames", "robots_filter", "politeness_budget",
+    "ann_ivf_topk", "robots_filter", "politeness_budget",
 }
 
 

@@ -38,12 +38,6 @@ HEADLINE = [
     ("warc_roundtrip", "parse stage is one Arrow mapInPandas over file blobs; record walk is Content-Length-driven"),
     ("text_normalize", "NFC/accent via vectorized pandas_udf; lowercase + ws collapse stay in the same codegen projection"),
     ("adaptive_backoff", "one hash agg over the fetch log → host-sized projection; no shuffle past the stats table"),
-    ("h264_nal_index", "NAL walk is one Arrow mapInPandas over the payload column; bytes enter Python once and never shuffle"),
-    ("hevc_nal_index", "same start-code machinery as H.264; per-NAL rows exit the Arrow stage already narrow (extents + flags, no bytes)"),
-    ("av1_obu_index", "OBU walk is one Arrow mapInPandas; leb128 sizes drive index arithmetic only — no allocation from untrusted lengths, bytes never shuffle"),
-    ("vp9_frame_index", "superframe split is in-row (trailing-index decode); per-frame extents exit the Arrow stage narrow"),
-    ("adts_frame_index", "56-bit header walk in one Arrow pass; frame_len field tiles the stream so the walk is O(frames), not O(bytes) rescans"),
-    ("mpegts_packet_index", "fixed 188-byte grid: the demux layer is pure byte-extent arithmetic in one Arrow pass; PID filter + extent concat rebuilds any elementary stream"),
     ("feed_parse", "parse stage (post fixture-render aggregate) is a narrow regexp block pull + explode + two try_to_timestamp grammars — zero Python, data-proportional"),
     ("sitemap_hints", "changefreq/priority validation riding the native-regex sitemap explode — token whitelist + range gate, no Python"),
     ("doc_entropy", "one Arrow mapInPandas pass for histogram+deflate signals — no per-char explode, no shuffle"),
@@ -53,13 +47,6 @@ HEADLINE = [
     ("hreflang_clusters", "hreflang explode → min-label components (iter 1 fused into init, 2-shuffle rounds on a dst-partitioned edge cache) → size via count window"),
     ("mirror_hosts", "distinct (fp,host) agg → boilerplate cap drops >8-host fingerprints (bounds the pair join to C(8,2)/fp — the skew guard) → pair count + two size joins"),
     ("link_header_parse", "link-value pull + per-value attr regex + rel-token explode, all in one narrow codegen stage"),
-    ("pdf_object_index", "classic-xref walk is one Arrow mapInPandas over the payload column; untrusted counts bounded before any loop, bytes never shuffle"),
-    ("pdf_page_index", "Catalog→Pages→Kids walk in the same single Arrow pass; per-page rows exit narrow (object numbers + stream extents, no bytes)"),
-    ("pdf_text_extract", "page-tree walk + stream slice + text-operator tokenizer fused in ONE Arrow stage; only decoded text rows exit, bytes never shuffle"),
-    ("docx_text_extract", "central-directory lookup + capped member deflate + WordprocessingML parse in ONE Arrow stage; paragraphs exit narrow"),
-    ("epub_text_extract", "container->OPF->spine->XHTML chain entirely inside the same single Arrow stage; reading-order chapters exit narrow"),
-    ("xlsx_text_extract", "sharedStrings + sheet inflation and t=\"s\" indirection resolved in-row in one Arrow stage; cells exit narrow"),
-    ("tar_entry_index", "512-grid header walk with checksum verification in one Arrow pass; extents exit narrow, payload never shuffles"),
 ]
 
 

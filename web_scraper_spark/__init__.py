@@ -2,8 +2,9 @@
 
 A from-scratch re-expression (NOT a port) of the crawl semantics of the
 reference repo deha388/web-scraper (see /root/repo/SURVEY.md): URL
-canonicalization + xxhash64 identity, Bloom-prefiltered URL-seen dedup,
-per-host politeness budgets, robots rules, deterministic priority ordering,
+canonicalization + xxhash64 identity, URL-seen dedup as the exact
+discovery anti-join against the frontier keys, per-host politeness
+budgets, robots rules, deterministic priority ordering,
 retry/backoff state machine, resumable crawl rounds over snapshot-versioned
 tables — all as declarative DataFrame plans so Catalyst/Tungsten/AQE pick
 the physical strategy.

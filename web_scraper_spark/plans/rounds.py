@@ -947,13 +947,17 @@ class CrawlEngine:
         # the seen total
         n_revisit_seen = 0
         if revisit_on:
-            counts["revisited"] = fetched.filter(
-                F.col("state") == "fetched"
-            ).count()
-            n_revisit_seen = fetched.filter(
-                (F.col("state") == "fetched")
-                & F.col("outcome").isin("success", "empty")
-            ).count()
+            revisit = F.col("state") == "fetched"
+            row = fetched.agg(
+                F.sum(revisit.cast("long")).alias("revisited"),
+                F.sum(
+                    (revisit & F.col("outcome").isin("success", "empty")).cast(
+                        "long"
+                    )
+                ).alias("seen"),
+            ).first()
+            counts["revisited"] = int(row["revisited"] or 0)
+            n_revisit_seen = int(row["seen"] or 0)
 
         info = {
             **counts,

@@ -40,7 +40,6 @@ from ..operators.dedup import (
     shingles,
     simhash,
 )
-from ..operators.multimodal import binary_meta, decode_features
 from ..operators.politeness import split_robots
 from ..operators.seen import filter_unseen
 from ..operators.similarity import cosine_topk, lsh_bucket_topk

@@ -1,5 +1,5 @@
 """Battery part 2: training-data pipeline operators (dedup, similarity,
-text analysis, multimodal, streaming-equivalent, TPC-H-class joins).
+text analysis, streaming-equivalent, TPC-H-class joins).
 
 Registered into the same ``REGISTRY`` as battery.py. Portability rules
 as there: md5-based hashing, rounded doubles, cast aggregates,
@@ -50,7 +50,6 @@ from ..operators.corpusmix import (
 )
 from ..functions.textstats import tokens
 from ..operators.linededup import strip_boilerplate
-from ..operators.multimodal import binary_meta, decode_features, frame_sample
 from ..operators.sitemap import parse_sitemap_entries
 from ..operators.spandedup import strip_duplicate_spans
 from ..operators.similarity import (
@@ -1286,146 +1285,8 @@ def q_ann_lsh_topk(spark, sf_dir):
 
 
 # -------------------------------------------------------------------------
-# multimodal binary plumbing
+# boilerplate-free main-content extraction + IVF ANN search
 # -------------------------------------------------------------------------
-
-
-@q(
-    "multimodal_meta",
-    """
-    SELECT doc_id,
-           octet_length(encode(text))::BIGINT AS n_bytes,
-           md5(text) AS content_md5
-    FROM documents
-    """,
-)
-def q_multimodal_meta(spark, sf_dir):
-    """Binary-column metadata (length/md5) over utf-8 payload bytes."""
-    docs = T(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "utf-8").alias("data")
-    )
-    return binary_meta(docs, "data").select("doc_id", "n_bytes", "content_md5")
-
-
-@q(
-    "multimodal_decode",
-    # The stub decoder is deterministic arithmetic over the payload
-    # bytes, so the oracle reproduces it exactly in SQL: bytes come out
-    # of hex() pairs (nibble lookup — no DuckDB get_byte needed),
-    # feature[k] = avg of bytes at positions ≡ k (mod 8) / 255. Integer
-    # byte sums are exact in float64 in both engines, so the division
-    # and %.6f formatting agree bit-for-bit.
-    """
-    WITH docs AS (
-      SELECT doc_id,
-             hex(encode(text)) AS h,
-             octet_length(encode(text))::BIGINT AS n,
-             CASE WHEN substr(text, 1, 4) = 'GIF8' THEN 'gif'
-                  WHEN substr(text, 1, 4) = 'RIFF' THEN 'riff'
-                  WHEN substr(text, 1, 4) = '%PDF' THEN 'pdf'
-                  WHEN substr(text, 1, 4) = '<htm' THEN 'html'
-                  ELSE 'unknown' END AS fmt
-      FROM documents
-    ),
-    positions AS (
-      SELECT doc_id, h, unnest(generate_series(0, n - 1)) AS p
-      FROM docs WHERE n > 0
-    ),
-    vals AS (
-      SELECT doc_id, (p % 8)::INT AS k,
-             (strpos('0123456789ABCDEF', substr(h, 2 * p + 1, 1)) - 1) * 16
-             + (strpos('0123456789ABCDEF', substr(h, 2 * p + 2, 1)) - 1) AS v
-      FROM positions
-    ),
-    means AS (
-      SELECT doc_id, k, avg(v) / 255.0 AS m FROM vals GROUP BY doc_id, k
-    ),
-    grid AS (
-      SELECT doc_id, unnest(generate_series(0, 7))::INT AS k FROM docs
-    ),
-    feat AS (
-      SELECT g.doc_id,
-             string_agg(printf('%.6f', coalesce(m.m, 0.0)), ',' ORDER BY g.k)
-               AS feature_csv
-      FROM grid g LEFT JOIN means m ON m.doc_id = g.doc_id AND m.k = g.k
-      GROUP BY g.doc_id
-    )
-    SELECT d.doc_id, d.n AS n_bytes, d.fmt AS format, f.feature_csv,
-           (d.n // 1024 + 1)::INT AS n_frames
-    FROM docs d JOIN feat f ON f.doc_id = d.doc_id
-    """,
-)
-def q_multimodal_decode(spark, sf_dir):
-    """Arrow-batched decode/feature stage over binary payloads
-    (deterministic stub features; real decoder drops into the same
-    mapInPandas contract). The feature vector is projected to a scalar
-    CSV string so every output column is hashable/sortable by the
-    harness (raw ``array<double>`` crashes pandas canonicalization)."""
-    docs = T(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "utf-8").alias("data")
-    )
-    feats = decode_features(docs, "data", "doc_id", feature_dim=8)
-    return feats.select(
-        "doc_id",
-        "n_bytes",
-        "format",
-        F.concat_ws(
-            ",", F.transform("feature", lambda x: F.format_number(x, 6))
-        ).alias("feature_csv"),
-        "n_frames",
-    )
-
-
-@q(
-    "multimodal_frames",
-    # same hex-pair byte extraction as the decode oracle; sampled global
-    # frame index = (i * n_frames) // n_sel, evenly spread, collision-free
-    # because n_sel <= n_frames
-    """
-    WITH docs AS (
-      SELECT doc_id, hex(encode(text)) AS h,
-             octet_length(encode(text))::BIGINT AS n
-      FROM documents
-    ),
-    sel AS (
-      SELECT doc_id, n, ((n + 1023) // 1024) AS nf,
-             unnest(generate_series(0, least(4, (n + 1023) // 1024) - 1)) AS i
-      FROM docs WHERE n > 0
-    ),
-    frames AS (
-      SELECT doc_id, n,
-             ((i * nf) // least(4, nf))::INT AS frame_idx
-      FROM sel
-    ),
-    positions AS (
-      SELECT doc_id, h, unnest(generate_series(0, n - 1)) AS p
-      FROM docs WHERE n > 0
-    ),
-    vals AS (
-      SELECT doc_id, (p // 1024) AS fid,
-             (strpos('0123456789ABCDEF', substr(h, 2 * p + 1, 1)) - 1) * 16
-             + (strpos('0123456789ABCDEF', substr(h, 2 * p + 2, 1)) - 1) AS v
-      FROM positions
-    ),
-    means AS (
-      SELECT doc_id, fid, avg(v) AS m FROM vals GROUP BY doc_id, fid
-    )
-    SELECT f.doc_id, f.frame_idx,
-           (f.frame_idx * 1024)::BIGINT AS offset,
-           least(1024, f.n - f.frame_idx * 1024)::INT AS frame_len,
-           round(m.m / 255.0, 6) AS byte_mean
-    FROM frames f JOIN means m ON m.doc_id = f.doc_id AND m.fid = f.frame_idx
-    """,
-)
-def q_multimodal_frames(spark, sf_dir):
-    """Frame-sampling stage (video/audio stand-in): fan out each binary
-    payload to evenly-sampled fixed-size byte windows via the Arrow
-    ``frame_sample`` stage — the explode shape a real ffmpeg keyframe
-    sampler produces."""
-    docs = T(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "utf-8").alias("data")
-    )
-    return frame_sample(docs, "data", "doc_id", frame_size=1024, max_frames=4)
 
 
 @q(
@@ -1496,71 +1357,6 @@ def q_content_extract(spark, sf_dir):
         "doc_id", "main_text", "n_blocks", "n_content_blocks",
         "content_chars", "total_chars",
     )
-
-
-def _be_bytes(col: F.Column, n_bytes: int) -> F.Column:
-    """Big-endian fixed-width byte packing of a non-negative int Column
-    (hex → zero-pad → unhex), pure expressions — lets the battery
-    synthesize REAL binary image headers in-row."""
-    return F.unhex(F.lpad(F.hex(col), 2 * n_bytes, "0"))
-
-
-def _le2_bytes(col: F.Column) -> F.Column:
-    return F.concat(_be_bytes(col % 256, 1), _be_bytes((col / 256).cast("long"), 1))
-
-
-@q(
-    "image_header_decode",
-    # the engine synthesizes REAL PNG/GIF/JPEG header bytes in-row and
-    # decodes them back with parse_image_header (actual container-layout
-    # parsing, not the stub); the oracle states the expected inversion
-    # directly from the generator parameters
-    """
-    SELECT doc_id,
-           CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'gif'
-                ELSE 'jpeg' END AS format,
-           ((doc_id % 640) + 1)::INT AS width,
-           ((doc_id % 480) + 1)::INT AS height,
-           8::INT AS bit_depth,
-           CASE doc_id % 3 WHEN 0 THEN 4 ELSE 3 END AS channels
-    FROM documents
-    """,
-)
-def q_image_header_decode(spark, sf_dir):
-    """REAL image-header decode (no media libs, no stand-in): PNG IHDR,
-    GIF logical screen descriptor, and JPEG SOF0 headers are built as
-    genuine binary layouts from each doc_id and parsed back by the
-    Arrow ``decode_image_headers`` stage — the metadata tier (dims /
-    depth / channels) a 100 TB multimodal pipeline filters and routes
-    on before any pixel decode."""
-    from ..operators.multimodal import decode_image_headers
-
-    docs = T(spark, sf_dir, "documents").select("doc_id")
-    k = F.col("doc_id") % 3
-    w = (F.col("doc_id") % 640 + 1).cast("long")
-    h = (F.col("doc_id") % 480 + 1).cast("long")
-    png = F.concat(
-        F.lit(b"\x89PNG\r\n\x1a\n\x00\x00\x00\x0dIHDR"),
-        _be_bytes(w, 4),
-        _be_bytes(h, 4),
-        F.lit(b"\x08\x06\x00\x00\x00"),  # depth 8, RGBA, trailing IHDR
-    )
-    gif = F.concat(
-        F.lit(b"GIF89a"),
-        _le2_bytes(w),
-        _le2_bytes(h),
-        F.lit(b"\x70\x00\x00"),  # packed: color resolution 7 → depth 8
-    )
-    jpeg = F.concat(
-        F.lit(b"\xff\xd8\xff\xc0\x00\x11\x08"),  # SOI, SOF0, len, prec 8
-        _be_bytes(h, 2),
-        _be_bytes(w, 2),
-        F.lit(b"\x03"),  # 3 components (YCbCr)
-    )
-    data = F.when(k == 0, png).when(k == 1, gif).otherwise(jpeg)
-    return decode_image_headers(
-        docs.select("doc_id", data.alias("data"))
-    ).select("doc_id", "format", "width", "height", "bit_depth", "channels")
 
 
 _IVF_COS = (
@@ -2126,811 +1922,8 @@ def q_span_dedup(spark, sf_dir):
 
 
 # -------------------------------------------------------------------------
-# REAL audio decode (WAV/RIFF PCM) — multimodal tier, no media libraries
+# deletable URL-state filter + WET round trip
 # -------------------------------------------------------------------------
-
-# geometry + sample formula shared verbatim with operators/audio.py:
-# frames = 400 + id%600, rate = 8000*(1+id%2), channels = 1+id%2,
-# s(i) = ((id*2654435761 + i*40503) % 65536) - 32768  (interleaved)
-_WAV_GEO_SQL = """
-    geo AS (
-      SELECT doc_id,
-             400 + doc_id % 600 AS frames,
-             8000 * (1 + doc_id % 2) AS rate,
-             1 + (doc_id % 2) AS ch
-      FROM documents WHERE doc_id < 64
-    ),
-    samples AS (
-      SELECT g.doc_id, g.frames, g.rate, g.ch, t.i,
-             ((g.doc_id * 2654435761 + t.i * 40503) % 65536) - 32768 AS s
-      FROM geo g, unnest(generate_series(0, g.frames * g.ch - 1)) AS t(i)
-    )
-"""
-
-
-@q(
-    "audio_wav_decode",
-    # The oracle never sees WAV bytes: it replays the PCM sample formula
-    # in pure integer SQL and computes the same features with the same
-    # expression shapes (integer sums -> one double divide -> sqrt), so
-    # the engine's synth -> RIFF container -> full-sample decode ->
-    # features loop must reproduce it bit-for-bit.
-    f"""
-    WITH {_WAV_GEO_SQL},
-    agg AS (
-      SELECT doc_id, frames, rate, ch,
-             sum(s * s) AS ss, max(abs(s)) AS pk, count(*) AS n
-      FROM samples GROUP BY doc_id, frames, rate, ch
-    ),
-    chan0 AS (
-      SELECT doc_id,
-             sum(CASE WHEN (s >= 0) <> (prev >= 0) THEN 1 ELSE 0 END) AS cross_n
-      FROM (
-        SELECT doc_id, s,
-               lag(s) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-        FROM samples WHERE i % ch = 0
-      ) WHERE prev IS NOT NULL
-      GROUP BY doc_id
-    )
-    SELECT a.doc_id,
-           a.rate::INT AS sample_rate,
-           a.ch::INT AS channels,
-           16 AS bits,
-           a.frames::BIGINT AS n_frames,
-           a.frames / a.rate::DOUBLE AS duration_s,
-           sqrt(a.ss / (a.n * 32768.0 * 32768.0)) AS rms,
-           a.pk / 32768.0 AS peak,
-           coalesce(c.cross_n, 0) / (a.frames - 1)::DOUBLE AS zcr
-    FROM agg a LEFT JOIN chan0 c USING (doc_id)
-    """,
-)
-def q_audio_wav_decode(spark, sf_dir):
-    """Full-sample WAV decode: synthesize a real PCM16 RIFF container
-    per doc (stereo for odd ids — exercises channel interleave), decode
-    every sample back in one Arrow stage, emit duration/RMS/peak/
-    channel-0 zero-crossing rate (operators/audio.py)."""
-    from ..operators.audio import decode_audio_features, with_synth_wav
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return decode_audio_features(with_synth_wav(docs))
-
-
-@q(
-    "audio_frame_windows",
-    f"""
-    WITH {_WAV_GEO_SQL},
-    win AS (
-      SELECT doc_id, rate, ch, (i // (160 * ch))::INT AS window_idx,
-             s, i
-      FROM samples
-    ),
-    agg AS (
-      SELECT doc_id, rate, window_idx,
-             sum(s * s) AS ss, max(abs(s)) AS pk, count(*) AS n
-      FROM win GROUP BY doc_id, rate, window_idx
-    )
-    SELECT doc_id, window_idx,
-           window_idx * 160 / rate::DOUBLE AS start_s,
-           sqrt(ss / (n * 32768.0 * 32768.0)) AS rms,
-           pk / 32768.0 AS peak
-    FROM agg
-    """,
-)
-def q_audio_frame_windows(spark, sf_dir):
-    """Fixed 160-frame analysis windows over decoded PCM — the audio
-    frame-sampler: per-window RMS/peak, start offset in seconds."""
-    from ..operators.audio import audio_frame_windows, with_synth_wav
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return audio_frame_windows(with_synth_wav(docs), window_frames=160)
-
-
-# -------------------------------------------------------------------------
-# REAL pixel decode (BMP BI_RGB) + GIF frame-structure walk — codec-free
-# -------------------------------------------------------------------------
-
-
-@q(
-    "bmp_pixel_decode",
-    # The oracle replays the synth's linear-offset byte formula
-    # (byte[j] = (id*2654435761 + j*40503) % 256 over the padded pixel
-    # array; pixel (r,c,k) at j = r*stride + c*ch + k) and aggregates
-    # integer channel sums -> one double divide, never parsing a BMP.
-    """
-    WITH geo AS (
-      SELECT doc_id,
-             16 + doc_id % 17 AS w,
-             8 + doc_id % 13 AS h,
-             (24 + 8 * (doc_id % 2)) // 8 AS ch
-      FROM documents WHERE doc_id < 64
-    ),
-    geo2 AS (SELECT *, ((w * ch + 3) // 4) * 4 AS stride FROM geo),
-    px AS (
-      SELECT g.doc_id, g.w, g.h, g.ch, k.k,
-             sum((g.doc_id * 2654435761
-                  + (r.r * g.stride + c.c * g.ch + k.k) * 40503) % 256) AS s
-      FROM geo2 g,
-           unnest(generate_series(0, g.h - 1)) AS r(r),
-           unnest(generate_series(0, g.w - 1)) AS c(c),
-           unnest(generate_series(0, g.ch - 1)) AS k(k)
-      GROUP BY g.doc_id, g.w, g.h, g.ch, k.k
-    )
-    SELECT doc_id,
-           w::INT AS width, h::INT AS height, (ch * 8)::INT AS bpp,
-           max(CASE WHEN k = 0 THEN s END) / (w * h)::DOUBLE AS mean_b,
-           max(CASE WHEN k = 1 THEN s END) / (w * h)::DOUBLE AS mean_g,
-           max(CASE WHEN k = 2 THEN s END) / (w * h)::DOUBLE AS mean_r,
-           max(CASE WHEN k = 3 THEN s END) / (w * h)::DOUBLE AS mean_a
-    FROM px GROUP BY doc_id, w, h, ch
-    """,
-)
-def q_bmp_pixel_decode(spark, sf_dir):
-    """REAL pixel decode, no media library: synthesize a bottom-up
-    BI_RGB BMP per doc (32-bit BGRA for odd ids), recover the full
-    pixel array (row padding, vertical flip) and emit integer-exact
-    per-channel means (operators/rawmedia.py)."""
-    from ..operators.rawmedia import decode_bmp_features, with_synth_bmp
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return decode_bmp_features(with_synth_bmp(docs))
-
-
-@q(
-    "png_pixel_decode",
-    # The oracle replays the synth's linear-offset byte formula over
-    # the UNFILTERED pixel array (byte[j] = (id*2654435761 + j*40503)
-    # % 256, j = (r*w + c)*ch + k) and aggregates integer channel sums
-    # -> one double divide. The engine only matches by genuinely
-    # inflating IDAT and inverting the per-row Sub/Up/Average/Paeth
-    # filters (row r carries filter (id + r) % 5), so the SQL twin is
-    # blind to the container while pinning the full decode.
-    """
-    WITH geo AS (
-      SELECT doc_id,
-             9 + doc_id % 14 AS w,
-             5 + doc_id % 11 AS h,
-             1 + doc_id % 4 AS ch
-      FROM documents WHERE doc_id < 64
-    ),
-    px AS (
-      SELECT g.doc_id, g.w, g.h, g.ch, k.k,
-             sum((g.doc_id * 2654435761
-                  + ((r.r * g.w + c.c) * g.ch + k.k) * 40503) % 256) AS s
-      FROM geo g,
-           unnest(generate_series(0, g.h - 1)) AS r(r),
-           unnest(generate_series(0, g.w - 1)) AS c(c),
-           unnest(generate_series(0, g.ch - 1)) AS k(k)
-      GROUP BY g.doc_id, g.w, g.h, g.ch, k.k
-    )
-    SELECT doc_id,
-           w::INT AS width, h::INT AS height, ch::INT AS channels,
-           max(CASE WHEN k = 0 THEN s END) / (w * h)::DOUBLE AS mean_c0,
-           max(CASE WHEN k = 1 THEN s END) / (w * h)::DOUBLE AS mean_c1,
-           max(CASE WHEN k = 2 THEN s END) / (w * h)::DOUBLE AS mean_c2,
-           max(CASE WHEN k = 3 THEN s END) / (w * h)::DOUBLE AS mean_c3
-    FROM px GROUP BY doc_id, w, h, ch
-    """,
-)
-def q_png_pixel_decode(spark, sf_dir):
-    """REAL full PNG decode, no media library (operators/rawmedia.py):
-    synthesize an 8-bit PNG per doc (grey/grey+A/RGB/RGBA by id, every
-    row a real spec filter), inflate + unfilter to the exact pixel
-    array, and emit integer-exact per-channel means."""
-    from ..operators.rawmedia import decode_png_features, with_synth_png
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return decode_png_features(with_synth_png(docs))
-
-
-
-@q(
-    "gif_pixel_decode",
-    # The oracle replays index[j] = (id*2654435761 + j*40503) % 256
-    # over display-order j = r*w + c and the palette formulas
-    # r=(i*7+3)%256 g=(i*11+5)%256 b=(i*13+9)%256, aggregating integer
-    # channel sums. The engine only matches by genuinely LZW-decoding
-    # the sub-block stream (variable-width codes, table growth/reset),
-    # mapping through the global color table, and DEINTERLACING the
-    # odd-id frames -- the SQL twin never sees a container byte.
-    """
-    WITH geo AS (
-      SELECT doc_id, 9 + doc_id % 14 AS w, 5 + doc_id % 11 AS h
-      FROM documents WHERE doc_id < 64
-    ),
-    px AS (
-      SELECT g.doc_id, g.w, g.h,
-             sum(((g.doc_id * 2654435761 + j.j * 40503) % 256) * 7 + 3
-                 - ((((g.doc_id * 2654435761 + j.j * 40503) % 256) * 7 + 3)
-                    // 256) * 256) AS sr,
-             sum(((g.doc_id * 2654435761 + j.j * 40503) % 256) * 11 + 5
-                 - ((((g.doc_id * 2654435761 + j.j * 40503) % 256) * 11 + 5)
-                    // 256) * 256) AS sg,
-             sum(((g.doc_id * 2654435761 + j.j * 40503) % 256) * 13 + 9
-                 - ((((g.doc_id * 2654435761 + j.j * 40503) % 256) * 13 + 9)
-                    // 256) * 256) AS sb
-      FROM geo g, unnest(generate_series(0, g.w * g.h - 1)) AS j(j)
-      GROUP BY g.doc_id, g.w, g.h
-    )
-    SELECT doc_id, w::INT AS width, h::INT AS height,
-           sr / (w * h)::DOUBLE AS mean_r,
-           sg / (w * h)::DOUBLE AS mean_g,
-           sb / (w * h)::DOUBLE AS mean_b
-    FROM px
-    """,
-)
-def q_gif_pixel_decode(spark, sf_dir):
-    """REAL full GIF decode, no media library (operators/rawmedia.py):
-    LZW is a published algorithm, so the engine decompresses the real
-    variable-width code stream, maps indices through the 256-entry
-    color table, deinterlaces odd-id frames, and emits integer-exact
-    per-channel RGB means."""
-    from ..operators.rawmedia import decode_gif_features, with_synth_gif_pixels
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return decode_gif_features(with_synth_gif_pixels(docs))
-
-
-
-@q(
-    "jpeg_pixel_decode",
-    # Flat 8x8 blocks have a DC-only DCT, so with quantization step 1
-    # the LOSSY pipeline is exact and the oracle replays block values
-    # (v = (id*2654435761 + b*40503) % 256) in pure integer SQL: each
-    # block contributes 64 identical pixels, so the image mean is the
-    # block-value mean. The engine only matches by genuinely Huffman-
-    # decoding the entropy stream (odd ids add DRI/RSTn restarts),
-    # dequantizing, and running the 8x8 IDCT.
-    """
-    WITH geo AS (
-      SELECT doc_id, 1 + doc_id % 4 AS bw, 1 + doc_id % 3 AS bh
-      FROM documents WHERE doc_id < 64
-    ),
-    blk AS (
-      SELECT g.doc_id, g.bw, g.bh,
-             sum((g.doc_id * 2654435761 + b.b * 40503) % 256) AS s
-      FROM geo g, unnest(generate_series(0, g.bw * g.bh - 1)) AS b(b)
-      GROUP BY g.doc_id, g.bw, g.bh
-    )
-    SELECT doc_id,
-           (bw * 8)::INT AS width, (bh * 8)::INT AS height, 1::INT AS channels,
-           s / (bw * bh)::DOUBLE AS mean_c0,
-           NULL::DOUBLE AS mean_c1, NULL::DOUBLE AS mean_c2
-    FROM blk
-    """,
-)
-def q_jpeg_pixel_decode(spark, sf_dir):
-    """REAL baseline JPEG decode, no media library (operators/jpeg.py):
-    marker walk, canonical Annex-K Huffman decode with byte unstuffing
-    and restart markers, dequantize, exact matrix IDCT — emitted as
-    integer-exact per-image means over flat-block synth payloads."""
-    from ..operators.jpeg import decode_jpeg_features, with_synth_jpeg
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return decode_jpeg_features(with_synth_jpeg(docs))
-
-
-
-@q(
-    "mp4_track_index",
-    # Every field of the synth container is a pure formula of doc_id
-    # (width/height from tkhd 16.16 fixed point, timescale/duration
-    # from mdhd, handler/codec fourccs, stsz count, stss cadence) —
-    # the oracle replays the formulas; the engine must walk real ISO
-    # BMFF boxes to match.
-    """
-    SELECT doc_id,
-           1::INT AS track_id, 'vide' AS handler, 'fk01' AS codec,
-           (16 * (1 + doc_id % 5))::INT AS width,
-           (16 * (1 + doc_id % 3))::INT AS height,
-           (1000 + (doc_id % 7) * 100)::INT AS timescale,
-           ((5 + doc_id % 9) * ((1000 + (doc_id % 7) * 100) // 10))::BIGINT
-             AS duration,
-           (5 + doc_id % 9)::INT AS n_samples,
-           ((5 + doc_id % 9 + 3) // 4)::INT AS n_keyframes
-    FROM documents WHERE doc_id < 64
-    """,
-)
-def q_mp4_track_index(spark, sf_dir):
-    """REAL video-container decode (operators/video.py): ISO BMFF box
-    walk — per-track handler, codec fourcc, dimensions, timescale,
-    duration, sample and sync-sample counts — no codec library, the
-    metadata tier a video corpus pipeline routes and filters on."""
-    from ..operators.video import mp4_track_index, with_synth_mp4
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return mp4_track_index(with_synth_mp4(docs))
-
-
-@q(
-    "mp4_frame_index",
-    # The oracle replays the sample-table arithmetic (chunk c = i//3 at
-    # offset 1000 + c*5000 + (id%11)*8; a sample's offset adds the
-    # sizes of earlier samples in its chunk — a window cumsum) and the
-    # every-4th stss cadence. The engine must resolve real
-    # stsc x stsz x stco tables to match byte-exactly.
-    """
-    WITH geo AS (
-      SELECT doc_id, 5 + doc_id % 9 AS n FROM documents WHERE doc_id < 64
-    ),
-    s AS (
-      SELECT g.doc_id, i.i AS frame_idx,
-             100 + (g.doc_id * 3 + i.i * 7) % 50 AS frame_len,
-             i.i // 3 AS c
-      FROM geo g, unnest(generate_series(0, g.n - 1)) AS i(i)
-    )
-    SELECT doc_id, frame_idx::INT AS frame_idx,
-           (1000 + c * 5000 + (doc_id % 11) * 8
-            + coalesce(sum(frame_len) OVER (
-                PARTITION BY doc_id, c ORDER BY frame_idx
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           )::BIGINT AS "offset",
-           frame_len::INT AS frame_len,
-           (CASE WHEN frame_idx % 4 = 0 THEN 1 ELSE 0 END)::INT AS is_keyframe
-    FROM s
-    """,
-)
-def q_mp4_frame_index(spark, sf_dir):
-    """The distributed frame-sampling byte index (operators/video.py):
-    one row per sample of the video track with its EXACT byte extent
-    resolved from the stsc x stsz x stco sample tables plus the stss
-    keyframe mark — what a 100 TB video pipeline fans out before any
-    codec reads a byte."""
-    from ..operators.video import mp4_frame_index, with_synth_mp4
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return mp4_frame_index(with_synth_mp4(docs))
-
-
-
-@q(
-    "mp3_frame_index",
-    # The oracle replays the published frame-length formula
-    # (144000*bitrate/rate + padding) over the synth's per-frame
-    # header fields (VBR: bitrate_idx = 1+(id*3+i)%14, rate i%3,
-    # padding (id+i)%2) and the ID3v2 prefix of 10 + id%7 bytes;
-    # offsets are a window cumsum. The engine must genuinely walk
-    # every 4-byte MPEG header to match.
-    """
-    WITH geo AS (
-      SELECT doc_id, 3 + doc_id % 6 AS n, 10 + doc_id % 7 AS prefix
-      FROM documents WHERE doc_id < 64
-    ),
-    f AS (
-      SELECT g.doc_id, g.prefix, i.i AS frame_idx,
-             list_extract([32,40,48,56,64,80,96,112,128,160,192,224,256,320],
-                          (1 + (g.doc_id * 3 + i.i) % 14)::INT) AS br,
-             list_extract([44100,48000,32000], (i.i % 3 + 1)::INT) AS sr,
-             (g.doc_id + i.i) % 2 AS pad
-      FROM geo g, unnest(generate_series(0, g.n - 1)) AS i(i)
-    ),
-    l AS (
-      SELECT doc_id, prefix, frame_idx, br, sr,
-             (144000 * br) // sr + pad AS frame_len
-      FROM f
-    )
-    SELECT doc_id, frame_idx::INT AS frame_idx,
-           (prefix + coalesce(sum(frame_len) OVER (
-              PARTITION BY doc_id ORDER BY frame_idx
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           )::BIGINT AS "offset",
-           frame_len::INT AS frame_len,
-           br::INT AS bitrate_kbps, sr::INT AS sample_rate
-    FROM l
-    """,
-)
-def q_mp3_frame_index(spark, sf_dir):
-    """REAL MPEG-audio frame walk (operators/audio.py): per-frame byte
-    extents, bitrate, and sample rate from the published 4-byte header
-    layout — VBR-safe, ID3v2-skipping, codec-free (sample decode needs
-    the Layer III codec; the byte index does not)."""
-    from ..operators.audio import mp3_frame_index, with_synth_mp3
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return mp3_frame_index(with_synth_mp3(docs))
-
-
-@q(
-    "webm_frame_index",
-    # Fixed-width EBML size fields make every SimpleBlock offset the
-    # closed form 102 + 16*(i//4+1) + 13*(i+1) + cumsum(prior lens);
-    # lens 60 + (id*5 + i*11) % 40, cluster ts c*200 + in-cluster
-    # k*50, keyframe at k = 0. The engine must genuinely walk EBML
-    # varints and Cluster/SimpleBlock structure to match.
-    """
-    WITH geo AS (
-      SELECT doc_id, 5 + doc_id % 9 AS n FROM documents WHERE doc_id < 64
-    ),
-    f AS (
-      SELECT g.doc_id, i.i AS frame_idx,
-             60 + (g.doc_id * 5 + i.i * 11) % 40 AS frame_len,
-             i.i // 4 AS c, i.i % 4 AS k
-      FROM geo g, unnest(generate_series(0, g.n - 1)) AS i(i)
-    )
-    SELECT doc_id, 1::INT AS track, frame_idx::INT AS frame_idx,
-           (c * 200 + k * 50)::BIGINT AS timestamp_ticks,
-           (102 + 16 * (c + 1) + 13 * (frame_idx + 1)
-            + coalesce(sum(frame_len) OVER (
-                PARTITION BY doc_id ORDER BY frame_idx
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           )::BIGINT AS "offset",
-           frame_len::INT AS frame_len,
-           (CASE WHEN k = 0 THEN 1 ELSE 0 END)::INT AS is_keyframe
-    FROM f
-    """,
-)
-def q_webm_frame_index(spark, sf_dir):
-    """REAL WebM/Matroska container walk (operators/video.py): EBML
-    varint elements, track metadata, and per-frame coded-byte extents
-    + keyframe flags from Cluster/SimpleBlock — with mp4_frame_index
-    this covers essentially all web video containers, codec-free."""
-    from ..operators.video import webm_frame_index, with_synth_webm
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return webm_frame_index(with_synth_webm(docs))
-
-
-@q(
-    "h264_nal_index",
-    # The oracle replays the synth stream's closed-form layout: SPS
-    # (13 bytes) + PPS (8), then slices whose wire length is
-    # prefix(4 if IDR else 3) + 2 + filler(20 + (id*7+i*13)%30)
-    # + 5 on odd slices — the +5 is the raw 0x000001 the encoder must
-    # expand to 0x00000301 (emulation prevention), so the offsets only
-    # match if the engine's escape handling is real. Offsets are a
-    # window cumsum; slice_type/first_mb require genuine exp-Golomb
-    # decoding of the RBSP.
-    """
-    WITH geo AS (
-      SELECT doc_id, 4 + doc_id % 8 AS n FROM documents WHERE doc_id < 64
-    ),
-    s AS (
-      SELECT g.doc_id, i.i,
-             CASE WHEN i.i % 4 = 0 THEN 4 ELSE 3 END
-               + 2 + (20 + (g.doc_id * 7 + i.i * 13) % 30)
-               + (i.i % 2) * 5 AS tot
-      FROM geo g, unnest(generate_series(0, g.n - 1)) AS i(i)
-    ),
-    sl AS (
-      SELECT doc_id, i, tot,
-             21 + coalesce(sum(tot) OVER (
-               PARTITION BY doc_id ORDER BY i
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-      FROM s
-    )
-    SELECT doc_id, (2 + i)::INT AS nal_idx, off::BIGINT AS "offset",
-           (CASE WHEN i % 4 = 0 THEN 4 ELSE 3 END)::INT AS start_code_len,
-           tot::INT AS nal_len,
-           (CASE WHEN i % 4 = 0 THEN 5 ELSE 1 END)::INT AS nal_type,
-           (CASE WHEN i % 4 = 0 THEN 3 ELSE 2 END)::INT AS ref_idc,
-           (CASE WHEN i % 4 = 0 THEN 1 ELSE 0 END)::INT AS is_idr,
-           (CASE WHEN i % 4 = 0 THEN 7 ELSE i % 2 END)::INT AS slice_type,
-           0::INT AS first_mb
-    FROM sl
-    UNION ALL
-    SELECT doc_id, 0::INT, 0::BIGINT, 4::INT, 13::INT, 7::INT, 3::INT,
-           0::INT, NULL::INT, NULL::INT FROM geo
-    UNION ALL
-    SELECT doc_id, 1::INT, 13::BIGINT, 3::INT, 8::INT, 8::INT, 3::INT,
-           0::INT, NULL::INT, NULL::INT FROM geo
-    """,
-)
-def q_h264_nal_index(spark, sf_dir):
-    """REAL H.264 Annex-B elementary-stream walk (operators/h264.py):
-    start-code scan (3/4-byte prefixes), NAL header fields, IDR flags,
-    and exp-Golomb slice_type/first_mb from the emulation-prevention-
-    unescaped RBSP (ISO 14496-10 §B.1/§7.3.3) — per-NAL byte extents
-    for streams with no container, completing the MP4/WebM/Ogg/MP3
-    index family (VERDICT r4 next-round #4)."""
-    from ..operators.h264 import h264_nal_index, with_synth_h264
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return h264_nal_index(with_synth_h264(docs))
-
-
-@q(
-    "hevc_nal_index",
-    # Same closed-form oracle pattern as h264_nal_index: VPS (12 bytes)
-    # + SPS (10) + PPS (9), then slices of prefix(4 if IRAP else 3) + 3
-    # + filler(18 + (id*5+i*11)%26) + 5 on odd slices (the escaped raw
-    # 0x000001). The 2-byte HEVC NAL header carries the temporal-id
-    # ladder (0 for IRAP, i%3 for TRAIL_R) the engine must decode.
-    """
-    WITH geo AS (
-      SELECT doc_id, 4 + doc_id % 8 AS n FROM documents WHERE doc_id < 64
-    ),
-    s AS (
-      SELECT g.doc_id, i.i,
-             CASE WHEN i.i % 4 = 0 THEN 4 ELSE 3 END
-               + 3 + (18 + (g.doc_id * 5 + i.i * 11) % 26)
-               + (i.i % 2) * 5 AS tot
-      FROM geo g, unnest(generate_series(0, g.n - 1)) AS i(i)
-    ),
-    sl AS (
-      SELECT doc_id, i, tot,
-             31 + coalesce(sum(tot) OVER (
-               PARTITION BY doc_id ORDER BY i
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-      FROM s
-    )
-    SELECT doc_id, (3 + i)::INT AS nal_idx, off::BIGINT AS "offset",
-           (CASE WHEN i % 4 = 0 THEN 4 ELSE 3 END)::INT AS start_code_len,
-           tot::INT AS nal_len,
-           (CASE WHEN i % 4 = 0 THEN 19 ELSE 1 END)::INT AS nal_type,
-           0::INT AS nuh_layer_id,
-           (CASE WHEN i % 4 = 0 THEN 0 ELSE i % 3 END)::INT AS temporal_id,
-           (CASE WHEN i % 4 = 0 THEN 1 ELSE 0 END)::INT AS is_irap,
-           (CASE WHEN i % 4 = 0 THEN 1 ELSE 0 END)::INT AS is_idr,
-           1::INT AS first_slice
-    FROM sl
-    UNION ALL
-    SELECT doc_id, 0::INT, 0::BIGINT, 4::INT, 12::INT, 32::INT, 0::INT,
-           0::INT, 0::INT, 0::INT, NULL::INT FROM geo
-    UNION ALL
-    SELECT doc_id, 1::INT, 12::BIGINT, 3::INT, 10::INT, 33::INT, 0::INT,
-           0::INT, 0::INT, 0::INT, NULL::INT FROM geo
-    UNION ALL
-    SELECT doc_id, 2::INT, 22::BIGINT, 3::INT, 9::INT, 34::INT, 0::INT,
-           0::INT, 0::INT, 0::INT, NULL::INT FROM geo
-    """,
-)
-def q_hevc_nal_index(spark, sf_dir):
-    """REAL HEVC/H.265 Annex-B walk (operators/h264.py): shared
-    start-code machinery with the H.264 index, 2-byte NAL header
-    (ISO 23008-2 §7.3.1.2) with layer + temporal-sub-layer routing,
-    IRAP/IDR flags, and the PPS-free first_slice_segment_in_pic bit —
-    temporal-ladder filtering (drop tid>k) becomes a pure Column
-    filter over this index."""
-    from ..operators.h264 import hevc_nal_index, with_synth_hevc
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return hevc_nal_index(with_synth_hevc(docs))
-
-
-@q(
-    "av1_obu_index",
-    # Closed-form oracle for the AV1 low-overhead stream (no start
-    # codes — framing is the OBU header + leb128 size): temporal
-    # delimiter (2 bytes) + sequence header (8) + metadata (6), then
-    # frames whose wire length is 1 + ext(0 for KEY else 1)
-    # + leb128(1, or 2 when payload > 127 — every i%4==2 frame) +
-    # payload(1 + 40 + (id*3+i*7)%50 [+110 when i%4==2]). The 2-byte
-    # leb128 path and the extension-header temporal ids only match if
-    # the engine genuinely decodes both.
-    """
-    WITH geo AS (
-      SELECT doc_id, 4 + doc_id % 8 AS n FROM documents WHERE doc_id < 64
-    ),
-    f AS (
-      SELECT g.doc_id, i.i,
-             1 + 40 + (g.doc_id * 3 + i.i * 7) % 50
-               + CASE WHEN i.i % 4 = 2 THEN 110 ELSE 0 END AS payload,
-             CASE WHEN i.i % 4 = 0 THEN 0 ELSE 1 END AS ext
-      FROM geo g, unnest(generate_series(0, g.n - 1)) AS i(i)
-    ),
-    w AS (
-      SELECT doc_id, i, payload, ext,
-             1 + ext + CASE WHEN payload > 127 THEN 2 ELSE 1 END AS hlen
-      FROM f
-    ),
-    sl AS (
-      SELECT doc_id, i, payload, ext, hlen,
-             16 + coalesce(sum(hlen + payload) OVER (
-               PARTITION BY doc_id ORDER BY i
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-      FROM w
-    )
-    SELECT doc_id, (3 + i)::INT AS obu_idx, off::BIGINT AS "offset",
-           (hlen + payload)::INT AS obu_len, hlen::INT AS header_len,
-           6::INT AS obu_type, ext::INT AS has_extension,
-           (CASE WHEN i % 4 = 0 THEN 0 ELSE i % 3 END)::INT AS temporal_id,
-           0::INT AS spatial_id, payload::INT AS obu_size,
-           0::INT AS show_existing,
-           (CASE WHEN i % 4 = 0 THEN 0 ELSE 1 END)::INT AS frame_type,
-           1::INT AS show_frame,
-           (CASE WHEN i % 4 = 0 THEN 1 ELSE 0 END)::INT AS is_keyframe
-    FROM sl
-    UNION ALL
-    SELECT doc_id, 0::INT, 0::BIGINT, 2::INT, 2::INT, 2::INT, 0::INT,
-           0::INT, 0::INT, 0::INT, NULL::INT, NULL::INT, NULL::INT,
-           0::INT FROM geo
-    UNION ALL
-    SELECT doc_id, 1::INT, 2::BIGINT, 8::INT, 2::INT, 1::INT, 0::INT,
-           0::INT, 0::INT, 6::INT, NULL::INT, NULL::INT, NULL::INT,
-           0::INT FROM geo
-    UNION ALL
-    SELECT doc_id, 2::INT, 10::BIGINT, 6::INT, 2::INT, 5::INT, 0::INT,
-           0::INT, 0::INT, 4::INT, NULL::INT, NULL::INT, NULL::INT,
-           0::INT FROM geo
-    """,
-)
-def q_av1_obu_index(spark, sf_dir):
-    """REAL AV1 OBU walk (operators/av1.py): low-overhead bitstream
-    format of the public AOM AV1 spec §5.2 — OBU headers, leb128
-    sizes, extension-header temporal/spatial ids, and the first
-    uncompressed-header bits (frame_type/show_frame, honouring
-    reduced_still_picture_header) — per-OBU byte extents completing
-    the H.264/HEVC/AV1 elementary-stream index family."""
-    from ..operators.av1 import av1_obu_index, with_synth_av1
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return av1_obu_index(with_synth_av1(docs))
-
-
-@q(
-    "vp9_frame_index",
-    # Closed-form oracle for the VP9 superframe walk: n = 4 + id%5
-    # coded frames of 25 + (id*5+i*9)%60 bytes each, KEY every 4th,
-    # then the Annex-B trailing index (marker + little-endian sizes +
-    # marker, mag = 1 + id%2 bytes per size). Only the frame extents
-    # are emitted — the engine must locate and decode the index (incl.
-    # the 2-byte-size path on odd doc_ids) to reproduce the offsets.
-    """
-    WITH geo AS (
-      SELECT doc_id, 4 + doc_id % 5 AS n FROM documents WHERE doc_id < 64
-    ),
-    f AS (
-      SELECT g.doc_id, i.i, 25 + (g.doc_id * 5 + i.i * 9) % 60 AS flen
-      FROM geo g, unnest(generate_series(0, g.n - 1)) AS i(i)
-    )
-    SELECT doc_id, i::INT AS frame_idx,
-           coalesce(sum(flen) OVER (
-             PARTITION BY doc_id ORDER BY i
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-           ), 0)::BIGINT AS "offset",
-           flen::INT AS frame_len,
-           0::INT AS profile, 0::INT AS show_existing,
-           (CASE WHEN i % 4 = 0 THEN 0 ELSE 1 END)::INT AS frame_type,
-           1::INT AS show_frame,
-           (CASE WHEN i % 4 = 0 THEN 1 ELSE 0 END)::INT AS is_keyframe
-    FROM f
-    """,
-)
-def q_vp9_frame_index(spark, sf_dir):
-    """REAL VP9 superframe walk (operators/vp9.py): the Annex-B
-    trailing index splits a WebM/IVF block payload into its coded
-    frames (public VP9 spec), plus the first uncompressed-header bits
-    (frame_marker/profile/frame_type/show_frame) — per-frame byte
-    extents + keyframe flags for the third web codec, completing the
-    H.264/HEVC/AV1 elementary-stream index family."""
-    from ..operators.vp9 import vp9_frame_index, with_synth_vp9
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return vp9_frame_index(with_synth_vp9(docs))
-
-
-@q(
-    "adts_frame_index",
-    # Closed-form oracle replaying the synth's header formulas: ID3v2
-    # prefix of 10 + id%7 bytes, then n = 4 + id%6 frames of
-    # hdr(9 when i%5=0 else 7) + 30 + (id*7+i*13)%40 bytes with
-    # profile (id+i)%4, rate index 3+i%3, channels 1+(id+i)%2. The
-    # engine must walk every 56-bit ADTS header (incl. the 13-bit
-    # aac_frame_length and the CRC-present 9-byte variant) to match.
-    """
-    WITH geo AS (
-      SELECT doc_id, 4 + doc_id % 6 AS n, 10 + doc_id % 7 AS prefix
-      FROM documents WHERE doc_id < 64
-    ),
-    f AS (
-      SELECT g.doc_id, g.prefix, i.i,
-             CASE WHEN i.i % 5 = 0 THEN 1 ELSE 0 END AS crc,
-             7 + 2 * (CASE WHEN i.i % 5 = 0 THEN 1 ELSE 0 END)
-               + 30 + (g.doc_id * 7 + i.i * 13) % 40 AS flen
-      FROM geo g, unnest(generate_series(0, g.n - 1)) AS i(i)
-    )
-    SELECT doc_id, i::INT AS frame_idx,
-           (prefix + coalesce(sum(flen) OVER (
-              PARTITION BY doc_id ORDER BY i
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           )::BIGINT AS "offset",
-           flen::INT AS frame_len,
-           ((doc_id + i) % 4)::INT AS profile,
-           list_extract([48000, 44100, 32000], (i % 3 + 1)::INT)::INT
-             AS sample_rate,
-           (1 + (doc_id + i) % 2)::INT AS channels,
-           crc::INT AS crc_present, 1::INT AS n_blocks
-    FROM f
-    """,
-)
-def q_adts_frame_index(spark, sf_dir):
-    """REAL ADTS AAC frame walk (operators/audio.py): per-frame byte
-    extents + codec-setup fields (profile/rate/channels) from the
-    published 56-bit header (ISO 14496-3 §1.A.2.2) — the dominant
-    bare-audio elementary stream on the web (HLS/TS segments, raw
-    .aac), ID3v2-skipping and CRC-variant-aware, codec-free."""
-    from ..operators.audio import adts_frame_index, with_synth_adts
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return adts_frame_index(with_synth_adts(docs))
-
-
-@q(
-    "mpegts_packet_index",
-    # Closed-form oracle over the synth segment's 188-byte grid:
-    # n = 12 + id%8 packets, PID cycling PAT/video/audio (0/256/257),
-    # PUSI every 4th (payload opens with a PES start code: stream_id
-    # 0xE0 video / 0xC0 audio), an adaptation field on every 3rd
-    # (8-byte payload_off 12 when it carries the every-6th PCR of
-    # (id*90000 + i*3003) mod 2^33, else 6), per-PID continuity
-    # (i//3)%16. The engine must decode the real header/AF bit layout
-    # to reproduce every column.
-    """
-    WITH geo AS (
-      SELECT doc_id, 12 + doc_id % 8 AS n FROM documents WHERE doc_id < 64
-    ),
-    p AS (
-      SELECT g.doc_id, i.i,
-             list_extract([0, 256, 257], (i.i % 3 + 1)::INT) AS pid,
-             CASE WHEN i.i % 4 = 0 THEN 1 ELSE 0 END AS pusi,
-             CASE WHEN i.i % 3 = 0 THEN 1 ELSE 0 END AS has_af,
-             CASE WHEN i.i % 6 = 0 THEN 1 ELSE 0 END AS has_pcr
-      FROM geo g, unnest(generate_series(0, g.n - 1)) AS i(i)
-    ),
-    w AS (
-      SELECT doc_id, i, pid, pusi,
-             CASE WHEN has_af = 1 THEN 3 ELSE 1 END AS afc,
-             (i // 3) % 16 AS cc,
-             pusi * has_af AS random_access,
-             CASE WHEN has_pcr = 1
-               THEN (doc_id * 90000 + i * 3003) % 8589934592 END AS pcr_base,
-             CASE WHEN has_af = 0 THEN 4
-                  WHEN has_pcr = 1 THEN 12 ELSE 6 END AS payload_off,
-             CASE WHEN pusi = 1 THEN
-               CASE WHEN i % 3 = 2 THEN 192 ELSE 224 END END AS pes_stream_id
-      FROM p
-    )
-    SELECT doc_id, i::INT AS pkt_idx, (i * 188)::BIGINT AS "offset",
-           pid::INT AS pid, pusi::INT AS pusi, afc::INT AS afc,
-           cc::INT AS cc, random_access::INT AS random_access,
-           pcr_base::BIGINT AS pcr_base,
-           payload_off::INT AS payload_off,
-           (188 - payload_off)::INT AS payload_len,
-           pes_stream_id::INT AS pes_stream_id
-    FROM w
-    """,
-)
-def q_mpegts_packet_index(spark, sf_dir):
-    """REAL MPEG-TS packet walk (operators/mpegts.py): 188-byte grid
-    with PID routing, PES-start detection, adaptation-field PCR and
-    random-access flags (ISO 13818-1, public) — the HLS-segment demux
-    layer that fans a segment corpus out to the H.264/HEVC NAL and
-    ADTS AAC elementary-stream indexes, codec-free."""
-    from ..operators.mpegts import mpegts_packet_index, with_synth_ts
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return mpegts_packet_index(with_synth_ts(docs))
 
 
 @q(
@@ -2988,582 +1981,6 @@ def q_cuckoo_evict(spark, sf_dir):
     return (
         n_inserted.crossJoin(n_after).crossJoin(n_kept).crossJoin(n_del)
     )
-
-
-
-@q(
-    "media_pipeline",
-    # The composed multimodal pipeline: ONE mixed corpus (format by
-    # doc_id % 8), sniffed by magic bytes and routed to eight REAL
-    # decoders, unified into (doc_id, format, units, metric). The
-    # oracle is the UNION of the eight per-format formula replays —
-    # it never parses a container; the engine only matches by sniffing
-    # correctly AND decoding every format correctly in one job.
-    """
-    WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 64),
-    png AS (
-      SELECT doc_id, 9 + doc_id % 14 AS w, 5 + doc_id % 11 AS h,
-             1 + doc_id % 4 AS ch
-      FROM ids WHERE doc_id % 8 = 0
-    ),
-    png_m AS (
-      SELECT p.doc_id, 'png' AS format, (p.w * p.h)::BIGINT AS units,
-             avg((p.doc_id * 2654435761
-                  + ((r.r * p.w + c.c) * p.ch) * 40503) % 256) AS metric
-      FROM png p,
-           unnest(generate_series(0, p.h - 1)) AS r(r),
-           unnest(generate_series(0, p.w - 1)) AS c(c)
-      GROUP BY p.doc_id, p.w, p.h
-    ),
-    gif AS (
-      SELECT doc_id, 9 + doc_id % 14 AS w, 5 + doc_id % 11 AS h
-      FROM ids WHERE doc_id % 8 = 1
-    ),
-    gif_m AS (
-      SELECT g.doc_id, 'gif' AS format, (g.w * g.h)::BIGINT AS units,
-             avg((((g.doc_id * 2654435761 + j.j * 40503) % 256) * 7 + 3) % 256)
-               AS metric
-      FROM gif g, unnest(generate_series(0, g.w * g.h - 1)) AS j(j)
-      GROUP BY g.doc_id, g.w, g.h
-    ),
-    bmp AS (
-      SELECT doc_id, 16 + doc_id % 17 AS w, 8 + doc_id % 13 AS h,
-             (24 + 8 * (doc_id % 2)) // 8 AS ch
-      FROM ids WHERE doc_id % 8 = 2
-    ),
-    bmp2 AS (SELECT *, ((w * ch + 3) // 4) * 4 AS stride FROM bmp),
-    bmp_m AS (
-      SELECT b.doc_id, 'bmp' AS format, (b.w * b.h)::BIGINT AS units,
-             avg((b.doc_id * 2654435761
-                  + (r.r * b.stride + c.c * b.ch) * 40503) % 256) AS metric
-      FROM bmp2 b,
-           unnest(generate_series(0, b.h - 1)) AS r(r),
-           unnest(generate_series(0, b.w - 1)) AS c(c)
-      GROUP BY b.doc_id, b.w, b.h
-    ),
-    jpg AS (
-      SELECT doc_id, 1 + doc_id % 4 AS bw, 1 + doc_id % 3 AS bh
-      FROM ids WHERE doc_id % 8 = 3
-    ),
-    jpg_m AS (
-      SELECT j.doc_id, 'jpeg' AS format,
-             (j.bw * 8 * j.bh * 8)::BIGINT AS units,
-             avg((j.doc_id * 2654435761 + b.b * 40503) % 256) AS metric
-      FROM jpg j, unnest(generate_series(0, j.bw * j.bh - 1)) AS b(b)
-      GROUP BY j.doc_id, j.bw, j.bh
-    ),
-    wav AS (
-      SELECT doc_id, 400 + doc_id % 600 AS frames,
-             (1 + doc_id % 2) AS ch
-      FROM ids WHERE doc_id % 8 = 4
-    ),
-    wav_m AS (
-      SELECT w.doc_id, 'wav' AS format, w.frames::BIGINT AS units,
-             sqrt(sum(s.s * s.s) / (count(*) * 32768.0 * 32768.0)) AS metric
-      FROM wav w, LATERAL (
-        SELECT ((w.doc_id * 2654435761 + t.i * 40503) % 65536) - 32768 AS s
-        FROM unnest(generate_series(0, w.frames * w.ch - 1)) AS t(i)
-      ) s
-      GROUP BY w.doc_id, w.frames
-    ),
-    mp4 AS (
-      SELECT doc_id, 5 + doc_id % 9 AS n FROM ids WHERE doc_id % 8 = 5
-    ),
-    mp4_m AS (
-      SELECT m.doc_id, 'mp4' AS format, m.n::BIGINT AS units,
-             sum(100 + (m.doc_id * 3 + i.i * 7) % 50)::DOUBLE AS metric
-      FROM mp4 m, unnest(generate_series(0, m.n - 1)) AS i(i)
-      GROUP BY m.doc_id, m.n
-    ),
-    mp3 AS (
-      SELECT doc_id, 3 + doc_id % 6 AS n FROM ids WHERE doc_id % 8 = 6
-    ),
-    mp3_m AS (
-      SELECT m.doc_id, 'mp3' AS format, m.n::BIGINT AS units,
-             sum((144000 * list_extract(
-                    [32,40,48,56,64,80,96,112,128,160,192,224,256,320],
-                    (1 + (m.doc_id * 3 + i.i) % 14)::INT))
-                 // list_extract([44100,48000,32000], (i.i % 3 + 1)::INT)
-                 + (m.doc_id + i.i) % 2)::DOUBLE AS metric
-      FROM mp3 m, unnest(generate_series(0, m.n - 1)) AS i(i)
-      GROUP BY m.doc_id, m.n
-    ),
-    webm AS (
-      SELECT doc_id, 5 + doc_id % 9 AS n FROM ids WHERE doc_id % 8 = 7
-    ),
-    webm_m AS (
-      SELECT w.doc_id, 'webm' AS format, w.n::BIGINT AS units,
-             sum(60 + (w.doc_id * 5 + i.i * 11) % 40)::DOUBLE AS metric
-      FROM webm w, unnest(generate_series(0, w.n - 1)) AS i(i)
-      GROUP BY w.doc_id, w.n
-    )
-    SELECT * FROM png_m UNION ALL SELECT * FROM gif_m
-    UNION ALL SELECT * FROM bmp_m UNION ALL SELECT * FROM jpg_m
-    UNION ALL SELECT * FROM wav_m UNION ALL SELECT * FROM mp4_m
-    UNION ALL SELECT * FROM mp3_m UNION ALL SELECT * FROM webm_m
-    """,
-)
-def q_media_pipeline(spark, sf_dir):
-    """The composed multimodal pipeline: one mixed binary corpus,
-    magic-byte sniff (sniff_media_format), route to the eight real
-    decoders (PNG/GIF/BMP/JPEG pixels, WAV samples, MP4/MP3/WebM frame
-    indexes), unify into (doc_id, format, units, metric)."""
-    from ..operators.audio import decode_audio_features, mp3_frame_index
-    from ..operators.jpeg import decode_jpeg_features
-    from ..operators.multimodal import sniff_media_format, with_synth_mixed_media
-    from ..operators.rawmedia import (
-        decode_bmp_features,
-        decode_gif_features,
-        decode_png_features,
-    )
-    from ..operators.video import mp4_frame_index, webm_frame_index
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    routed = with_synth_mixed_media(docs).withColumn(
-        "format", sniff_media_format(F.col("data"))
-    )
-
-    def sub(fmt):
-        return routed.filter(F.col("format") == fmt).select("doc_id", "data")
-
-    def img(decoder, fmt, mean_col):
-        out = decoder(sub(fmt))
-        return out.select(
-            "doc_id",
-            F.lit(fmt).alias("format"),
-            (F.col("width") * F.col("height")).cast("long").alias("units"),
-            F.col(mean_col).alias("metric"),
-        )
-
-    def frames(stage, fmt):
-        return (
-            stage(sub(fmt))
-            .groupBy("doc_id")
-            .agg(
-                F.count("*").alias("units"),
-                F.sum("frame_len").cast("double").alias("metric"),
-            )
-            .select("doc_id", F.lit(fmt).alias("format"), "units", "metric")
-        )
-
-    wav = (
-        decode_audio_features(sub("wav"))
-        .select(
-            "doc_id",
-            F.lit("wav").alias("format"),
-            F.col("n_frames").alias("units"),
-            F.col("rms").alias("metric"),
-        )
-    )
-    parts = [
-        img(decode_png_features, "png", "mean_c0"),
-        img(decode_gif_features, "gif", "mean_r"),
-        img(decode_bmp_features, "bmp", "mean_b"),
-        img(decode_jpeg_features, "jpeg", "mean_c0"),
-        wav,
-        frames(mp4_frame_index, "mp4"),
-        frames(mp3_frame_index, "mp3"),
-        frames(webm_frame_index, "webm"),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-
-@q(
-    "ogg_page_index",
-    # With one lacing value per page the header is a fixed 28 bytes, so
-    # page i's payload offset is 28*(i+1) + cumsum(prior lens) with
-    # len_i = 50 + (id*7 + i*13) % 60 — the oracle replays that plus
-    # granule/serial/BOS/EOS formulas; the engine must walk real pages
-    # AND verify each page's RFC 3533 CRC-32 to match.
-    """
-    WITH geo AS (
-      SELECT doc_id, 3 + doc_id % 7 AS n FROM documents WHERE doc_id < 64
-    ),
-    p AS (
-      SELECT g.doc_id, g.n, i.i AS page_idx,
-             50 + (g.doc_id * 7 + i.i * 13) % 60 AS page_len
-      FROM geo g, unnest(generate_series(0, g.n - 1)) AS i(i)
-    )
-    SELECT doc_id, page_idx::INT AS page_idx,
-           (28 * (page_idx + 1) + coalesce(sum(page_len) OVER (
-              PARTITION BY doc_id ORDER BY page_idx
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           )::BIGINT AS "offset",
-           page_len::INT AS page_len,
-           ((page_idx + 1) * 256 + doc_id % 32)::BIGINT AS granule,
-           (doc_id % 1000)::BIGINT AS serial,
-           (CASE WHEN page_idx = 0 THEN 1 ELSE 0 END)::INT AS is_bos,
-           (CASE WHEN page_idx = n - 1 THEN 1 ELSE 0 END)::INT AS is_eos
-    FROM p
-    """,
-)
-def q_ogg_page_index(spark, sf_dir):
-    """REAL Ogg (RFC 3533) page walk (operators/audio.py): per-page
-    payload byte extents, granule positions, and stream flags, with
-    every page's CRC-32 verified — Vorbis/Opus packet decode needs a
-    codec; the page index does not."""
-    from ..operators.audio import ogg_page_index, with_synth_ogg
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return ogg_page_index(with_synth_ogg(docs))
-
-
-
-@q(
-    "gif_frame_index",
-    """
-    WITH geo AS (
-      SELECT doc_id, 1 + doc_id % 5 AS nf FROM documents WHERE doc_id < 64
-    )
-    SELECT g.doc_id,
-           f.f::INT AS frame_idx,
-           (f.f % 5)::INT AS x,
-           ((f.f * 2) % 5)::INT AS y,
-           (4 + (g.doc_id + f.f) % 9)::INT AS w,
-           (3 + (g.doc_id * 3 + f.f) % 7)::INT AS h,
-           (3 + (g.doc_id * 7 + f.f) % 12)::INT AS delay_cs
-    FROM geo g, unnest(generate_series(0, g.nf - 1)) AS f(f)
-    """,
-)
-def q_gif_frame_index(spark, sf_dir):
-    """GIF frame-structure walk (no LZW decode needed or claimed): one
-    row per image descriptor with position, size, and the preceding
-    Graphic Control Extension's delay — the frame-sampling index."""
-    from ..operators.rawmedia import gif_frame_index, with_synth_gif
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return gif_frame_index(with_synth_gif(docs))
-
-
-@q(
-    "flac_block_index",
-    # Closed-form oracle for the FLAC metadata-block walk: every doc
-    # has a 34-byte STREAMINFO at body offset 8 (rate 8000*(1+id%3),
-    # channels 1+id%2, 16-bit, 1000+(id*37)%5000 total samples) and an
-    # is-last PADDING block of 8 + id%16 bytes at body offset 46. The
-    # engine must parse the real 4-byte block headers and the
-    # STREAMINFO 20/3/5/36-bit packed fields to reproduce every column.
-    """
-    SELECT doc_id, 0::INT AS block_idx, 0::INT AS block_type,
-           0::INT AS is_last, 8::BIGINT AS "offset", 34::INT AS block_len,
-           (8000 * (1 + doc_id % 3))::INT AS sample_rate,
-           (1 + doc_id % 2)::INT AS channels, 16::INT AS bits,
-           (1000 + (doc_id * 37) % 5000)::BIGINT AS total_samples
-    FROM documents WHERE doc_id < 64
-    UNION ALL
-    SELECT doc_id, 1::INT, 1::INT, 1::INT, 46::BIGINT,
-           (8 + doc_id % 16)::INT, NULL::INT, NULL::INT, NULL::INT,
-           NULL::BIGINT
-    FROM documents WHERE doc_id < 64
-    """,
-)
-def q_flac_block_index(spark, sf_dir):
-    """REAL FLAC metadata-block walk (operators/flac.py): per-block
-    byte extents + the STREAMINFO bit-packed audio parameters (RFC
-    9639 layout) — the metadata front-end of the bare-audio family
-    (MP3/ADTS/Ogg/WAV), codec-free."""
-    from ..operators.flac import flac_block_index, with_synth_flac
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return flac_block_index(with_synth_flac(docs))
-
-
-@q(
-    "flac_frame_index",
-    # Closed-form oracle for the CRC-verified FLAC frame walk:
-    # n = 3 + id%6 frames starting at 54 + id%16 (after fLaC magic +
-    # 38-byte STREAMINFO block + 4 + (8+id%16)-byte PADDING block),
-    # each 29 + (id*7+i*11)%50 bytes (7-byte header + payload + 2-byte
-    # CRC-16), blocksize 64 + (id*3+i*7)%128 (8-bit code-6 path), rate
-    # cycling 32000/44100/48000/96000, channels 1+(id+i)%2. FLAC frame
-    # headers carry NO length field: the engine must find boundaries
-    # by sync-scan + CRC-8 header + CRC-16 frame verification.
-    """
-    WITH geo AS (
-      SELECT doc_id, 3 + doc_id % 6 AS n, 54 + doc_id % 16 AS start
-      FROM documents WHERE doc_id < 64
-    ),
-    f AS (
-      SELECT g.doc_id, g.start, i.i,
-             29 + (g.doc_id * 7 + i.i * 11) % 50 AS flen
-      FROM geo g, unnest(generate_series(0, g.n - 1)) AS i(i)
-    )
-    SELECT doc_id, i::INT AS frame_idx,
-           (start + coalesce(sum(flen) OVER (
-              PARTITION BY doc_id ORDER BY i
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           )::BIGINT AS "offset",
-           flen::INT AS frame_len,
-           (64 + (doc_id * 3 + i * 7) % 128)::INT AS blocksize,
-           list_extract([32000, 44100, 48000, 96000], (i % 4 + 1)::INT)::INT
-             AS sample_rate,
-           (1 + (doc_id + i) % 2)::INT AS channels,
-           i::BIGINT AS frame_number
-    FROM f
-    """,
-)
-def q_flac_frame_index(spark, sf_dir):
-    """REAL FLAC frame boundary walk (operators/flac.py): per-frame
-    byte extents via sync-scan with CRC-8 header + CRC-16 frame
-    verification (frames carry no length field), plus the decoded
-    header fields — completing the elementary-stream index family for
-    lossless web audio, codec-free."""
-    from ..operators.flac import flac_frame_index, with_synth_flac
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return flac_frame_index(with_synth_flac(docs))
-
-
-@q(
-    "exif_index",
-    # Closed-form oracle for the EXIF TIFF IFD walk: 6 rows per doc
-    # (4 IFD0 + 2 EXIF sub-IFD; the 0x8769 pointer is followed, not
-    # emitted), byte order alternating II/MM by doc parity, with
-    # inline (Model, Orientation, SHORTs) and at-offset (Make, the
-    # RATIONALs) value storage both exercised. dtype is the TIFF type
-    # id (2 ASCII, 3 SHORT, 5 RATIONAL).
-    """
-    WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 64)
-    SELECT doc_id, 0::INT AS ifd, 271::INT AS tag, 2::INT AS dtype,
-           5::INT AS n, 'CAM' || (doc_id % 10)::VARCHAR AS value_s
-    FROM d
-    UNION ALL
-    SELECT doc_id, 0, 272, 2, 4,
-           'M' || lpad((doc_id % 100)::VARCHAR, 2, '0') FROM d
-    UNION ALL
-    SELECT doc_id, 0, 274, 3, 1, (1 + doc_id % 8)::VARCHAR FROM d
-    UNION ALL
-    SELECT doc_id, 0, 282, 5, 1,
-           (72 + doc_id % 4)::VARCHAR || '/1' FROM d
-    UNION ALL
-    SELECT doc_id, 1, 34855, 3, 1,
-           (100 * (1 + doc_id % 8))::VARCHAR FROM d
-    UNION ALL
-    SELECT doc_id, 1, 33434, 5, 1,
-           '1/' || (30 + doc_id % 200)::VARCHAR FROM d
-    """,
-)
-def q_exif_index(spark, sf_dir):
-    """REAL EXIF extraction (operators/exif.py): JPEG marker walk to
-    APP1, TIFF 6.0 IFD walk in both byte orders with inline/at-offset
-    value storage, EXIF sub-IFD behind the 0x8769 pointer — the
-    metadata an image pipeline reads before (or instead of) any pixel
-    decode, codec-free."""
-    from ..operators.exif import exif_index, with_synth_exif
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return exif_index(with_synth_exif(docs))
-
-
-@q(
-    "webvtt_cue_index",
-    # Closed-form oracle for the WebVTT cue walk: n = 3 + id%5 cues,
-    # start_ms = (id%5)*1800000 + i*2000 + (id%7)*111 (crossing the
-    # hour mark for id%5 >= 2, so both mm:ss.mmm and hh:mm:ss.mmm
-    # forms occur), dur = 900 + (id*13+i*29)%2000, id line on even
-    # cues, an align setting to ignore on odd cues, 1 + (id+i)%2
-    # payload lines, and a NOTE block to skip when id%3 = 0.
-    """
-    WITH geo AS (
-      SELECT doc_id, 3 + doc_id % 5 AS n FROM documents WHERE doc_id < 64
-    ),
-    c AS (
-      SELECT g.doc_id, i.i,
-             (g.doc_id % 5) * 1800000 + i.i * 2000
-               + (g.doc_id % 7) * 111 AS start_ms,
-             900 + (g.doc_id * 13 + i.i * 29) % 2000 AS dur,
-             1 + (g.doc_id + i.i) % 2 AS nl
-      FROM geo g, unnest(generate_series(0, g.n - 1)) AS i(i)
-    )
-    SELECT doc_id, i::INT AS cue_idx, start_ms::BIGINT AS start_ms,
-           (start_ms + dur)::BIGINT AS end_ms,
-           CASE WHEN i % 2 = 0
-                THEN 'c' || doc_id::VARCHAR || '-' || i::VARCHAR
-           END AS cue_id,
-           'line0 doc' || doc_id::VARCHAR || ' cue' || i::VARCHAR ||
-           CASE WHEN nl = 2
-                THEN chr(10) || 'line1 doc' || doc_id::VARCHAR
-                     || ' cue' || i::VARCHAR
-                ELSE '' END AS text,
-           nl::INT AS n_lines
-    FROM c
-    """,
-)
-def q_webvtt_cue_index(spark, sf_dir):
-    """REAL WebVTT cue parsing (operators/subtitles.py): timing lines
-    in both timestamp forms, cue ids, ignored settings, NOTE blocks —
-    the caption text modality a video-training pipeline aligns with
-    the elementary-stream frame indexes."""
-    from ..operators.subtitles import webvtt_cue_index, with_synth_webvtt
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return webvtt_cue_index(with_synth_webvtt(docs))
-
-
-@q(
-    "webp_chunk_index",
-    # Closed-form oracle for the WebP RIFF chunk walk, cycling the
-    # three bitstream forms by id%3: lossy VP8 (body 10+id%21), lossless
-    # VP8L (body 5+id%21, alpha id%2), and extended VP8X + EXIF + VP8
-    # (EXIF body 8+id%9 with RIFF even-padding shifting the next chunk).
-    # Dimensions are 16+(id*5)%240 x 16+(id*7)%240 everywhere; the
-    # engine must parse the real le32 sizes, the VP8 start code's
-    # 14-bit dims, the VP8L packed le32, and the VP8X le24 canvas.
-    """
-    WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 64),
-    g AS (
-      SELECT doc_id, (16 + (doc_id * 5) % 240)::INT AS w,
-             (16 + (doc_id * 7) % 240)::INT AS h,
-             (doc_id % 9)::INT AS e9
-      FROM d
-    )
-    SELECT doc_id, 0::INT AS chunk_idx, 'VP8 ' AS fourcc,
-           20::BIGINT AS "offset", (10 + doc_id % 21)::INT AS chunk_len,
-           w AS width, h AS height, 0::INT AS has_alpha, 0::INT AS lossless
-    FROM g WHERE doc_id % 3 = 0
-    UNION ALL
-    SELECT doc_id, 0, 'VP8L', 20, (5 + doc_id % 21)::INT, w, h,
-           (doc_id % 2)::INT, 1
-    FROM g WHERE doc_id % 3 = 1
-    UNION ALL
-    SELECT doc_id, 0, 'VP8X', 20, 10, w, h, (doc_id % 2)::INT, 0
-    FROM g WHERE doc_id % 3 = 2
-    UNION ALL
-    SELECT doc_id, 1, 'EXIF', 38, (8 + e9)::INT,
-           NULL::INT, NULL::INT, NULL::INT, NULL::INT
-    FROM g WHERE doc_id % 3 = 2
-    UNION ALL
-    SELECT doc_id, 2, 'VP8 ', (54 + e9 + e9 % 2)::BIGINT,
-           (10 + (doc_id * 11) % 40)::INT, w, h, 0, 0
-    FROM g WHERE doc_id % 3 = 2
-    """,
-)
-def q_webp_chunk_index(spark, sf_dir):
-    """REAL WebP container walk (operators/webp.py): RIFF chunk
-    grammar with even-padding, VP8/VP8L/VP8X header decode — the
-    remaining major web image format next to PNG/GIF/JPEG, indexed
-    codec-free before any pixel decoder runs."""
-    from ..operators.webp import webp_chunk_index, with_synth_webp
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return webp_chunk_index(with_synth_webp(docs))
-
-
-@q(
-    "srt_cue_index",
-    # Closed-form oracle for the SRT cue walk: n = 3 + id%5 cues,
-    # seq = i+1, start_ms = (id%4)*900000 + i*3000 + (id%9)*77,
-    # dur = 800 + (id*17+i*23)%2500, 1 + (id+i)%2 payload lines, and
-    # an extra blank line between blocks when id%4 = 3 (tolerated).
-    """
-    WITH geo AS (
-      SELECT doc_id, 3 + doc_id % 5 AS n FROM documents WHERE doc_id < 64
-    ),
-    c AS (
-      SELECT g.doc_id, i.i,
-             (g.doc_id % 4) * 900000 + i.i * 3000
-               + (g.doc_id % 9) * 77 AS start_ms,
-             800 + (g.doc_id * 17 + i.i * 23) % 2500 AS dur,
-             1 + (g.doc_id + i.i) % 2 AS nl
-      FROM geo g, unnest(generate_series(0, g.n - 1)) AS i(i)
-    )
-    SELECT doc_id, i::INT AS cue_idx, (i + 1)::INT AS seq,
-           start_ms::BIGINT AS start_ms, (start_ms + dur)::BIGINT AS end_ms,
-           'sline0 doc' || doc_id::VARCHAR || ' cue' || i::VARCHAR ||
-           CASE WHEN nl = 2
-                THEN chr(10) || 'sline1 doc' || doc_id::VARCHAR
-                     || ' cue' || i::VARCHAR
-                ELSE '' END AS text,
-           nl::INT AS n_lines
-    FROM c
-    """,
-)
-def q_srt_cue_index(spark, sf_dir):
-    """REAL SRT (SubRip) cue parsing (operators/subtitles.py): numeric
-    sequence lines, comma-decimal timing lines, blank-line block
-    grammar — the other subtitle format a crawl encounters, next to
-    WebVTT."""
-    from ..operators.subtitles import srt_cue_index, with_synth_srt
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return srt_cue_index(with_synth_srt(docs))
-
-
-@q(
-    "id3_tag_index",
-    # Closed-form oracle for the ID3v2 frame walk: major = 3 + id%2
-    # (v2.3 plain-BE frame sizes vs v2.4 syncsafe), four text frames
-    # whose payload lengths depend on the digit counts of the formula
-    # values — TIT2 latin-1, TPE1 utf-16-with-BOM on v2.3 (3 + 2*chars
-    # bytes) / utf-8 on v2.4 (1 + chars), TALB/TRCK latin-1 — with
-    # offsets accumulating 10-byte frame headers, then zero padding.
-    """
-    WITH d AS (
-      SELECT doc_id, 3 + doc_id % 2 AS major,
-             'Title ' || (doc_id % 100)::VARCHAR AS tit,
-             'Artist ' || (doc_id % 50)::VARCHAR AS art,
-             'Album ' || (doc_id % 20)::VARCHAR AS alb,
-             (1 + doc_id % 12)::VARCHAR AS trk
-      FROM documents WHERE doc_id < 64
-    ),
-    p AS (
-      SELECT *,
-             1 + length(tit) AS p0,
-             CASE WHEN major = 3 THEN 3 + 2 * length(art)
-                  ELSE 1 + length(art) END AS p1,
-             1 + length(alb) AS p2
-      FROM d
-    )
-    SELECT doc_id, 0::INT AS frame_idx, 'TIT2' AS frame_id,
-           10::BIGINT AS "offset", p0::INT AS frame_len,
-           0::INT AS encoding, tit AS value_s
-    FROM p
-    UNION ALL
-    SELECT doc_id, 1, 'TPE1', (20 + p0)::BIGINT, p1::INT,
-           CASE WHEN major = 3 THEN 1 ELSE 3 END::INT, art
-    FROM p
-    UNION ALL
-    SELECT doc_id, 2, 'TALB', (30 + p0 + p1)::BIGINT, p2::INT, 0, alb
-    FROM p
-    UNION ALL
-    SELECT doc_id, 3, 'TRCK', (40 + p0 + p1 + p2)::BIGINT,
-           (1 + length(trk))::INT, 0, trk
-    FROM p
-    """,
-)
-def q_id3_tag_index(spark, sf_dir):
-    """REAL ID3v2.3/2.4 tag walk (operators/id3.py): syncsafe sizes,
-    both frame-size encodings, latin-1/utf-16/utf-8 text decode,
-    padding termination — the audio-metadata envelope read without
-    touching the MPEG stream behind it."""
-    from ..operators.id3 import id3_tag_index, with_synth_id3
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return id3_tag_index(with_synth_id3(docs))
 
 
 @q(
@@ -3632,282 +2049,3 @@ def q_wet_roundtrip(spark, sf_dir):
         "n_body_bytes",
         F.decode(F.col("html"), "UTF-8").alias("body"),
     )
-
-
-@q(
-    "pdf_object_index",
-    # Closed-form oracle for the classic-xref walk: the synthesizer
-    # pads every non-stream object to a 96-byte slot and every content
-    # stream to a 160-byte slot (comment padding, legal inter-object
-    # bytes), so with n = 1 + id%3 pages the offsets are pure sums:
-    # catalog at 9, pages at 105, page j at 9+96*(1+j), stream j at
-    # 9+96*(2+n)+160*(j-1) with /Length 20+(id*7+(j-1)*11)%40. The
-    # engine must parse startxref, the 20-byte xref entries, and each
-    # object's /Type or stream framing to reproduce every column.
-    """
-    WITH d AS (SELECT doc_id, 1 + doc_id % 3 AS n
-               FROM documents WHERE doc_id < 64)
-    SELECT doc_id, 0::INT AS obj_num, 65535::INT AS gen,
-           0::BIGINT AS "offset", 0::INT AS in_use,
-           'free' AS obj_class, NULL::INT AS stream_len FROM d
-    UNION ALL
-    SELECT doc_id, 1::INT, 0::INT, 9::BIGINT, 1::INT, 'catalog',
-           NULL::INT FROM d
-    UNION ALL
-    SELECT doc_id, 2::INT, 0::INT, 105::BIGINT, 1::INT, 'pages',
-           NULL::INT FROM d
-    UNION ALL
-    SELECT doc_id, (2 + j.j)::INT, 0::INT, (9 + 96 * (1 + j.j))::BIGINT,
-           1::INT, 'page', NULL::INT
-    FROM d, unnest(generate_series(1, d.n)) AS j(j)
-    UNION ALL
-    SELECT doc_id, (2 + d.n + j.j)::INT, 0::INT,
-           (9 + 96 * (2 + d.n) + 160 * (j.j - 1))::BIGINT, 1::INT,
-           'stream', (20 + (doc_id * 7 + (j.j - 1) * 11) % 40)::INT
-    FROM d, unnest(generate_series(1, d.n)) AS j(j)
-    """,
-)
-def q_pdf_object_index(spark, sf_dir):
-    """REAL classic-xref PDF walk (operators/pdf.py): startxref →
-    xref table(s) → per-object byte offsets, in-use flags, and
-    structural classes (ISO 32000-1 layout, /Prev incremental-update
-    chains followed) — the range-read index a 100 TB crawl pipeline
-    fans out before any PDF renderer runs."""
-    from ..operators.pdf import pdf_object_index, with_synth_pdf
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return pdf_object_index(with_synth_pdf(docs))
-
-
-@q(
-    "pdf_page_index",
-    # Same fixed-slot closed form, projected through the Catalog →
-    # Pages → Kids tree walk: page j (0-based) is object 3+j, its
-    # /Contents stream is object 3+n+j at 9+96*(2+n)+160*j, and the
-    # raw stream data starts 32 bytes in ("K 0 obj\\n" 8 +
-    # "<< /Length NN >>\\n" 17 + "stream\\n" 7).
-    """
-    WITH d AS (SELECT doc_id, 1 + doc_id % 3 AS n
-               FROM documents WHERE doc_id < 64)
-    SELECT doc_id, (j.j - 1)::INT AS page_idx, (2 + j.j)::INT AS page_obj,
-           (2 + d.n + j.j)::INT AS content_obj,
-           (9 + 96 * (2 + d.n) + 160 * (j.j - 1))::BIGINT AS content_offset,
-           (9 + 96 * (2 + d.n) + 160 * (j.j - 1) + 32)::BIGINT AS stream_off,
-           (20 + (doc_id * 7 + (j.j - 1) * 11) % 40)::INT AS stream_len
-    FROM d, unnest(generate_series(1, d.n)) AS j(j)
-    """,
-)
-def q_pdf_page_index(spark, sf_dir):
-    """PDF page-tree traversal (operators/pdf.py): ordered pages from
-    Catalog → Pages → Kids (nested /Pages nodes supported) joined to
-    each page's /Contents stream extent — the unit of work for
-    distributed PDF text extraction."""
-    from ..operators.pdf import pdf_page_index, with_synth_pdf
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return pdf_page_index(with_synth_pdf(docs))
-
-
-@q(
-    "pdf_text_extract",
-    # Closed-form oracle for the content-stream text walk: page j of
-    # doc D shows 2+(D+j)%3 lines "doc D page j line k" at x=72,
-    # y=708-14k (one initial "72 708 Td" then "0 -14 Td" advances).
-    # The engine must walk the page tree, slice each stream extent,
-    # tokenize the text operators, and decode the literal strings.
-    """
-    WITH d AS (SELECT doc_id, 1 + doc_id % 3 AS n
-               FROM documents WHERE doc_id < 64),
-    p AS (SELECT doc_id, j.j - 1 AS pj,
-                 2 + (doc_id + j.j - 1) % 3 AS nl
-          FROM d, unnest(generate_series(1, d.n)) AS j(j))
-    SELECT doc_id, pj::INT AS page_idx, k.k::INT AS run_idx,
-           72::INT AS x, (708 - 14 * k.k)::INT AS y,
-           ('doc ' || doc_id || ' page ' || pj || ' line ' || k.k) AS text
-    FROM p, unnest(generate_series(0, p.nl - 1)) AS k(k)
-    """,
-)
-def q_pdf_text_extract(spark, sf_dir):
-    """Distributed PDF → training text (operators/pdf.py): page-tree
-    walk → content-stream slice → Tj/TJ/Td operator tokenizer with
-    PDF literal-string unescaping — per-run text with line positions,
-    in document order. The LLM-pipeline payoff of the PDF index
-    family; uncompressed streams only (codec-free contract)."""
-    from ..operators.pdf import pdf_text_extract, with_synth_pdf_text
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return pdf_text_extract(with_synth_pdf_text(docs))
-
-
-@q(
-    "zip_entry_index",
-    # Closed-form oracle for the central-directory walk: n = 2+id%4
-    # stored members "f{i}.txt" (6-byte names) of 10+(id*3+i*7)%30
-    # payload bytes, so local header i sits at the cumsum of
-    # (36 + plen_j) over j<i and member data 36 bytes further. crc32
-    # is parsed and CRC-verified engine-side but is not
-    # SQL-expressible, so the battery projects the other columns.
-    """
-    WITH d AS (SELECT doc_id, 2 + doc_id % 4 AS n
-               FROM documents WHERE doc_id < 64),
-    m AS (SELECT doc_id, i.i,
-                 10 + (doc_id * 3 + i.i * 7) % 30 AS plen
-          FROM d, unnest(generate_series(0, d.n - 1)) AS i(i))
-    SELECT doc_id, i::INT AS entry_idx,
-           'f' || i || '.txt' AS name, 0::INT AS method,
-           plen::BIGINT AS comp_len, plen::BIGINT AS uncomp_len,
-           coalesce(sum(36 + plen) OVER (
-              PARTITION BY doc_id ORDER BY i
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0
-           )::BIGINT AS header_off,
-           (coalesce(sum(36 + plen) OVER (
-              PARTITION BY doc_id ORDER BY i
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-            + 36)::BIGINT AS data_off
-    FROM m
-    """,
-)
-def q_zip_entry_index(spark, sf_dir):
-    """REAL ZIP central-directory walk (operators/zipindex.py): EOCD
-    backward scan → 46-byte central headers → per-member byte extents
-    with local-header cross-verification (APPNOTE.TXT layout) — the
-    range-read index for DOCX/EPUB/JAR-class crawl payloads, with
-    count bombs bounded before any loop."""
-    from ..operators.zipindex import with_synth_zip, zip_entry_index
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return zip_entry_index(with_synth_zip(docs)).drop("crc32")
-
-
-@q(
-    "docx_text_extract",
-    # Closed-form oracle for the WordprocessingML walk: 2+id%3
-    # paragraphs of two <w:t> runs concatenating to
-    # "doc D para K run 1". The engine must find word/document.xml in
-    # the central directory, INFLATE it (method 8, capped zlib), and
-    # parse the <w:p>/<w:t> structure to reproduce the rows.
-    """
-    WITH d AS (SELECT doc_id, 2 + doc_id % 3 AS np
-               FROM documents WHERE doc_id < 64)
-    SELECT doc_id, k.k::INT AS para_idx,
-           ('doc ' || doc_id || ' para ' || k.k || ' run 1') AS text
-    FROM d, unnest(generate_series(0, d.np - 1)) AS k(k)
-    """,
-)
-def q_docx_text_extract(spark, sf_dir):
-    """Distributed DOCX → training text (operators/zipindex.py):
-    central-directory lookup → capped deflate of word/document.xml →
-    per-paragraph <w:t> run concatenation with XML unescaping — the
-    Office-document analogue of pdf_text_extract."""
-    from ..operators.zipindex import docx_text_extract, with_synth_docx
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return docx_text_extract(with_synth_docx(docs))
-
-
-@q(
-    "epub_text_extract",
-    # Closed-form oracle for the OCF/OPF walk: n = 1+id%3 chapters
-    # whose OPF spine lists them in REVERSE manifest order, so
-    # spine_idx s maps to chapter i = n-1-s; stripped/unescaped text
-    # is "doc D ch I heading doc D ch I para &". The engine must chain
-    # container.xml -> OPF -> spine -> deflated XHTML members and
-    # honor spine order (a manifest-order walk fails the hash).
-    """
-    WITH d AS (SELECT doc_id, 1 + doc_id % 3 AS n
-               FROM documents WHERE doc_id < 64)
-    SELECT doc_id, s.s::INT AS spine_idx,
-           ('OEBPS/ch' || (d.n - 1 - s.s) || '.xhtml') AS href,
-           ('doc ' || doc_id || ' ch ' || (d.n - 1 - s.s) || ' heading doc '
-            || doc_id || ' ch ' || (d.n - 1 - s.s) || ' para &') AS text
-    FROM d, unnest(generate_series(0, d.n - 1)) AS s(s)
-    """,
-)
-def q_epub_text_extract(spark, sf_dir):
-    """Distributed EPUB → training text (operators/zipindex.py): OCF
-    container.xml → OPF manifest/spine → per-chapter XHTML tag strip
-    in READING order, through the same capped-deflate ZIP path —
-    completes the ebook/Office document-text family next to
-    pdf_text_extract and docx_text_extract."""
-    from ..operators.zipindex import epub_text_extract, with_synth_epub
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return epub_text_extract(with_synth_epub(docs))
-
-
-@q(
-    "xlsx_text_extract",
-    # Closed-form oracle for the SpreadsheetML walk: n = 2+id%3 sheet
-    # rows, column A = shared-string pointers to "doc D r R" (the last
-    # <si> split into two <r> runs the engine must concatenate),
-    # column B = literal numerics 10*id+r. The engine must inflate
-    # BOTH members, resolve t="s" indirection, and parse A1 refs.
-    """
-    WITH d AS (SELECT doc_id, 2 + doc_id % 3 AS n
-               FROM documents WHERE doc_id < 64)
-    SELECT doc_id, ('A' || (r.r + 1)) AS cell_ref, r.r::INT AS row_idx,
-           0::INT AS col_idx, 's' AS kind,
-           ('doc ' || doc_id || ' r ' || r.r) AS text
-    FROM d, unnest(generate_series(0, d.n - 1)) AS r(r)
-    UNION ALL
-    SELECT doc_id, ('B' || (r.r + 1)), r.r::INT, 1::INT, 'n',
-           (10 * doc_id + r.r)::VARCHAR
-    FROM d, unnest(generate_series(0, d.n - 1)) AS r(r)
-    """,
-)
-def q_xlsx_text_extract(spark, sf_dir):
-    """Distributed XLSX → tabular text (operators/zipindex.py):
-    capped-deflate of sharedStrings + sheet1, t="s" indirection
-    resolved (dangling pointers refuse the document), A1 refs parsed
-    to row/col — completes the OOXML family next to
-    docx_text_extract."""
-    from ..operators.zipindex import with_synth_xlsx, xlsx_text_extract
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return xlsx_text_extract(with_synth_xlsx(docs))
-
-
-@q(
-    "tar_entry_index",
-    # Closed-form oracle for the ustar walk: n = 2+id%4 members
-    # "m{i}.txt" of 10+(id*3+i*7)%30 bytes — all under one data block,
-    # so header i sits at exactly 1024*i and data at 1024*i+512. The
-    # engine must parse octal sizes and verify every header checksum
-    # (checksum field counted as spaces) to reproduce the rows.
-    """
-    WITH d AS (SELECT doc_id, 2 + doc_id % 4 AS n
-               FROM documents WHERE doc_id < 64)
-    SELECT doc_id, i.i::INT AS entry_idx,
-           ('m' || i.i || '.txt') AS name,
-           (10 + (doc_id * 3 + i.i * 7) % 30)::BIGINT AS size,
-           '0' AS typeflag,
-           (1024 * i.i)::BIGINT AS header_off,
-           (1024 * i.i + 512)::BIGINT AS data_off
-    FROM d, unnest(generate_series(0, d.n - 1)) AS i(i)
-    """,
-)
-def q_tar_entry_index(spark, sf_dir):
-    """REAL POSIX-ustar archive walk (operators/tarindex.py): 512-byte
-    headers, octal size fields, per-header checksum verification,
-    512-grid member skips — per-member byte extents for .tar dataset
-    dumps, synthesized archives cross-validated by stdlib tarfile."""
-    from ..operators.tarindex import tar_entry_index, with_synth_tar
-
-    docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select(
-        "doc_id"
-    )
-    return tar_entry_index(with_synth_tar(docs))
