@@ -1,4 +1,4 @@
-"""Dedup + similarity + textstats + multimodal operator semantics."""
+"""Dedup + similarity + textstats operator semantics."""
 
 from __future__ import annotations
 
@@ -20,11 +20,6 @@ from web_scraper_spark.operators.dedup import (
     minhash_signatures,
     shingles,
     simhash,
-)
-from web_scraper_spark.operators.multimodal import (
-    binary_meta,
-    decode_features,
-    frame_sample,
 )
 from web_scraper_spark.operators.similarity import (
     cosine,
@@ -169,26 +164,6 @@ def test_textstats_basics(spark):
     assert 0.0 <= rows[0].q <= 1.0
 
 
-def test_multimodal_meta_and_decode(spark):
-    rows = [
-        (1, b"\x89PNG\r\n" + b"\x00" * 100),
-        (2, b"\xff\xd8\xff\xe0" + b"\x10" * 50),
-        (3, b"plain text bytes"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, data binary")
-    meta = {r.doc_id: r for r in binary_meta(df, "data").collect()}
-    assert meta[1].format == "png" and meta[2].format == "jpeg"
-    assert meta[3].format == "unknown"
-    assert meta[1].n_bytes == 106
-
-    feats = {r.doc_id: r for r in decode_features(df, "data", "doc_id").collect()}
-    assert len(feats[1].feature) == 8
-    assert feats[2].n_frames == 1
-    # deterministic: same input → same feature
-    feats2 = {r.doc_id: r for r in decode_features(df, "data", "doc_id").collect()}
-    assert feats[1].feature == feats2[1].feature
-
-
 def test_ngram_dup_fraction(spark):
     from web_scraper_spark.functions.textstats import ngram_dup_fraction
 
@@ -248,37 +223,6 @@ def test_ivf_topk_recall_and_plan(spark):
     total = sum(len(s) for s in exact_sets.values())
     recall = hits / total
     assert recall >= 0.5, f"recall@5 {recall:.2f} ({hits}/{total})"
-
-
-def test_frame_sample_shape_and_determinism(spark):
-    rows = [
-        (1, bytes(range(256)) * 20),  # 5120 bytes -> 5 frames, sample 4
-        (2, b"ab"),  # 1 short frame
-        (3, b""),  # empty -> no rows
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, data binary")
-    out = frame_sample(df, "data", "doc_id", frame_size=1024, max_frames=4)
-    got = sorted(out.collect(), key=lambda r: (r.doc_id, r.frame_idx))
-    by_doc: dict[int, list] = {}
-    for r in got:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    # 5 frames sampled at (i*5)//4 -> global indices 0,1,2,3
-    assert [r.frame_idx for r in by_doc[1]] == [0, 1, 2, 3]
-    assert all(r.frame_len == 1024 for r in by_doc[1])
-    assert by_doc[1][0].offset == 0 and by_doc[1][3].offset == 3072
-    # mean of bytes 0..255 repeated = 127.5 -> 0.5
-    assert by_doc[1][0].byte_mean == pytest.approx(0.5, abs=1e-6)
-    assert by_doc[2][0].frame_len == 2
-    assert 3 not in by_doc
-    with pytest.raises(Exception):
-        frame_sample(df, "data", "doc_id", strict=True).collect()
-
-
-def test_multimodal_strict_stub_raises(spark):
-    df = spark.createDataFrame([(1, b"x")], "doc_id long, data binary")
-    with pytest.raises(Exception) as ei:
-        decode_features(df, "data", "doc_id", strict=True).collect()
-    assert "NotImplementedError" in str(ei.value) or "decode" in str(ei.value)
 
 
 def test_band_buckets_bit_parity_with_hyperplane(spark):
@@ -434,165 +378,3 @@ def test_decontaminate_counts_shared_shingles(spark):
     assert out[2]["n_overlap"] == 1 and not out[2]["contaminated"]
     assert out[3]["n_overlap"] == 0 and not out[3]["contaminated"]
     assert out[4]["n_overlap"] == 0 and not out[4]["contaminated"]
-
-
-def test_multimodal_strict_really_decodes(spark):
-    """strict=True routes through the REAL codec-free decoders: the
-    feature vector carries true pixel/sample statistics and n_frames
-    is the true frame count; only genuinely codec-bound payloads
-    (video/unknown) raise."""
-    from web_scraper_spark.operators.audio import synth_wav_pcm16
-    from web_scraper_spark.operators.jpeg import synth_jpeg
-    from web_scraper_spark.operators.rawmedia import (
-        decode_png_pixels,
-        synth_bmp,
-        synth_gif_pixels,
-        synth_png,
-    )
-
-    rows = [
-        (1, synth_png(1, 10, 6, 3)),
-        (2, synth_gif_pixels(2, 9, 5)),
-        (3, synth_bmp(3, 16, 8, 24)),
-        (4, synth_jpeg(4, 2, 2)),
-        (5, synth_wav_pcm16(5, frames=50, rate=8000, channels=2)),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, data binary")
-    got = {
-        r.doc_id: r
-        for r in decode_features(df, "data", "doc_id", strict=True).collect()
-    }
-    assert got[1].format == "png" and got[1].feature[:3] == [10.0, 6.0, 3.0]
-    px = decode_png_pixels(rows[0][1])
-    assert got[1].feature[3] == pytest.approx(px.mean() / 255.0, abs=1e-5)
-    assert got[2].format == "gif" and got[2].n_frames == 1
-    assert got[3].format == "bmp" and got[3].feature[:3] == [16.0, 8.0, 3.0]
-    assert got[4].format == "jpeg" and got[4].feature[:3] == [16.0, 16.0, 1.0]
-    assert got[5].format == "wav" and got[5].n_frames == 50
-    assert got[5].feature[0] == 2.0  # channels
-
-
-def test_multimodal_strict_frame_sample_real_gif(spark):
-    from web_scraper_spark.operators.rawmedia import (
-        gif_decode_pixels,
-        synth_gif_pixels,
-        synth_png,
-    )
-
-    rows = [(1, synth_gif_pixels(1, 9, 5)), (2, synth_png(2, 10, 6, 3))]
-    df = spark.createDataFrame(rows, "doc_id long, data binary")
-    got = sorted(
-        frame_sample(df, "data", "doc_id", strict=True).collect(),
-        key=lambda r: (r.doc_id, r.frame_idx),
-    )
-    g1 = [r for r in got if r.doc_id == 1]
-    assert len(g1) == 1 and g1[0].frame_idx == 0
-    px = gif_decode_pixels(rows[0][1])
-    assert g1[0].byte_mean == pytest.approx(px.mean() / 255.0, abs=1e-5)
-    # offset points inside the container at the image descriptor (0x2C)
-    assert rows[0][1][g1[0].offset] == 0x2C
-    assert g1[0].frame_len > 0
-    g2 = [r for r in got if r.doc_id == 2]
-    assert len(g2) == 1 and g2[0].frame_len == len(rows[1][1])
-
-
-def test_multimodal_strict_frame_sample_containers(spark):
-    """strict frame_sample yields real coded-byte extents for MP4/
-    WebM/MP3 containers (no pixel claim), sampled evenly."""
-    from web_scraper_spark.operators.audio import mp3_frames, synth_mp3
-    from web_scraper_spark.operators.video import (
-        parse_webm,
-        synth_mp4,
-        synth_webm,
-    )
-
-    rows = [
-        (1, synth_mp4(1, 9)),     # moov-only: extents point past payload
-        (2, synth_webm(2, 7)),    # frames embedded: real byte means
-        (3, synth_mp3(3, 5)),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, data binary")
-    got = sorted(
-        frame_sample(df, "data", "doc_id", strict=True, max_frames=4).collect(),
-        key=lambda r: (r.doc_id, r.frame_idx),
-    )
-    by = {}
-    for r in got:
-        by.setdefault(r.doc_id, []).append(r)
-    # mp4: 9 samples -> 4 sampled at (s*9)//4 = 0,2,4,6
-    assert [r.frame_idx for r in by[1]] == [0, 2, 4, 6]
-    assert all(r.byte_mean == 0.0 for r in by[1])  # index-only file
-    # webm: extents are inside the payload -> real byte means
-    p = parse_webm(rows[1][1])
-    assert [r.frame_idx for r in by[2]] == [0, 1, 3, 5]
-    for r in by[2]:
-        off, ln = p["frames"][r.frame_idx][2], p["frames"][r.frame_idx][3]
-        assert (r.offset, r.frame_len) == (off, ln)
-        chunk = rows[1][1][off : off + ln]
-        assert r.byte_mean == pytest.approx(
-            sum(chunk) / len(chunk) / 255.0, abs=1e-5
-        )
-    # mp3: 5 frames -> 4 sampled; extents match the walker
-    fr = mp3_frames(rows[2][1])
-    for r in by[3]:
-        assert (r.offset, r.frame_len) == (fr[r.frame_idx][1], fr[r.frame_idx][2])
-
-
-def test_sniff_media_format_routes_all_eight(spark):
-    from web_scraper_spark.operators.multimodal import (
-        sniff_media_format,
-        with_synth_mixed_media,
-    )
-
-    docs = spark.range(0, 64).select(F.col("id").alias("doc_id"))
-    got = (
-        with_synth_mixed_media(docs)
-        .select("doc_id", sniff_media_format(F.col("data")).alias("fmt"))
-        .collect()
-    )
-    want = ["png", "gif", "bmp", "jpeg", "wav", "mp4", "mp3", "webm"]
-    assert all(r.fmt == want[r.doc_id % 8] for r in got)
-    # unknown bytes stay unknown; bare elementary streams route to
-    # their walkers (Annex-B h264, TS grid, ADTS aac, AV1 low-overhead)
-    from web_scraper_spark.operators.audio import synth_adts
-    from web_scraper_spark.operators.av1 import synth_av1
-    from web_scraper_spark.operators.flac import synth_flac
-    from web_scraper_spark.operators.mpegts import synth_ts
-
-    extra = spark.createDataFrame(
-        [
-            (1, b"\x00\x01\x02\x03junkjunk", "unknown"),
-            (2, b"\x00\x00\x00\x01\x67abc", "h264"),
-            (3, b"\x00\x00\x01\x41abc", "h264"),
-            (4, synth_ts(4, 3), "mpegts"),
-            (5, b"\x47" + b"junk" * 60, "unknown"),  # lone sync, no grid
-            (6, synth_adts(6, 3)[10 + 6 % 7 :], "aac"),  # raw, no ID3
-            (7, b"\xff\xfb" + b"x" * 40, "mp3"),  # MPEG audio stays mp3
-            (8, synth_av1(8, 4), "av1"),
-            (9, synth_flac(9, 3), "flac"),
-        ],
-        "doc_id long, data binary, want string",
-    )
-    for r in extra.select(
-        sniff_media_format(F.col("data")).alias("f"), "want"
-    ).collect():
-        assert r.f == r.want
-
-
-def test_multimodal_strict_container_features(spark):
-    from web_scraper_spark.operators.audio import synth_mp3
-    from web_scraper_spark.operators.video import synth_mp4, synth_webm
-
-    rows = [(1, synth_mp4(1, 9)), (2, synth_webm(2, 7)), (3, synth_mp3(3, 5))]
-    df = spark.createDataFrame(rows, "doc_id long, data binary")
-    got = {
-        r.doc_id: r
-        for r in decode_features(df, "data", "doc_id", strict=True).collect()
-    }
-    assert got[1].format == "mp4" and got[1].n_frames == 9
-    assert got[1].feature[0] == 9.0          # n_samples
-    assert got[1].feature[1] == 3.0          # keyframes every 4th of 9
-    assert got[1].feature[4:6] == [32.0, 32.0]  # 16*(1+1%5), 16*(1+1%3)
-    assert got[2].format == "webm" and got[2].n_frames == 7
-    assert got[2].feature[1] == 2.0          # keyframes at k==0 of 2 clusters
-    assert got[3].format == "mp3" and got[3].n_frames == 5

@@ -1,15 +1,19 @@
 """Driver contract names, checked without a Spark session: every name the
 check-first list, ``bench.HEADLINE`` and ``tools/dump_plans.HEADLINE``
 cite must be a registered battery entry, so a deleted entry cannot
-silently drop out of any of them."""
+silently drop out of any of them. Every package module must import, so
+a deleted module cannot leave a dangling import behind."""
 
 from __future__ import annotations
 
+import importlib
 import importlib.util
 import os
+import pkgutil
 
 import __spark_entry__ as entry
 import bench
+import web_scraper_spark
 from web_scraper_spark.queries.battery import REGISTRY
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -41,3 +45,22 @@ def test_queries_cover_registry_exactly():
     assert set(qs) == set(REGISTRY)
     assert list(qs)[: len(entry._CHECK_FIRST)] == entry._CHECK_FIRST
     assert set(entry.oracle_sql()) <= set(qs)
+
+
+def test_every_package_module_imports():
+    names = [
+        m.name
+        for m in pkgutil.walk_packages(
+            web_scraper_spark.__path__, "web_scraper_spark."
+        )
+    ]
+    assert len(names) > 1
+    for name in names:
+        importlib.import_module(name)
+
+
+def test_coverage_ledger_defaults_to_newest_round(tmp_path):
+    for r in (1, 2, 5):
+        (tmp_path / f"CORRECTNESS_r{r:02d}.json").write_text("{}")
+    (tmp_path / "CORRECTNESS_r09.json.bak").write_text("{}")
+    assert _load_tool("coverage_ledger").latest_round(str(tmp_path)) == 5

@@ -15,65 +15,11 @@ import zlib
 import numpy as np
 
 from web_scraper_spark.operators.cuckoo import _SLOTS, _insert_one
-from web_scraper_spark.operators.jpeg import (
-    decode_jpeg_coefficients,
-    decode_jpeg_pixels,
-    synth_jpeg,
-)
 from web_scraper_spark.operators.rawmedia import (
     _PNG_SIG,
     _png_chunk,
     decode_png_pixels,
 )
-from web_scraper_spark.operators.video import parse_mp4, synth_mp4
-
-
-# ---------------------------------------------------------------------------
-# MP4: fixed-size stsz count is 4 untrusted bytes (up to 2^32)
-# ---------------------------------------------------------------------------
-
-
-def _patch_stsz_fixed(mp4: bytes, fixed: int, count: int) -> bytes:
-    """Rewrite the (sole) stsz box's fixed-size + count fields."""
-    at = mp4.index(b"stsz")
-    # box type at `at`; payload = version+flags(4) fixed(4) count(4)
-    out = bytearray(mp4)
-    out[at + 8 : at + 16] = struct.pack(">II", fixed, count)
-    return bytes(out)
-
-
-def test_mp4_fixed_stsz_count_bounded():
-    base = synth_mp4(5, 6)
-    # huge count from a crafted header: reject, don't allocate 2^32 list
-    assert parse_mp4(_patch_stsz_fixed(base, 100, 0xFFFFFFFF)) is None
-    assert parse_mp4(_patch_stsz_fixed(base, 1, len(base) + 1)) is None
-    # a plausible fixed-size table still parses and expands correctly
-    ok = parse_mp4(_patch_stsz_fixed(base, 100, 6))
-    assert ok is not None and ok[0]["sizes"] == [100] * 6
-
-
-# ---------------------------------------------------------------------------
-# JPEG: SOF0 dims are untrusted; coefficient arrays must be bounded by
-# what the entropy payload could actually encode
-# ---------------------------------------------------------------------------
-
-
-def _patch_sof0_dims(jpg: bytes, fh: int, fw: int) -> bytes:
-    at = jpg.index(b"\xff\xc0")
-    out = bytearray(jpg)
-    out[at + 5 : at + 9] = struct.pack(">HH", fh, fw)
-    return bytes(out)
-
-
-def test_jpeg_sof0_dims_bounded():
-    base = synth_jpeg(3, 2, 2)
-    # 65535x65535 declared in a few-hundred-byte payload: ~1.1e9 blocks
-    # cannot be real — reject before allocating ~35 GB
-    bomb = _patch_sof0_dims(base, 0xFFFF, 0xFFFF)
-    assert decode_jpeg_coefficients(bomb) is None
-    assert decode_jpeg_pixels(bomb) is None
-    # the untouched image still decodes (bound is loose for real data)
-    assert decode_jpeg_pixels(base) is not None
 
 
 # ---------------------------------------------------------------------------

@@ -5,7 +5,8 @@ correctness file lands:
 
     python tools/coverage_ledger.py [--round N]
 
-``--round N`` labels the in-window expectation column (default 4).
+``--round N`` labels the in-window expectation column and caps the
+history read (default: the newest ``CORRECTNESS_r0N.json`` on disk).
 """
 
 from __future__ import annotations
@@ -29,9 +30,18 @@ STALE_GREEN = {
 }
 
 
+def latest_round(directory: str) -> int:
+    """Largest N for which ``CORRECTNESS_r0N.json`` exists in directory."""
+    return max(
+        int(m.group(1))
+        for f in os.listdir(directory)
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f))
+    )
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--round", type=int, default=4)
+    ap.add_argument("--round", type=int, default=latest_round(REPO))
     args = ap.parse_args()
 
     hist: dict[str, list[int]] = {}

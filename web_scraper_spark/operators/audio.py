@@ -1,13 +1,9 @@
-"""REAL audio decode for the multimodal tier — WAV/RIFF PCM, no media
-libraries, no stand-in.
+"""REAL audio decode — WAV/RIFF PCM, no media libraries, no stand-in.
 
-The multimodal contract (operators/multimodal.py) honestly stubs
-pixel/frame decode because no image/video codec library ships in this
-container. PCM audio needs none: the WAV container (RIFF chunks,
+PCM audio needs no codec library: the WAV container (RIFF chunks,
 Microsoft WAVEFORMAT) is a published byte layout and the payload is raw
 little-endian samples, so header walk + ``numpy.frombuffer`` IS a full
-decoder. This module closes the "real decode behind the multimodal
-contract" gap for the audio modality end-to-end:
+decoder. This module decodes the audio modality end-to-end:
 
 - ``synth_wav_pcm16``: deterministic WAV writer (fixture source — the
   byte-level inverse of the decoder, seeded by ``doc_id`` so the DuckDB
@@ -21,7 +17,7 @@ contract" gap for the audio modality end-to-end:
   zero-crossing rate. One Python stage, no shuffle; scales exactly like
   the html extraction stage (bounded per-task batch, columnar in/out).
 - ``audio_frame_windows``: fixed-length frame windows (the audio analog
-  of video frame-sampling) with per-window RMS/peak — explodes only
+  of frame-sampling) with per-window RMS/peak — explodes only
   decoded windows, never raw bytes.
 
 Scale notes: payload bytes never shuffle — both stages run on the scan
@@ -355,7 +351,7 @@ def with_synth_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 # header is 4 published bytes (ISO 11172-3 §2.4.1.3) that fully
 # determine the frame's byte length, so walking sync words yields the
 # exact per-frame byte index + duration a 100 TB audio pipeline needs
-# before any decoder runs — the audio analog of video.mp4_frame_index.
+# before any decoder runs.
 # ---------------------------------------------------------------------------
 
 # MPEG-1 Layer III bitrate table (kbit/s), index 1..14; 0=free, 15=bad

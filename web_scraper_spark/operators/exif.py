@@ -19,8 +19,7 @@ payloads yield nothing. Value rendering is deterministic text
 
 Reference scope: the reference repo has no image path (SURVEY.md
 §2.8); this module is part of the beyond-reference multimodal
-mandate, sitting next to the JPEG pixel decoder (operators/jpeg.py)
-as its metadata front-end.
+mandate: a metadata front-end that needs no JPEG pixel decoder.
 """
 
 from __future__ import annotations

@@ -1,9 +1,8 @@
 """ID3v2 tag index — REAL ID3v2.3/2.4 frame walk, codec-free (the
 published id3.org ID3v2.3.0 / ID3v2.4.0 informal standards).
 
-ID3v2 is the metadata envelope prepended to most MP3 files on the web
-(the router in multimodal.py already sniffs the ``ID3`` magic to
-route them as mp3). The tag structure is a fixed byte layout: a
+ID3v2 is the metadata envelope prepended to most MP3 files on the web.
+The tag structure is a fixed byte layout: a
 10-byte header with a 28-bit SYNCSAFE size (7 bits per byte, high bit
 clear — the one genuinely ID3-specific encoding), then frames of
 4-char id + 4-byte size (plain big-endian in v2.3, syncsafe in v2.4)

@@ -2,9 +2,7 @@
 
 Companion to ``operators/audio.py`` (real WAV/PCM decode): three more
 modalities where the published container layout plus the standard
-library alone are a complete decoder, shrinking the honest stub
-surface of ``operators/multimodal.py`` to formats that genuinely need
-a codec (JPEG pixel data, video):
+library alone are a complete decoder:
 
 - **BMP (Windows DIB, BI_RGB)** — uncompressed 24/32-bit pixels are raw
   bytes behind a fixed header: ``parse_bmp`` + ``decode_bmp_pixels``
@@ -584,7 +582,7 @@ def gif_frame_index(
 ) -> DataFrame:
     """Frame-sampling index over GIF payloads: one row per frame with
     position, size, and display delay. Undecodable payloads emit
-    nothing (pair with ``binary_meta`` to account for them)."""
+    nothing."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:

@@ -3,7 +3,7 @@ format (W3C; the caption/subtitle format of HTML5 ``<track>`` and HLS).
 
 Captions are the text modality attached to web video: a video-training
 pipeline extracts cue timings + text to align transcripts with frame
-extents (the elementary-stream indexes in h264/vp9/av1/mpegts).
+extents (e.g. the VP9 superframe index in vp9.py).
 This stage parses cue blocks — optional cue identifier line, the
 ``hh:mm:ss.mmm --> hh:mm:ss.mmm`` timing line (hours optional, cue
 settings after the end stamp ignored per spec), payload lines until a

@@ -5,10 +5,9 @@ a single block payload may pack several coded frames as a
 *superframe* — frames back-to-back, then a trailing index whose
 marker byte (0b110 | bytes_per_size-1 | frame_count-1) is repeated at
 both ends of the index (VP9 Bitstream & Decoding Process
-Specification, Annex B — public spec). The container index
-(operators/video.py webm_frame_index) stops at the block; this walk
-splits the block into its real per-frame byte extents, completing the
-H.264/HEVC/AV1 elementary-stream family for the third web codec.
+Specification, Annex B — public spec). A WebM container index stops
+at the block; this walk splits the block into its real per-frame byte
+extents.
 
 Per frame it also reads the first uncompressed-header bits (§6.2:
 frame_marker, profile, show_existing_frame, frame_type, show_frame) —

@@ -1,8 +1,8 @@
 """WebP chunk index — REAL RIFF container walk + VP8/VP8L/VP8X header
 decode, codec-free (the published WebP container + bitstream specs).
 
-WebP is the remaining major web image format next to PNG/GIF/JPEG
-(rawmedia.py, jpeg.py). Full pixel decode needs the VP8 boolean
+WebP is the remaining major web image format next to PNG/GIF
+(rawmedia.py) and JPEG. Full pixel decode needs the VP8 boolean
 arithmetic coder; the CONTAINER STRUCTURE does not: the RIFF chunk
 grammar (fourcc + le32 size + even-padding), the lossy ``VP8 `` frame
 tag (3-byte tag, 0x9d012a start code, 14-bit width/height), the

@@ -22,9 +22,9 @@ story. Selection is a pure function of the previous snapshot, so a
 resumed round re-derives the identical set (SURVEY.md §4.2).
 
 Scale notes (10^10 frontier):
-- candidates/frontier stay bucket-partitioned by ``pmod(url_hash, B)``;
-  the discovery anti-join (the URL-seen test) and merge-back are then
-  co-partitioned joins.
+- the snapshot is written by ``host_bucket`` and read back unpartitioned,
+  so the discovery anti-join (URL-seen test) and MoR merge-back shuffle
+  both sides; ROADMAP item 6 measures whether that matters at scale.
 - the politeness window shuffles by host once; its budget output bounds
   per-host rows, killing hot-host skew before the fetch.
 - the fetch ships only the success rows' 64-bit keys to the pages scan

@@ -21,28 +21,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.prices import durum_flag, format_date_for_api, parse_price
-from ..functions.textstats import (
-    EN_STOPWORDS,
-    TR_STOPWORDS,
-    bpe_ish_token_count,
-    fingerprint,
-    lang_id,
-    quality_features,
-    quality_score,
-    token_count,
-)
 from ..functions.urls import canonicalize_url, url_hash
-from ..operators.dedup import (
-    exact_duplicates,
-    jaccard_pairs,
-    lsh_candidate_pairs,
-    minhash_signatures,
-    shingles,
-    simhash,
-)
 from ..operators.politeness import split_robots
 from ..operators.seen import filter_unseen
-from ..operators.similarity import cosine_topk, lsh_bucket_topk
 
 Query = Callable[[SparkSession, str], DataFrame]
 REGISTRY: dict[str, tuple[Query, str | None]] = {}

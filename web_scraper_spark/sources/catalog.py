@@ -17,10 +17,12 @@ jar, so the same contract is implemented over partitioned parquet:
   re-run of round r replaces exactly round r's partition and nothing
   else.
 
-At 10^10-frontier scale the snapshot write is partitioned by
-``bucket_id = pmod(url_hash, N)`` so a MERGE that touches few buckets
-rewrites few files (storage-partitioned-join-friendly layout), and the
-seen/frontier anti-join can be co-partitioned on the same key.
+The catalog writes whatever layout the caller hands it and records no
+partitioning: the crawl round writes its frontier snapshot
+``repartition(n_buckets, "host_bucket")``, and a plain parquet read
+carries no partitioning, so the discovery anti-join and the MoR
+merge-back shuffle both sides; they are not co-partitioned. ROADMAP
+item 6 measures whether that matters at frontier scale.
 
 If an Iceberg runtime is on the classpath,
 ``sources/iceberg_catalog.IcebergCatalog`` (same interface) maps these
