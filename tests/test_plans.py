@@ -129,67 +129,3 @@ def test_dump_plans_politeness_and_seen_are_fresh(spark):
     assert "WindowGroupLimit" in pol and "Partial" in pol
     seen = plan_of(REGISTRY["seen_antijoin"][0](spark, SF))
     assert "LeftAnti" in seen
-
-
-def test_extraction_split_target_floors_udf_dominated_scans():
-    """A byte-compact pages table must still split into >= 4 waves x
-    parallelism extraction tasks (the bench world's 149 MB / 64 files
-    coalesced to 13 splits at the 32 MB default, starving local[8]'s
-    dominant stage — plans/rounds.py extraction_split_target)."""
-    from web_scraper_spark.plans.rounds import (
-        _parse_spark_bytes,
-        extraction_split_target,
-    )
-
-    mb = 1 << 20
-    # the measured bench-world shape: 149 MB, 64 files, 32 MB splits,
-    # 4 MB open cost, 8 cores -> must lower the split size
-    hint = extraction_split_target(149 * mb, 64, 8, 32 * mb, 4 * mb)
-    assert hint is not None
-    tgt, open_cost = hint
-    # 4 waves x 8 cores = 32 splits minimum
-    assert tgt <= (149 * mb) // 32
-    assert tgt >= 1 * mb  # never absurdly small
-    assert open_cost <= tgt // 8 or open_cost == 4096
-    # splits the new settings yield: >= 32
-    assert (149 * mb) // tgt >= 32
-
-    # a big input at the same settings: no hint (defaults already split)
-    assert extraction_split_target(100 * (1 << 30), 800, 8, 32 * mb, 4 * mb) is None
-    # tiny input where the 1 MB floor binds: floor respected
-    hint2 = extraction_split_target(8 * mb, 4, 32, 32 * mb, 4 * mb)
-    assert hint2 is not None and hint2[0] == 1 * mb
-
-    assert _parse_spark_bytes("33554432") == 32 * mb
-    assert _parse_spark_bytes("128MB") == 128 * mb
-    assert _parse_spark_bytes("4m") == 4 * mb
-    assert _parse_spark_bytes("1048576b") == 1 * mb
-
-
-def test_extraction_split_scope_sets_and_restores(spark, tmp_path):
-    """The scope lowers maxPartitionBytes/openCostInBytes for a small
-    file-backed frame and restores the previous values on exit."""
-    from web_scraper_spark.plans.rounds import _extraction_split_scope
-
-    p = str(tmp_path / "pages")
-    spark.range(0, 10000).selectExpr(
-        "id", "repeat('x', 200) as html"
-    ).repartition(16).write.mode("overwrite").parquet(p)
-    df = spark.read.parquet(p)
-
-    key = "spark.sql.files.maxPartitionBytes"
-    before = spark.conf.get(key)
-    with _extraction_split_scope(spark, df):
-        inside = spark.conf.get(key)
-        from web_scraper_spark.plans.rounds import _parse_spark_bytes
-
-        assert _parse_spark_bytes(inside) <= _parse_spark_bytes(before)
-    assert spark.conf.get(key) == before
-
-    # None pages (live mode) and non-file frames are no-ops
-    with _extraction_split_scope(spark, None):
-        assert spark.conf.get(key) == before
-    joined = df.join(spark.range(5), "id")
-    with _extraction_split_scope(spark, joined):
-        pass
-    assert spark.conf.get(key) == before

@@ -3,7 +3,7 @@ snapshot time travel."""
 
 from __future__ import annotations
 
-import os
+import json
 import shutil
 import tempfile
 
@@ -26,7 +26,12 @@ def env(spark):
     paths = write_world_parquet(world, tmp + "/world")
     seeds = spark.read.parquet(paths["seeds"])
     robots = spark.read.parquet(paths["robots"])
-    pages = resolve_pages(spark.read.parquet(paths["pages"]))
+    # resolve once at ingest, as resolve_pages documents: every round
+    # then reads the pages table as a plain file scan
+    resolve_pages(spark.read.parquet(paths["pages"])).write.parquet(
+        tmp + "/pages_resolved"
+    )
+    pages = spark.read.parquet(tmp + "/pages_resolved")
     yield spark, cfg, world, tmp, seeds, robots, pages
     shutil.rmtree(tmp, ignore_errors=True)
 
@@ -119,49 +124,128 @@ def test_engine_equals_oracle_after_resume(env):
     assert eng_seen == oracle.seen
 
 
-class _CrashAtCommit(ParquetSnapshotCatalog):
-    """Raises at ``commit_round`` of one round, once: every data write of
-    that round has landed, its manifest has not."""
+class _CrashingCatalog(ParquetSnapshotCatalog):
+    """Records the label of every mutating call (the table written, or
+    the method name); once armed with ``k``, raises before the k-th
+    (0-based) call after arming, once. Everything before it has landed,
+    nothing from it on has."""
 
-    def __init__(self, spark, root, crash_round):
+    def __init__(self, spark, root):
         super().__init__(spark, root)
-        self.crash_round = crash_round
+        self.calls: list[str] = []
+        self.crash_at: int | None = None
+
+    def arm(self, k):
+        self.calls, self.crash_at = [], k
+
+    def _call(self, label):
+        if self.crash_at == len(self.calls):
+            self.crash_at = None
+            raise RuntimeError(f"crash before {label}")
+        self.calls.append(label)
+
+    def write_snapshot(self, name, df, version, partition_by=None):
+        self._call(name)
+        return super().write_snapshot(name, df, version, partition_by)
+
+    def write_round_partition(self, name, df):
+        self._call(name)
+        return super().write_round_partition(name, df)
 
     def commit_round(self, round_id, info):
-        if round_id == self.crash_round:
-            self.crash_round = None
-            raise RuntimeError(f"crash at commit_round({round_id})")
+        self._call("commit_round")
         return super().commit_round(round_id, info)
 
+    def drop_log_partitions(self, name, upto_round):
+        self._call("drop_log_partitions")
+        return super().drop_log_partitions(name, upto_round)
 
-def test_mor_compaction_crash_at_commit_resumes_exactly(env):
-    """A merge-on-read compaction round that crashes at its manifest
-    commit must resume to the uninterrupted state: the deltas it folded
-    stay readable until the commit lands."""
-    spark, cfg, world, tmp, seeds, robots, pages = env
+    def expire_snapshots(self, name, keep_last):
+        self._call("expire_snapshots")
+        return super().expire_snapshots(name, keep_last)
 
-    def engine(catalog):
-        return CrawlEngine(
-            spark, catalog, cfg.politeness, n_buckets=8,
-            frontier_mode="mor", mor_compact_every=2,
-        )
 
-    cat_a = ParquetSnapshotCatalog(spark, tmp + "/state_mor_a")
-    eng_a = engine(cat_a)
-    eng_a.init_frontier(seeds, cfg.period_start, cfg.period_end)
-    eng_a.run(3, pages, robots, seeds)
+# round 2's mutating catalog calls, in order, per mor_compact_every:
+# 3 makes it a delta round, 2 a compaction round
+ROUND2_CALLS = {
+    3: ["extractions", "fetch_log", "frontier_delta", "commit_round"],
+    2: ["extractions", "fetch_log", "frontier", "commit_round",
+        "drop_log_partitions"],
+}
+CRASH_CELLS = [
+    pytest.param(every, k, id=f"{'delta' if every == 3 else 'compaction'}-{label}")
+    for every, labels in ROUND2_CALLS.items()
+    for k, label in enumerate(labels)
+]
 
-    cat_b = _CrashAtCommit(spark, tmp + "/state_mor_b", crash_round=2)
-    eng_b = engine(cat_b)
-    eng_b.init_frontier(seeds, cfg.period_start, cfg.period_end)
-    with pytest.raises(RuntimeError, match="crash at commit_round"):
-        eng_b.run(2, pages, robots, seeds)
-    assert cat_b.last_committed_round() == 1
-    eng_b.run(3, pages, robots, seeds)
 
-    def rows(eng):
+def _mor_engine(env, catalog, every):
+    spark, cfg = env[0], env[1]
+    return CrawlEngine(
+        spark, catalog, cfg.politeness, n_buckets=8,
+        frontier_mode="mor", mor_compact_every=every,
+    )
+
+
+def _crawl_state(eng, as_of):
+    """Frontier (all FRONTIER_COLS), fetch_log and extractions rows."""
+
+    def rows(df):
         return sorted(
-            tuple(r) for r in eng._read_frontier(3).select(*FRONTIER_COLS).collect()
+            json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+            for r in df.collect()
         )
 
-    assert rows(eng_b) == rows(eng_a)
+    return {
+        "frontier": rows(eng._read_frontier(as_of).select(*FRONTIER_COLS)),
+        "fetch_log": rows(eng.catalog.read_log("fetch_log")),
+        "extractions": rows(eng.catalog.read_log("extractions")),
+    }
+
+
+@pytest.fixture(scope="module")
+def mor_reference(env):
+    """Per ``mor_compact_every``, one uninterrupted 3-round crawl:
+    (a copy of its state after round 1, round 2's mutating calls, its
+    state after round 3)."""
+    spark, cfg, world, tmp, seeds, robots, pages = env
+    cache = {}
+
+    def get(every):
+        if every not in cache:
+            cat = _CrashingCatalog(spark, f"{tmp}/mor_ref_{every}")
+            eng = _mor_engine(env, cat, every)
+            eng.init_frontier(seeds, cfg.period_start, cfg.period_end)
+            eng.run(1, pages, robots, seeds)
+            after_round1 = f"{tmp}/mor_ref_{every}_r1"
+            shutil.copytree(cat.root, after_round1)
+            cat.arm(None)
+            eng.run_round(2, pages, robots, seeds)
+            round2_calls = list(cat.calls)
+            eng.run(3, pages, robots, seeds)
+            cache[every] = (after_round1, round2_calls, _crawl_state(eng, 3))
+        return cache[every]
+
+    return get
+
+
+@pytest.mark.parametrize("every,k", CRASH_CELLS)
+def test_mor_crash_at_every_write_resumes_exactly(env, mor_reference, every, k):
+    """A merge-on-read round that crashes before any one of its
+    mutating catalog calls must resume to the uninterrupted state: the
+    frontier (discovery_round included), fetch_log and extractions
+    equal. Folded deltas stay readable until the round commit lands."""
+    spark, cfg, world, tmp, seeds, robots, pages = env
+    after_round1, round2_calls, expected = mor_reference(every)
+    assert round2_calls == ROUND2_CALLS[every]
+
+    cat = _CrashingCatalog(spark, f"{tmp}/mor_crash_{every}_{k}")
+    shutil.copytree(after_round1, cat.root, dirs_exist_ok=True)
+    eng = _mor_engine(env, cat, every)
+    cat.arm(k)
+    with pytest.raises(RuntimeError, match=f"crash before {round2_calls[k]}"):
+        eng.run_round(2, pages, robots, seeds)
+    assert cat.calls == round2_calls[:k]
+    assert cat.last_committed_round() == (2 if "commit_round" in cat.calls else 1)
+    eng.run(3, pages, robots, seeds)
+    assert _crawl_state(eng, 3) == expected

@@ -10,7 +10,8 @@ merge-on-read and revisit-on mode, and pin that the candidate-side
 probe (a co-grouped bloom ``applyInPandas``) and its ``seen_bloom``
 table stay gone. The same crawls pin the round's one html-fetch path:
 a broadcast key left-semi into the pages scan, with extraction fused
-to that scan so html crosses no exchange.
+to that scan so html crosses no exchange, and the exact set of tables
+each mode writes.
 """
 
 from __future__ import annotations
@@ -35,6 +36,13 @@ MODES = {
     "cow": {},
     "mor": {"frontier_mode": "mor", "mor_compact_every": 2},
     "revisit": {"revisit": RevisitPolicy(default_interval=2, max_interval=4)},
+}
+
+_COW_TABLES = {"frontier", "extractions", "fetch_log"}
+ROUND_TABLES = {
+    "cow": _COW_TABLES,
+    "mor": _COW_TABLES | {"frontier_delta"},
+    "revisit": _COW_TABLES | {"revisit_stats"},
 }
 
 
@@ -123,6 +131,14 @@ def test_no_candidate_side_seen_probe(crawl):
     assert "seen_bloom" not in catalog.written
     assert not catalog.exists("seen_bloom")
     assert not os.path.exists(os.path.join(catalog.root, "seen_bloom"))
+
+
+def test_round_writes_exactly_its_tables(crawl, request):
+    """Every table a round writes is read back by a later step or a
+    resume; a write-only table adds Spark jobs to every round and fails
+    this."""
+    _, catalog, _ = crawl
+    assert catalog.written == ROUND_TABLES[request.node.callspec.params["crawl"]]
 
 
 def test_fetch_semi_joins_keys_into_pages_scan(crawl):

@@ -17,8 +17,7 @@ Layout
   politeness, priority, robots, retry, dedup, similarity, compare).
 - ``sources``    : table catalog (parquet snapshot catalog w/ Iceberg-ready
   abstraction), synthetic fixtures generator, pages source.
-- ``plans``      : crawl-round orchestration, checkpoint/resume, metrics.
-- ``streaming``  : Structured Streaming variant of the round (availableNow).
+- ``plans``      : crawl-round orchestration, checkpoint/resume, round manifests.
 - ``oracle``     : pure-Python sequential reference oracle (the parity spec).
 """
 

@@ -88,131 +88,6 @@ FRONTIER_COLS = [
 _TIMEOUT_ERROR = "max_request_number_reached"  # nausys_tracker.py:299
 
 
-def _parse_spark_bytes(v: str) -> int:
-    """Parse a Spark byte-size conf value ("33554432", "128MB", "32m")."""
-    s = str(v).strip().lower()
-    mult = 1
-    for suffix, m in (
-        ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30), ("tb", 1 << 40),
-        ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("t", 1 << 40),
-        ("b", 1),
-    ):
-        if s.endswith(suffix):
-            s, mult = s[: -len(suffix)], m
-            break
-    return int(float(s) * mult)
-
-
-def _scan_input_bytes(spark: SparkSession, df: DataFrame, max_files: int = 4096):
-    """(total bytes, file count) of a file-backed DataFrame's input.
-
-    Metadata-only (no Spark job): file statuses via the Hadoop FS
-    client. Returns None when the frame is not a plain file scan or has
-    more than ``max_files`` files — large inputs split plenty at the
-    default size and don't need the hint (and per-file py4j calls would
-    be driver-side O(files)).
-    """
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files or len(files) > max_files:
-        return None
-    total = 0
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    try:
-        for f in files:
-            path = jvm.org.apache.hadoop.fs.Path(f)
-            fs = path.getFileSystem(hconf)
-            total += fs.getFileStatus(path).getLen()
-    except Exception:
-        return None
-    return total, len(files)
-
-
-def extraction_split_target(
-    total_bytes: int,
-    n_files: int,
-    parallelism: int,
-    cur_max_partition: int,
-    cur_open_cost: int,
-    waves: int = 4,
-) -> "tuple[int, int] | None":
-    """New (maxPartitionBytes, openCostInBytes) for the extraction scan,
-    or None when the current settings already yield enough splits.
-
-    Parquet splits are sized by BYTES, but the extraction stage's cost
-    per split is Python CPU per ROW — a compact pages table (zstd html)
-    can be byte-cheap yet extraction-expensive. When the scan would
-    produce fewer than ``waves × parallelism`` splits, the stage runs in
-    under-filled waves (measured: a 149 MB / 64-file bench world
-    coalesced to 13 splits at the 32 MB default + 4 MB open cost, so
-    local[8] ran its dominant 58 s stage at 1.6 uneven waves while
-    local[2] sat at a comfortable 6.5 — which shows up directly as lost
-    N→4N scaling). At 100 TB the default never binds (3M+ splits); this
-    floor only engages for small, UDF-cost-dominated scans.
-    """
-    target_splits = max(1, waves * parallelism)
-    effective = total_bytes + n_files * cur_open_cost
-    if effective >= cur_max_partition * target_splits:
-        return None  # already enough splits
-    tgt = max(1 << 20, total_bytes // target_splits or 1)
-    if tgt >= cur_max_partition:
-        return None
-    open_cost = max(4096, min(cur_open_cost, tgt // 8))
-    return tgt, open_cost
-
-
-class _extraction_split_scope:
-    """Scope a smaller parquet split size around the extraction action.
-
-    Session-conf changes take effect at plan time of the next action,
-    so wrapping the extractions write re-splits the fused pages-scan +
-    Arrow-extraction stage only; the previous values are restored on
-    exit (the round driver is sequential, so the scope is race-free).
-    """
-
-    MPB = "spark.sql.files.maxPartitionBytes"
-    OPEN = "spark.sql.files.openCostInBytes"
-
-    def __init__(self, spark: SparkSession, pages_df: DataFrame | None):
-        self.spark = spark
-        self.pages_df = pages_df
-        self._saved: "list[tuple[str, str]]" = []
-
-    def __enter__(self):
-        if self.pages_df is None:
-            return self
-        info = _scan_input_bytes(self.spark, self.pages_df)
-        if info is None:
-            return self
-        total, n_files = info
-        try:
-            cur_mpb = self.spark.conf.get(self.MPB)
-            cur_open = self.spark.conf.get(self.OPEN)
-            hint = extraction_split_target(
-                total,
-                n_files,
-                self.spark.sparkContext.defaultParallelism,
-                _parse_spark_bytes(cur_mpb),
-                _parse_spark_bytes(cur_open),
-            )
-        except Exception:
-            return self
-        if hint is None:
-            return self
-        self._saved = [(self.MPB, cur_mpb), (self.OPEN, cur_open)]
-        self.spark.conf.set(self.MPB, str(hint[0]))
-        self.spark.conf.set(self.OPEN, str(hint[1]))
-        return self
-
-    def __exit__(self, *exc):
-        for key, val in self._saved:
-            self.spark.conf.set(key, val)
-        return False
-
-
 @dataclass
 class CrawlEngine:
     spark: SparkSession
@@ -683,14 +558,7 @@ class CrawlEngine:
             F.spark_partition_id().alias("partition_id"),
             *[F.col(c) for c in PRIORITY_COLS if c != "url"],
         )
-        # the write action plans the fused pages-scan + extraction stage;
-        # scope a byte-split floor so the Python-cost-dominated stage gets
-        # >= 4 waves x parallelism tasks even on a byte-compact pages table
-        with _extraction_split_scope(
-            self.spark,
-            pages_resolved if self.client_factory is None else None,
-        ):
-            self.catalog.write_round_partition("extractions", extractions)
+        self.catalog.write_round_partition("extractions", extractions)
         _section("select_fetch_extract")
         ext = self.catalog.read_log("extractions").filter(
             F.col("round_id") == round_id
@@ -722,7 +590,7 @@ class CrawlEngine:
                 version=round_id,
             )
 
-        # W3 fetch log (per-partition lineage + metrics source)
+        # W3 fetch log (per-partition lineage)
         log = (
             self._log_rows(blocked, round_id, "robots", "disallowed")
             .unionByName(
@@ -744,9 +612,8 @@ class CrawlEngine:
             )
         )
         _section("revisit_stats")
-        # status totals ride the log write as an observation (the A6
-        # scalar counts previously re-read the written metrics table —
-        # one more sequential driver job per round)
+        # status totals ride the log write as an observation, so the A6
+        # scalar counts cost no extra driver job
         status_obs = Observation(f"statuses_r{round_id}")
         log = log.observe(
             status_obs,
@@ -912,18 +779,9 @@ class CrawlEngine:
         frontier_write_s = time.monotonic() - tw
         _section("state_commit")
 
-        # metrics rollup (A6): per-host counts + throughput. All counts
-        # derive from the already-written round partitions (small parquet
-        # scans) — no recomputation of the crawl pipeline.
+        # metrics rollup (A6): round totals into the manifest; per-host
+        # counts are one groupBy of the fetch_log partition when wanted
         wall_s = time.monotonic() - t0
-        per_host = (
-            self.catalog.read_log("fetch_log")
-            .filter(F.col("round_id") == round_id)
-            .groupBy("round_id", "host", "status")
-            .agg(F.count("*").alias("n"))
-            .withColumn("wall_seconds", F.lit(wall_s))
-        )
-        self.catalog.write_round_partition("metrics", per_host)
 
         # collected by the fetch-log write's tasks (Observation above)
         status_totals = {

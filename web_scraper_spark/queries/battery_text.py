@@ -1529,8 +1529,8 @@ def q_ann_ivf_kmeans_topk(spark, sf_dir):
     """,
 )
 def q_events_hour_window(spark, sf_dir):
-    """Tumbling event-time window aggregation (the batch-equivalent of
-    the streaming hostrate plan in streaming/ingest.py)."""
+    """Tumbling event-time window aggregation (the batch form of a
+    streaming per-host rate plan)."""
     ev = T(spark, sf_dir, "events")
     return ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value")

@@ -12,7 +12,7 @@ jar, so the same contract is implemented over partitioned parquet:
 - crawl rounds map versions deterministically (``version = round_id``),
   which makes round re-runs idempotent and any round resumable — the
   checkpoint story the north rule requires;
-- append-only tables (fetch_log, extractions, metrics) are written as
+- append-only tables (fetch_log, extractions, frontier_delta) are written as
   ``round_id=<r>/`` partitions with dynamic partition overwrite, so a
   re-run of round r replaces exactly round r's partition and nothing
   else.
@@ -192,7 +192,7 @@ class ParquetSnapshotCatalog:
         self._commit_manifest(name, manifest)
         shutil.rmtree(os.path.join(table_root, cur_dir), ignore_errors=True)
 
-    # ---- append tables (fetch_log, extractions, metrics) ------------------
+    # ---- append tables (fetch_log, extractions, frontier_delta) -----------
     def append_dir(self, name: str) -> str:
         return os.path.join(self.root, name, "data")
 
