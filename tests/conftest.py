@@ -46,6 +46,17 @@ def small_config() -> FixtureConfig:
     )
 
 
+def ingest_pages(spark, paths, tmp):
+    """The pages table as a crawl reads it: resolved once at ingest, as
+    ``resolve_pages`` documents, written under ``tmp`` and read back, so
+    every round scans a plain file table instead of re-running URL
+    canonicalization and the latest-per-URL window."""
+    resolve_pages(spark.read.parquet(paths["pages"])).write.parquet(
+        tmp + "/pages_resolved"
+    )
+    return spark.read.parquet(tmp + "/pages_resolved")
+
+
 @pytest.fixture(scope="session")
 def world():
     return build_world(small_config())
@@ -95,7 +106,7 @@ def engine_run(request, spark, world):
     )
     seeds = spark.read.parquet(paths["seeds"])
     robots = spark.read.parquet(paths["robots"])
-    pages = resolve_pages(spark.read.parquet(paths["pages"]))
+    pages = ingest_pages(spark, paths, tmp)
     conf_key = "spark.sql.autoBroadcastJoinThreshold"
     saved = spark.conf.get(conf_key)
     if auto_broadcast is not None:

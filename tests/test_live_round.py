@@ -20,10 +20,10 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import N_ROUNDS
+from tests.conftest import N_ROUNDS, ingest_pages
 from web_scraper_spark.plans.rounds import CrawlEngine
 from web_scraper_spark.sources.catalog import ParquetSnapshotCatalog
-from web_scraper_spark.sources.pages_source import resolve_pages, write_world_parquet
+from web_scraper_spark.sources.pages_source import write_world_parquet
 
 
 @pytest.fixture(scope="module")
@@ -36,7 +36,7 @@ def live_run(spark, world):
     paths = write_world_parquet(world, tmp + "/world")
     seeds = spark.read.parquet(paths["seeds"])
     robots = spark.read.parquet(paths["robots"])
-    pages = resolve_pages(spark.read.parquet(paths["pages"]))
+    pages = ingest_pages(spark, paths, tmp)
 
     web = {
         r["url_canon"]: (

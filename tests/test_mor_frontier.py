@@ -17,7 +17,8 @@ import pytest
 
 from web_scraper_spark.plans.rounds import FRONTIER_COLS, CrawlEngine
 from web_scraper_spark.sources.catalog import ParquetSnapshotCatalog
-from web_scraper_spark.sources.pages_source import resolve_pages, write_world_parquet
+from web_scraper_spark.sources.pages_source import write_world_parquet
+from tests.conftest import ingest_pages
 
 N_ROUNDS = 4
 
@@ -34,7 +35,7 @@ def mor_pair(spark, world):
     paths = write_world_parquet(world, tmp + "/world")
     seeds = spark.read.parquet(paths["seeds"])
     robots = spark.read.parquet(paths["robots"])
-    pages = resolve_pages(spark.read.parquet(paths["pages"]))
+    pages = ingest_pages(spark, paths, tmp)
     engines = {}
     for mode in ("cow", "mor"):
         catalog = ParquetSnapshotCatalog(spark, f"{tmp}/state_{mode}")

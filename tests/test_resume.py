@@ -14,8 +14,8 @@ from web_scraper_spark.oracle.crawler import OracleCrawler
 from web_scraper_spark.plans.rounds import FRONTIER_COLS, CrawlEngine
 from web_scraper_spark.sources.catalog import ParquetSnapshotCatalog
 from web_scraper_spark.sources.fixtures import build_world
-from web_scraper_spark.sources.pages_source import resolve_pages, write_world_parquet
-from tests.conftest import small_config
+from web_scraper_spark.sources.pages_source import write_world_parquet
+from tests.conftest import ingest_pages, small_config
 
 
 @pytest.fixture(scope="module")
@@ -26,12 +26,7 @@ def env(spark):
     paths = write_world_parquet(world, tmp + "/world")
     seeds = spark.read.parquet(paths["seeds"])
     robots = spark.read.parquet(paths["robots"])
-    # resolve once at ingest, as resolve_pages documents: every round
-    # then reads the pages table as a plain file scan
-    resolve_pages(spark.read.parquet(paths["pages"])).write.parquet(
-        tmp + "/pages_resolved"
-    )
-    pages = spark.read.parquet(tmp + "/pages_resolved")
+    pages = ingest_pages(spark, paths, tmp)
     yield spark, cfg, world, tmp, seeds, robots, pages
     shutil.rmtree(tmp, ignore_errors=True)
 

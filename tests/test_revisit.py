@@ -165,10 +165,8 @@ def test_engine_revisit_round_trip(spark, world):
     from web_scraper_spark.operators.revisit import RevisitPolicy
     from web_scraper_spark.plans.rounds import FRONTIER_COLS, CrawlEngine
     from web_scraper_spark.sources.catalog import ParquetSnapshotCatalog
-    from web_scraper_spark.sources.pages_source import (
-        resolve_pages,
-        write_world_parquet,
-    )
+    from web_scraper_spark.sources.pages_source import write_world_parquet
+    from tests.conftest import ingest_pages
 
     import dataclasses
 
@@ -177,7 +175,7 @@ def test_engine_revisit_round_trip(spark, world):
         paths = write_world_parquet(world, tmp + "/world")
         seeds = spark.read.parquet(paths["seeds"])
         robots = spark.read.parquet(paths["robots"])
-        pages = resolve_pages(spark.read.parquet(paths["pages"]))
+        pages = ingest_pages(spark, paths, tmp)
 
         # budgets wide enough that revisits never displace new fetches
         # (with a binding budget revisits legitimately compete for it

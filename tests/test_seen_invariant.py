@@ -11,7 +11,9 @@ probe (a co-grouped bloom ``applyInPandas``) and its ``seen_bloom``
 table stay gone. The same crawls pin the round's one html-fetch path:
 a broadcast key left-semi into the pages scan, with extraction fused
 to that scan so html crosses no exchange, and the exact set of tables
-each mode writes.
+each mode writes. They also pin the append tables' layout: the catalog
+rebalances each round partition into one file at this size, and the
+exchange that rebalance adds above the extraction carries no html.
 """
 
 from __future__ import annotations
@@ -27,7 +29,8 @@ from pyspark.sql import functions as F
 from web_scraper_spark.operators.revisit import RevisitPolicy
 from web_scraper_spark.plans.rounds import CrawlEngine
 from web_scraper_spark.sources.catalog import ParquetSnapshotCatalog
-from web_scraper_spark.sources.pages_source import resolve_pages, write_world_parquet
+from web_scraper_spark.sources.pages_source import write_world_parquet
+from tests.conftest import ingest_pages
 
 N_ROUNDS = 4
 KEYS = ["url_hash", "url"]
@@ -47,13 +50,17 @@ ROUND_TABLES = {
 
 
 class _PlanRecordingCatalog(ParquetSnapshotCatalog):
-    """Records the physical plan of every extractions write and the
-    names of every table the round writes."""
+    """Records the physical plan of every extractions write (as handed
+    over and as rebalanced for the write), the names of every table the
+    round writes, and the parquet file count of every round partition
+    right after each append write."""
 
     def __init__(self, spark, root):
         super().__init__(spark, root)
         self.extraction_plans: list[str] = []
+        self.rebalanced_plans: list[str] = []
         self.written: set[str] = set()
+        self.partition_files: dict[tuple[str, str], int] = {}
 
     def write_snapshot(self, name, df, version, partition_by=None):
         self.written.add(name)
@@ -65,7 +72,17 @@ class _PlanRecordingCatalog(ParquetSnapshotCatalog):
             self.extraction_plans.append(
                 df._jdf.queryExecution().executedPlan().toString()
             )
-        return super().write_round_partition(name, df)
+            self.rebalanced_plans.append(
+                df.hint("rebalance")._jdf.queryExecution().executedPlan().toString()
+            )
+        super().write_round_partition(name, df)
+        data = self.append_dir(name)
+        for part in os.listdir(data):
+            if part.startswith("round_id="):
+                files = os.listdir(os.path.join(data, part))
+                self.partition_files[(name, part)] = sum(
+                    f.endswith(".parquet") for f in files
+                )
 
 
 def _key_violations(frontier) -> tuple[int, int]:
@@ -98,12 +115,7 @@ def crawl(request, spark, world):
     paths = write_world_parquet(world, tmp + "/world")
     seeds = spark.read.parquet(paths["seeds"])
     robots = spark.read.parquet(paths["robots"])
-    # resolve once at ingest, as resolve_pages documents: the round then
-    # reads the pages table as a plain file scan
-    resolve_pages(spark.read.parquet(paths["pages"])).write.parquet(
-        tmp + "/pages_resolved"
-    )
-    pages = spark.read.parquet(tmp + "/pages_resolved")
+    pages = ingest_pages(spark, paths, tmp)
     catalog = _PlanRecordingCatalog(spark, tmp + "/state")
     engine = CrawlEngine(
         spark, catalog, world.config.politeness, n_buckets=8,
@@ -153,3 +165,27 @@ def test_fetch_semi_joins_keys_into_pages_scan(crawl):
         for n in chain
     ), chain
     assert not [n for n in chain if "Exchange" in n], chain
+
+
+def test_each_round_partition_is_one_file(crawl, request):
+    """The catalog rebalances every append write, so a test-sized round
+    partition is one parquet file, not one per upstream task (the
+    extractions write alone ran one task per pages-scan split)."""
+    _, catalog, _ = crawl
+    tables = {"extractions", "fetch_log", "frontier_delta"}
+    assert {n for n, _ in catalog.partition_files} == (
+        tables & ROUND_TABLES[request.node.callspec.params["crawl"]]
+    )
+    assert set(catalog.partition_files.values()) == {1}, catalog.partition_files
+
+
+def test_write_rebalance_exchanges_no_html(crawl):
+    """The rebalance sits above the Arrow extraction: the one exchange
+    it adds moves the extracted rows, which dropped html inside the
+    Python stage."""
+    _, catalog, _ = crawl
+    chain = _first_child_chain(catalog.rebalanced_plans[1], "Exchange")
+    assert "REBALANCE_PARTITIONS_BY_NONE" in chain[0], chain
+    above = chain[: next(i for i, n in enumerate(chain) if n.startswith("MapInPandas"))]
+    assert [n for n in above if "Exchange" in n] == [chain[0]], chain
+    assert not [n for n in above if "html" in n], chain

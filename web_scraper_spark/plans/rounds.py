@@ -32,6 +32,12 @@ Scale notes (10^10 frontier):
   file splits, so its layout does not depend on host and the wide
   ``html`` column crosses no exchange. Only selected rows' pages are
   ever decoded, and html is dropped inside the extract stage.
+- every round-partition write (extractions, fetch_log, frontier_delta,
+  live fetch_raw) is rebalanced by the catalog, so its file count
+  follows the round's budget, not the pages-scan split count. Each adds
+  one exchange of budget-sized rows; the extractions it moves carry
+  text and outlinks, not html (live mode's fetch_raw rows do carry the
+  fetched bodies, once).
 """
 
 from __future__ import annotations
@@ -86,6 +92,18 @@ FRONTIER_COLS = [
 ]
 
 _TIMEOUT_ERROR = "max_request_number_reached"  # nausys_tracker.py:299
+
+
+def _observed(obs: Observation) -> dict:
+    """The metrics a write's observation collected; ``{}`` when the
+    observed frame was empty. The catalog rebalances round-partition
+    writes, and when that shuffle stage materializes empty, AQE swaps
+    it for an empty relation whose observed metrics are never reported:
+    Spark then completes the observation with a schema-less empty row,
+    which ``Observation.get`` cannot convert."""
+    if obs._jo.getRow().length() == 0:
+        return {}
+    return obs.get
 
 
 @dataclass
@@ -143,9 +161,9 @@ class CrawlEngine:
     politeness_grain: str = "host"
 
     # selection sizes up to here broadcast the narrow crawl attrs onto
-    # the extraction output so extracted text never shuffles either;
-    # beyond it the attrs join shuffles rather than build a driver-side
-    # hash table of every selected row
+    # the extraction output so the attrs join shuffles no extracted
+    # text; beyond it the attrs join shuffles rather than build a
+    # driver-side hash table of every selected row
     ATTRS_BROADCAST_THRESHOLD: int = 1_000_000
 
     # ------------------------------------------------------------------
@@ -351,10 +369,11 @@ class CrawlEngine:
         crawl attrs attach to the html-FREE extraction output on the
         exact ``(url_hash, url)`` key — a 64-bit collision extracts one
         extra page, which that join drops. With ``broadcast_attrs`` (a
-        budget-bounded selection) the extracted text crosses no
-        exchange either. Event-log evidence (BENCH/scaling_round.md): a
-        shuffle join moved the wide html through two ~530 MB exchanges
-        per round; this path moves none.
+        budget-bounded selection) the attrs join moves no extracted
+        text; the text crosses one budget-sized exchange, the rebalance
+        of the extractions write. Event-log evidence
+        (BENCH/scaling_round.md): a shuffle join moved the wide html
+        through two ~530 MB exchanges per round; this path moves none.
         """
         page_keys = pages_resolved.select(
             F.col("url_hash").alias("p_hash"),
@@ -542,7 +561,9 @@ class CrawlEngine:
         # the default heap — and at 100 TB caching the extraction output
         # is not an option at all. ``partition_id`` (the extraction
         # task's lineage) is materialized into the table so the re-read
-        # preserves W3 per-partition lineage.
+        # preserves W3 per-partition lineage; it is computed below the
+        # catalog's write rebalance, so it still names the extraction
+        # task, not the writer.
         extractions = extracted.select(
             F.lit(round_id).alias("round_id"),
             "url",
@@ -785,11 +806,11 @@ class CrawlEngine:
 
         # collected by the fetch-log write's tasks (Observation above)
         status_totals = {
-            k: int(v or 0) for k, v in status_obs.get.items()
+            k: int(v or 0) for k, v in _observed(status_obs).items()
         }
         # collected by the state write's own tasks (Observation above);
-        # None only when the write produced zero rows
-        n_discovered = int(disc_obs.get["n"] or 0)
+        # None or absent only when the write produced zero rows
+        n_discovered = int(_observed(disc_obs).get("n") or 0)
         counts = {
             "selected": sum(
                 v for k, v in status_totals.items() if k != "robots"

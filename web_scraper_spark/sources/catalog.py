@@ -17,12 +17,20 @@ jar, so the same contract is implemented over partitioned parquet:
   re-run of round r replaces exactly round r's partition and nothing
   else.
 
-The catalog writes whatever layout the caller hands it and records no
+Snapshots keep the layout the caller hands them and record no
 partitioning: the crawl round writes its frontier snapshot
 ``repartition(n_buckets, "host_bucket")``, and a plain parquet read
 carries no partitioning, so the discovery anti-join and the MoR
 merge-back shuffle both sides; they are not co-partitioned. ROADMAP
-item 6 measures whether that matters at frontier scale.
+item 6 measures whether that matters at frontier scale. Round
+partitions do not keep the caller's layout: each write is rebalanced,
+so AQE sizes its files (one file for a budget-sized round, advisory-size
+splits for a large one) instead of one file per upstream task.
+
+Every write records the table's schema in its ``MANIFEST.json`` and
+every read passes it to the parquet reader, so a read runs no
+schema-inference job; a table written before schemas were recorded
+reads with inference.
 
 If an Iceberg runtime is on the classpath,
 ``sources/iceberg_catalog.IcebergCatalog`` (same interface) maps these
@@ -38,6 +46,7 @@ import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 __all__ = ["ParquetSnapshotCatalog", "make_catalog"]
 
@@ -105,14 +114,26 @@ class ParquetSnapshotCatalog:
         if version not in manifest["history"]:
             manifest["history"] = sorted(manifest["history"] + [version])
         manifest["current"] = version
+        # per version, so time travel reads each version's own schema
+        manifest.setdefault("schemas", {})[str(version)] = df.schema.json()
         self._commit_manifest(name, manifest)
 
     def read(self, name: str, version: int | None = None) -> DataFrame:
         """Current snapshot, or time-travel to ``version``."""
-        v = version if version is not None else self.current_version(name)
+        manifest = self._read_manifest(name)
+        v = version if version is not None else manifest["current"]
         if v is None:
             raise FileNotFoundError(f"table {name!r} has no committed snapshot")
-        return self.spark.read.parquet(self.snapshot_dir(name, v))
+        schema = manifest.get("schemas", {}).get(str(v))
+        return self._reader(schema).parquet(self.snapshot_dir(name, v))
+
+    def _reader(self, schema: str | None):
+        """A parquet reader bound to a recorded schema (no inference
+        job), or an inferring one for a table written without it."""
+        reader = self.spark.read
+        if schema is None:
+            return reader
+        return reader.schema(StructType.fromJson(json.loads(schema)))
 
     def rollback(self, name: str, version: int) -> None:
         manifest = self._read_manifest(name)
@@ -140,9 +161,11 @@ class ParquetSnapshotCatalog:
             return []
         manifest["history"] = [v for v in history if v in keep]
         dirs = manifest.get("dirs", {})
+        schemas = manifest.get("schemas", {})
         expired_paths = [self.snapshot_dir(name, v) for v in expired]
         for v in expired:
             dirs.pop(str(v), None)
+            schemas.pop(str(v), None)
         self._commit_manifest(name, manifest)
         for p in expired_paths:
             shutil.rmtree(p, ignore_errors=True)
@@ -199,13 +222,32 @@ class ParquetSnapshotCatalog:
     def write_round_partition(self, name: str, df: DataFrame) -> None:
         """Idempotent per-round append: dynamic partition overwrite on
         ``round_id`` replaces exactly the partitions present in ``df``
-        (session conf ``partitionOverwriteMode=dynamic``)."""
+        (session conf ``partitionOverwriteMode=dynamic``).
+
+        The rows are rebalanced before the write, so the file count
+        follows the rows written, not the upstream task count: AQE
+        coalesces a budget-sized round into one file and splits a large
+        one at its advisory partition size. The shuffle moves only the
+        rows ``df`` holds; the crawl round's extractions have dropped
+        ``html`` by then."""
         path = self.append_dir(name)
-        df.write.mode("overwrite").partitionBy("round_id").parquet(path)
+        df.hint("rebalance").write.mode("overwrite").partitionBy("round_id").parquet(
+            path
+        )
+        # a partition column reads back after the data columns
+        schema = StructType(
+            [f for f in df.schema if f.name != "round_id"]
+            + [StructField("round_id", IntegerType())]
+        ).json()
+        manifest = self._read_manifest(name)
+        if manifest.get("schema") != schema:
+            manifest["schema"] = schema
+            self._commit_manifest(name, manifest)
 
     def read_log(self, name: str) -> DataFrame:
         path = self.append_dir(name)
-        return self.spark.read.option("basePath", path).parquet(path)
+        schema = self._read_manifest(name).get("schema")
+        return self._reader(schema).option("basePath", path).parquet(path)
 
     def log_round_ids(self, name: str) -> list[int]:
         """round_id partitions present in an append table (ascending),

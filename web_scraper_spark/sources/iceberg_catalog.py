@@ -190,10 +190,12 @@ class IcebergCatalog:
     def write_round_partition(self, name: str, df: DataFrame) -> None:
         """Idempotent per-round append — with
         ``spark.sql.sources.partitionOverwriteMode=dynamic`` the INSERT
-        OVERWRITE replaces exactly the round_id partitions in ``df``."""
+        OVERWRITE replaces exactly the round_id partitions in ``df``.
+        Rebalanced first, like ``ParquetSnapshotCatalog``, so AQE sizes
+        the data files instead of the upstream task count."""
         self._require()
         view = f"_log_{name}"
-        df.createOrReplaceTempView(view)
+        df.hint("rebalance").createOrReplaceTempView(view)
         self.spark.sql(self.insert_overwrite_sql(name, view))
 
     def read_log(self, name: str) -> DataFrame:
