@@ -144,3 +144,18 @@ def test_live_client_init_once_per_worker(live_run):
         .count()
     )
     assert dup == 0
+
+
+def test_live_fetch_raw_stores_urls_in_order_without_key(live_run):
+    """``fetch_raw`` stores no ``url_hash`` (the round derives it when it
+    reads the bodies back), and each round's rows are in url order."""
+    _, catalog, _ = live_run
+    raw = catalog.read_log("fetch_raw")
+    assert "url" in raw.columns and "url_hash" not in raw.columns
+    for r in catalog.log_round_ids("fetch_raw"):
+        # one file per round at this size, so file order is table order
+        urls = [
+            row.url
+            for row in raw.filter(F.col("round_id") == r).select("url").collect()
+        ]
+        assert urls and urls == sorted(urls), r

@@ -10,6 +10,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from web_scraper_spark.functions.urls import url_hash
 from web_scraper_spark.oracle.crawler import OracleCrawler
 from web_scraper_spark.plans.rounds import FRONTIER_COLS, CrawlEngine
 from web_scraper_spark.sources.catalog import ParquetSnapshotCatalog
@@ -160,25 +161,34 @@ class _CrashingCatalog(ParquetSnapshotCatalog):
         return super().expire_snapshots(name, keep_last)
 
 
-# round 2's mutating catalog calls, in order, per mor_compact_every:
-# 3 makes it a delta round, 2 a compaction round
+# round 2's mutating catalog calls, in order, per (mor_compact_every,
+# snapshot_retention): compacting every 3rd round makes round 2 a delta
+# round, every 2nd a compaction round, and a retention adds the expiry
+_COMPACTION_CALLS = [
+    "extractions", "fetch_log", "frontier", "commit_round", "drop_log_partitions",
+]
 ROUND2_CALLS = {
-    3: ["extractions", "fetch_log", "frontier_delta", "commit_round"],
-    2: ["extractions", "fetch_log", "frontier", "commit_round",
-        "drop_log_partitions"],
+    (3, None): ["extractions", "fetch_log", "frontier_delta", "commit_round"],
+    (2, None): _COMPACTION_CALLS,
+    (2, 1): _COMPACTION_CALLS + ["expire_snapshots"],
 }
 CRASH_CELLS = [
-    pytest.param(every, k, id=f"{'delta' if every == 3 else 'compaction'}-{label}")
-    for every, labels in ROUND2_CALLS.items()
+    pytest.param(
+        every, retention, k, id=f"{'delta' if every == 3 else 'compaction'}-{label}"
+    )
+    for (every, retention), labels in ROUND2_CALLS.items()
     for k, label in enumerate(labels)
+    # the retention crawl's other calls are the plain compaction's cells
+    if retention is None or label == "expire_snapshots"
 ]
 
 
-def _mor_engine(env, catalog, every):
+def _mor_engine(env, catalog, every, retention=None):
     spark, cfg = env[0], env[1]
     return CrawlEngine(
         spark, catalog, cfg.politeness, n_buckets=8,
         frontier_mode="mor", mor_compact_every=every,
+        snapshot_retention=retention,
     )
 
 
@@ -200,47 +210,98 @@ def _crawl_state(eng, as_of):
 
 @pytest.fixture(scope="module")
 def mor_reference(env):
-    """Per ``mor_compact_every``, one uninterrupted 3-round crawl:
-    (a copy of its state after round 1, round 2's mutating calls, its
-    state after round 3)."""
+    """Per ``(mor_compact_every, snapshot_retention)``, one uninterrupted
+    3-round crawl: (a copy of its state after round 1, round 2's
+    mutating calls, its state after round 3)."""
     spark, cfg, world, tmp, seeds, robots, pages = env
     cache = {}
 
-    def get(every):
-        if every not in cache:
-            cat = _CrashingCatalog(spark, f"{tmp}/mor_ref_{every}")
-            eng = _mor_engine(env, cat, every)
+    def get(every, retention=None):
+        key = (every, retention)
+        if key not in cache:
+            cat = _CrashingCatalog(spark, f"{tmp}/mor_ref_{every}_{retention}")
+            eng = _mor_engine(env, cat, every, retention)
             eng.init_frontier(seeds, cfg.period_start, cfg.period_end)
             eng.run(1, pages, robots, seeds)
-            after_round1 = f"{tmp}/mor_ref_{every}_r1"
+            after_round1 = f"{cat.root}_r1"
             shutil.copytree(cat.root, after_round1)
             cat.arm(None)
             eng.run_round(2, pages, robots, seeds)
             round2_calls = list(cat.calls)
             eng.run(3, pages, robots, seeds)
-            cache[every] = (after_round1, round2_calls, _crawl_state(eng, 3))
-        return cache[every]
+            cache[key] = (after_round1, round2_calls, _crawl_state(eng, 3))
+        return cache[key]
 
     return get
 
 
-@pytest.mark.parametrize("every,k", CRASH_CELLS)
-def test_mor_crash_at_every_write_resumes_exactly(env, mor_reference, every, k):
+@pytest.mark.parametrize("every,retention,k", CRASH_CELLS)
+def test_mor_crash_at_every_write_resumes_exactly(
+    env, mor_reference, every, retention, k
+):
     """A merge-on-read round that crashes before any one of its
     mutating catalog calls must resume to the uninterrupted state: the
     frontier (discovery_round included), fetch_log and extractions
-    equal. Folded deltas stay readable until the round commit lands."""
+    equal. Folded deltas stay readable until the round commit lands,
+    and a crash before the snapshot expiry leaves the expiry to a later
+    round."""
     spark, cfg, world, tmp, seeds, robots, pages = env
-    after_round1, round2_calls, expected = mor_reference(every)
-    assert round2_calls == ROUND2_CALLS[every]
+    after_round1, round2_calls, expected = mor_reference(every, retention)
+    assert round2_calls == ROUND2_CALLS[(every, retention)]
 
-    cat = _CrashingCatalog(spark, f"{tmp}/mor_crash_{every}_{k}")
+    cat = _CrashingCatalog(spark, f"{tmp}/mor_crash_{every}_{retention}_{k}")
     shutil.copytree(after_round1, cat.root, dirs_exist_ok=True)
-    eng = _mor_engine(env, cat, every)
+    eng = _mor_engine(env, cat, every, retention)
     cat.arm(k)
     with pytest.raises(RuntimeError, match=f"crash before {round2_calls[k]}"):
         eng.run_round(2, pages, robots, seeds)
     assert cat.calls == round2_calls[:k]
     assert cat.last_committed_round() == (2 if "commit_round" in cat.calls else 1)
+    eng.run(3, pages, robots, seeds)
+    assert _crawl_state(eng, 3) == expected
+
+
+class _KeyStoringCatalog(ParquetSnapshotCatalog):
+    """Writes the frontier snapshot, its deltas and the extractions with
+    ``url_hash`` stored right after ``url``: the layout of state written
+    before the round derived the key at read."""
+
+    def _stored_key(self, name, df):
+        if name not in ("frontier", "frontier_delta", "extractions"):
+            return df
+        i = df.columns.index("url") + 1
+        return df.select(
+            *df.columns[:i], url_hash(F.col("url")).alias("url_hash"), *df.columns[i:]
+        )
+
+    def write_snapshot(self, name, df, version, partition_by=None):
+        return super().write_snapshot(
+            name, self._stored_key(name, df), version, partition_by
+        )
+
+    def write_round_partition(self, name, df):
+        return super().write_round_partition(name, self._stored_key(name, df))
+
+
+def test_resume_from_state_that_stores_url_hash(env, mor_reference):
+    """Round 1 written with the key stored (snapshot v0, the round-1
+    delta and extractions); rounds 2-3 run in the current layout, and
+    round 3 compacts both layouts into one snapshot. The state equals an
+    uninterrupted current-layout crawl's."""
+    spark, cfg, world, tmp, seeds, robots, pages = env
+    _, _, expected = mor_reference(3)
+
+    stored = _KeyStoringCatalog(spark, f"{tmp}/mor_stored_key")
+    eng = _mor_engine(env, stored, 3)
+    eng.init_frontier(seeds, cfg.period_start, cfg.period_end)
+    eng.run(1, pages, robots, seeds)
+    for df in (
+        stored.read("frontier", version=0),
+        stored.read_log("frontier_delta"),
+        stored.read_log("extractions"),
+    ):
+        assert df.columns.index("url_hash") == df.columns.index("url") + 1
+
+    eng = _mor_engine(env, ParquetSnapshotCatalog(spark, stored.root), 3)
     eng.run(3, pages, robots, seeds)
     assert _crawl_state(eng, 3) == expected

@@ -225,14 +225,12 @@ def test_engine_revisit_round_trip(spark, world):
         # the frontier's converged state
         f_plain = sorted(
             tuple(r)
-            for r in plain.catalog.read("frontier", version=4)
-            .select(*FRONTIER_COLS)
+            for r in plain._read_frontier(4).select(*FRONTIER_COLS)
             .collect()
         )
         f_rev = sorted(
             tuple(r)
-            for r in rev.catalog.read("frontier", version=4)
-            .select(*FRONTIER_COLS)
+            for r in rev._read_frontier(4).select(*FRONTIER_COLS)
             .collect()
         )
         assert f_plain == f_rev

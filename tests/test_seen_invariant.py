@@ -11,9 +11,10 @@ probe (a co-grouped bloom ``applyInPandas``) and its ``seen_bloom``
 table stay gone. The same crawls pin the round's one html-fetch path:
 a broadcast key left-semi into the pages scan, with extraction fused
 to that scan so html crosses no exchange, and the exact set of tables
-each mode writes. They also pin the append tables' layout: the catalog
-rebalances each round partition into one file at this size, and the
-exchange that rebalance adds above the extraction carries no html.
+each mode writes. They also pin the tables' layout: the catalog
+rebalances each round partition into one file at this size, written in
+url order, the exchange that rebalance adds above the extraction
+carries no html, and no table stores ``url_hash`` (reads derive it).
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ import re
 import shutil
 import tempfile
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -52,8 +54,9 @@ ROUND_TABLES = {
 class _PlanRecordingCatalog(ParquetSnapshotCatalog):
     """Records the physical plan of every extractions write (as handed
     over and as rebalanced for the write), the names of every table the
-    round writes, and the parquet file count of every round partition
-    right after each append write."""
+    round writes, and right after each write, what its parquet files
+    hold: the column names in their footers per table, and per round
+    partition the file count and whether each file's urls ascend."""
 
     def __init__(self, spark, root):
         super().__init__(spark, root)
@@ -61,10 +64,23 @@ class _PlanRecordingCatalog(ParquetSnapshotCatalog):
         self.rebalanced_plans: list[str] = []
         self.written: set[str] = set()
         self.partition_files: dict[tuple[str, str], int] = {}
+        self.url_ordered: dict[tuple[str, str], bool] = {}
+        self.file_columns: dict[str, set[str]] = {}
+
+    def _parquet_files(self, name, path) -> list[str]:
+        files = [
+            os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
+        ]
+        for f in files:
+            self.file_columns.setdefault(name, set()).update(
+                pq.ParquetFile(f).schema_arrow.names
+            )
+        return files
 
     def write_snapshot(self, name, df, version, partition_by=None):
         self.written.add(name)
-        return super().write_snapshot(name, df, version, partition_by)
+        super().write_snapshot(name, df, version, partition_by)
+        self._parquet_files(name, self.snapshot_dir(name, version))
 
     def write_round_partition(self, name, df):
         self.written.add(name)
@@ -79,9 +95,14 @@ class _PlanRecordingCatalog(ParquetSnapshotCatalog):
         data = self.append_dir(name)
         for part in os.listdir(data):
             if part.startswith("round_id="):
-                files = os.listdir(os.path.join(data, part))
-                self.partition_files[(name, part)] = sum(
-                    f.endswith(".parquet") for f in files
+                files = self._parquet_files(name, os.path.join(data, part))
+                self.partition_files[(name, part)] = len(files)
+                self.url_ordered[(name, part)] = all(
+                    urls == sorted(urls)
+                    for urls in (
+                        pq.read_table(f, columns=["url"])["url"].to_pylist()
+                        for f in files
+                    )
                 )
 
 
@@ -170,13 +191,19 @@ def test_fetch_semi_joins_keys_into_pages_scan(crawl):
 def test_each_round_partition_is_one_file(crawl, request):
     """The catalog rebalances every append write, so a test-sized round
     partition is one parquet file, not one per upstream task (the
-    extractions write alone ran one task per pages-scan split)."""
+    extractions write alone ran one task per pages-scan split). Each
+    file is written in url order, and no table the round writes stores
+    the ``url_hash`` it derives from ``url``."""
     _, catalog, _ = crawl
     tables = {"extractions", "fetch_log", "frontier_delta"}
     assert {n for n, _ in catalog.partition_files} == (
         tables & ROUND_TABLES[request.node.callspec.params["crawl"]]
     )
     assert set(catalog.partition_files.values()) == {1}, catalog.partition_files
+    assert set(catalog.url_ordered.values()) == {True}, catalog.url_ordered
+    assert set(catalog.file_columns) == catalog.written
+    for name, cols in catalog.file_columns.items():
+        assert "url" in cols and "url_hash" not in cols, (name, cols)
 
 
 def test_write_rebalance_exchanges_no_html(crawl):

@@ -42,7 +42,7 @@ def main(n_rounds: int = 3) -> int:
     engine.init_frontier(seeds, cfg.period_start, cfg.period_end)
 
     # frontier bootstrap parity
-    f0 = catalog.read("frontier", version=0)
+    f0 = engine._read_frontier(0)
     eng_urls = {r.url for r in f0.select("url").collect()}
     ora_urls = set(OracleCrawler(world, cfg.politeness).frontier.keys())
     print("frontier init equal:", eng_urls == ora_urls,
@@ -57,7 +57,9 @@ def main(n_rounds: int = 3) -> int:
         print("engine:", {k: v for k, v in s.items() if k != "status"})
 
     # --- parity checks ---
-    frontier = catalog.read("frontier")
+    # read through the engine, which derives the url_hash the tables do
+    # not store
+    frontier = engine._read_frontier(n_rounds)
     # the invariant the round's URL-seen handling rests on: one frontier
     # row per (url_hash, url), so pending candidates never overlap the
     # fetched (seen) set

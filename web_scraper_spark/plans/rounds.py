@@ -34,10 +34,18 @@ Scale notes (10^10 frontier):
   ever decoded, and html is dropped inside the extract stage.
 - every round-partition write (extractions, fetch_log, frontier_delta,
   live fetch_raw) is rebalanced by the catalog, so its file count
-  follows the round's budget, not the pages-scan split count. Each adds
-  one exchange of budget-sized rows; the extractions it moves carry
-  text and outlinks, not html (live mode's fetch_raw rows do carry the
-  fetched bodies, once).
+  follows the round's budget, not the pages-scan split count, and each
+  file is written in url order. Each adds one exchange of budget-sized
+  rows; the extractions it moves carry text and outlinks, not html
+  (live mode's fetch_raw rows do carry the fetched bodies, once).
+- no table the round writes (the frontier snapshot, frontier_delta,
+  extractions, revisit_stats, fetch_raw) stores ``url_hash``: it is 8
+  incompressible bytes a row, over half of a delta partition's bytes,
+  and every read derives it from ``url`` again (``_keyed``). In-memory
+  frames keep it, so the joins and the URL-seen anti-join are
+  unchanged. The snapshot stays in ``host_bucket`` order, not url
+  order: sorting it would add a frontier-sized sort to every
+  compaction.
 """
 
 from __future__ import annotations
@@ -92,6 +100,13 @@ FRONTIER_COLS = [
 ]
 
 _TIMEOUT_ERROR = "max_request_number_reached"  # nausys_tracker.py:299
+
+
+def _keyed(df: DataFrame) -> DataFrame:
+    """``df`` with ``url_hash`` derived from its ``url`` (the round's
+    tables do not store it). ``withColumn`` replaces a stored key, so
+    state written with the key stored reads the same."""
+    return df.withColumn("url_hash", url_hash(F.col("url")))
 
 
 def _observed(obs: Observation) -> dict:
@@ -251,9 +266,11 @@ class CrawlEngine:
             .select(*FRONTIER_COLS)
         )
         self.catalog.write_snapshot(
-            "frontier", frontier.repartition(self.n_buckets, "host_bucket"), version=0
+            "frontier",
+            frontier.drop("url_hash").repartition(self.n_buckets, "host_bucket"),
+            version=0,
         )
-        return self.catalog.read("frontier")
+        return _keyed(self.catalog.read("frontier"))
 
     def _read_frontier(self, as_of_round: int) -> DataFrame:
         """The frontier as of ``as_of_round``.
@@ -267,11 +284,11 @@ class CrawlEngine:
         pick the right base from the version history, so re-reading an
         old round after later compactions stays correct."""
         if self.frontier_mode != "mor":
-            return self.catalog.read("frontier", version=as_of_round)
+            return _keyed(self.catalog.read("frontier", version=as_of_round))
         base_v = max(
             v for v in self.catalog.versions("frontier") if v <= as_of_round
         )
-        base = self.catalog.read("frontier", version=base_v)
+        base = _keyed(self.catalog.read("frontier", version=base_v))
         delta_rounds = [
             r
             for r in self.catalog.log_round_ids("frontier_delta")
@@ -279,8 +296,10 @@ class CrawlEngine:
         ]
         if not delta_rounds:
             return base
-        deltas = self.catalog.read_log("frontier_delta").filter(
-            (F.col("round_id") > base_v) & (F.col("round_id") <= as_of_round)
+        deltas = _keyed(
+            self.catalog.read_log("frontier_delta").filter(
+                (F.col("round_id") > base_v) & (F.col("round_id") <= as_of_round)
+            )
         )
         w = Window.partitionBy("url_hash", "url").orderBy(
             F.col("round_id").desc()
@@ -323,15 +342,15 @@ class CrawlEngine:
         raw = http_fetch_stage(selected, self.client_factory, keep_cols=True)
         raw_rows = raw.select(
             F.lit(round_id).alias("round_id"),
-            *selected.columns,
+            *[c for c in selected.columns if c != "url_hash"],
             "status",
             F.encode(F.col("body"), "utf-8").alias("html"),
             "worker_pid",
             "client_seq",
         )
         self.catalog.write_round_partition("fetch_raw", raw_rows)
-        back = self.catalog.read_log("fetch_raw").filter(
-            F.col("round_id") == round_id
+        back = _keyed(
+            self.catalog.read_log("fetch_raw").filter(F.col("round_id") == round_id)
         )
         fetched = (
             back.drop("html", "worker_pid", "client_seq", "round_id")
@@ -482,7 +501,7 @@ class CrawlEngine:
             )
             due_keys = (
                 schedule_from_stats(
-                    self.catalog.read("revisit_stats", version=stats_v),
+                    _keyed(self.catalog.read("revisit_stats", version=stats_v)),
                     self.revisit,
                     key_cols=["url_hash", "url"],
                 )
@@ -567,7 +586,6 @@ class CrawlEngine:
         extractions = extracted.select(
             F.lit(round_id).alias("round_id"),
             "url",
-            "url_hash",
             "competitor",
             "yacht_id",
             "period_from",
@@ -594,10 +612,10 @@ class CrawlEngine:
             prev_stats = None
             prev_vs = [v for v in self._revisit_versions() if v <= round_id - 1]
             if prev_vs:
-                prev_stats = self.catalog.read(
-                    "revisit_stats", version=max(prev_vs)
+                prev_stats = _keyed(
+                    self.catalog.read("revisit_stats", version=max(prev_vs))
                 )
-            visits = ext.select(
+            visits = _keyed(ext).select(
                 "url_hash",
                 "url",
                 F.lit(round_id).alias("round_id"),
@@ -607,7 +625,7 @@ class CrawlEngine:
                 "revisit_stats",
                 update_revisit_stats(
                     prev_stats, visits, key_cols=["url_hash", "url"]
-                ),
+                ).drop("url_hash"),
                 version=round_id,
             )
 
@@ -766,6 +784,7 @@ class CrawlEngine:
                     ).select(*FRONTIER_COLS)
                 )
                 .unionByName(discoveries)
+                .drop("url_hash")
                 .withColumn("round_id", F.lit(round_id))
                 .observe(disc_obs, _disc_expr)
             )
@@ -794,7 +813,9 @@ class CrawlEngine:
             )
             self.catalog.write_snapshot(
                 "frontier",
-                new_frontier.repartition(self.n_buckets, "host_bucket"),
+                new_frontier.drop("url_hash").repartition(
+                    self.n_buckets, "host_bucket"
+                ),
                 version=round_id,
             )
         frontier_write_s = time.monotonic() - tw

@@ -15,6 +15,19 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "stop_spark"]
 
+# Spark keeps the classes it generates in one JVM-wide cache of
+# ``spark.sql.codegen.cache.maxEntries`` (default 100), evicting the
+# least recently used. A crawl round generates 90-125 classes, so at the
+# default each round evicts the classes the next round would reuse and
+# recompiles nearly all of them. 2,000 holds a merge-on-read delta round
+# and a compaction round together; what a repeated round still compiles
+# are the classes that inline its round id as a literal. Janino compiles
+# per round of a 4-round crawl of the test world compacting every 2nd
+# round (local[2], 4 vCPU): 107/123/84/120 at the default, 107/64/26/25
+# at 2,000 (tests/test_codegen_cache.py). A static conf: it takes effect
+# only when the JVM's first session starts.
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def get_spark(
     app_name: str = "web_scraper_spark",
@@ -53,6 +66,7 @@ def get_spark(
         # the partial pass is a streaming rank filter, so a larger cap
         # costs nothing.
         .config("spark.sql.optimizer.windowGroupLimitThreshold", "10000000")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Input splits size the task count of map stages that follow a
         # scan (the Arrow extraction stage inherits them — with wide
         # compressed html, 128 MiB splits starve a 32-core box). 32 MiB

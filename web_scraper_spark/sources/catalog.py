@@ -25,7 +25,12 @@ merge-back shuffle both sides; they are not co-partitioned. ROADMAP
 item 6 measures whether that matters at frontier scale. Round
 partitions do not keep the caller's layout: each write is rebalanced,
 so AQE sizes its files (one file for a budget-sized round, advisory-size
-splits for a large one) instead of one file per upstream task.
+splits for a large one) instead of one file per upstream task, and each
+file is sorted by ``(round_id, url)`` (``round_partition_layout``).
+
+The catalog stores the columns it is handed. The crawl round hands it
+no ``url_hash``: its frontier tables and extractions store ``url`` only
+and derive the key when they read it back (``plans/rounds.py``).
 
 Every write records the table's schema in its ``MANIFEST.json`` and
 every read passes it to the parquet reader, so a read runs no
@@ -48,7 +53,20 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-__all__ = ["ParquetSnapshotCatalog", "make_catalog"]
+__all__ = ["ParquetSnapshotCatalog", "make_catalog", "round_partition_layout"]
+
+
+def round_partition_layout(df: DataFrame) -> DataFrame:
+    """The rows of a round-partition write as they are laid out in its
+    files: rebalanced, so AQE sizes the files instead of the upstream
+    task count, then sorted within each file by ``(round_id, url)``.
+    Neighbouring rows of one host share long URL prefixes and
+    ``host``/``depth`` runs, so zstd and parquet's dictionary and
+    run-length pages shrink the file; ``round_id`` leads the sort so the
+    writer's own partition-column sort is already satisfied. A table
+    without a ``url`` column is sorted by ``round_id`` alone."""
+    order = ["round_id"] + (["url"] if "url" in df.columns else [])
+    return df.hint("rebalance").sortWithinPartitions(*order)
 
 
 class ParquetSnapshotCatalog:
@@ -229,11 +247,12 @@ class ParquetSnapshotCatalog:
         coalesces a budget-sized round into one file and splits a large
         one at its advisory partition size. The shuffle moves only the
         rows ``df`` holds; the crawl round's extractions have dropped
-        ``html`` by then."""
+        ``html`` by then. Each file is written in url order
+        (``round_partition_layout``)."""
         path = self.append_dir(name)
-        df.hint("rebalance").write.mode("overwrite").partitionBy("round_id").parquet(
-            path
-        )
+        round_partition_layout(df).write.mode("overwrite").partitionBy(
+            "round_id"
+        ).parquet(path)
         # a partition column reads back after the data columns
         schema = StructType(
             [f for f in df.schema if f.name != "round_id"]

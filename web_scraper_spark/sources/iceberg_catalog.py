@@ -31,6 +31,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .catalog import round_partition_layout
+
 __all__ = ["IcebergCatalog"]
 
 
@@ -191,11 +193,12 @@ class IcebergCatalog:
         """Idempotent per-round append — with
         ``spark.sql.sources.partitionOverwriteMode=dynamic`` the INSERT
         OVERWRITE replaces exactly the round_id partitions in ``df``.
-        Rebalanced first, like ``ParquetSnapshotCatalog``, so AQE sizes
-        the data files instead of the upstream task count."""
+        Laid out like ``ParquetSnapshotCatalog``'s (rebalanced, then url
+        order within each partition), so AQE sizes the data files
+        instead of the upstream task count."""
         self._require()
         view = f"_log_{name}"
-        df.hint("rebalance").createOrReplaceTempView(view)
+        round_partition_layout(df).createOrReplaceTempView(view)
         self.spark.sql(self.insert_overwrite_sql(name, view))
 
     def read_log(self, name: str) -> DataFrame:
