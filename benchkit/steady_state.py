@@ -34,8 +34,7 @@ def main() -> int:
     ap.add_argument("--budget", type=int, default=500_000)
     ap.add_argument("--cache", default="/tmp/wss_bench_cache")
     ap.add_argument("--out", default="BENCH/steady_state_10m.json")
-    ap.add_argument("--frontier-mode", default="cow", choices=["cow", "mor"])
-    ap.add_argument("--compact-every", type=int, default=8)
+    ap.add_argument("--compact-every", type=int, default=1)
     args = ap.parse_args()
 
     from benchkit.genworld import generate_bench_world
@@ -75,10 +74,9 @@ def main() -> int:
     try:
         catalog = ParquetSnapshotCatalog(spark, state)
         # retention 2: a long steady-state crawl must not hoard every
-        # CoW frontier copy — and expiry cost is part of the round
+        # compacted frontier snapshot — and expiry cost is part of the round
         engine = CrawlEngine(
             spark, catalog, spec, n_buckets=args.cpus, snapshot_retention=2,
-            frontier_mode=args.frontier_mode,
             mor_compact_every=args.compact_every,
         )
         seeds = spark.read.parquet(f"{world}/seeds.parquet")
@@ -115,27 +113,16 @@ def main() -> int:
                 f"{args.hosts} hosts x {args.yachts} yachts x 28 periods "
                 f"({frontier_rows} frontier rows), {args.budget} budget/round, "
                 f"local[{args.cpus}], light pages, state on /dev/shm, "
-                f"frontier_mode={args.frontier_mode}"
-                + (
-                    f" (compact every {args.compact_every})"
-                    if args.frontier_mode == "mor"
-                    else ""
-                )
+                f"frontier compacted every {args.compact_every} round(s)"
             ),
             "init_frontier_seconds": round(init_s, 1),
             "rounds": rounds,
             "note": (
                 "steady state at 10^7 frontier: per-round wall must track the "
-                "budget, not the frontier/seen size — the seen filter is "
-                "OR-merged (never rebuilt) and "
-                + (
-                    "frontier writes are merge-on-read row deltas "
-                    "(budget-proportional) with a full bucketed snapshot "
-                    f"only every {args.compact_every} rounds at compaction"
-                    if args.frontier_mode == "mor"
-                    else "the frontier snapshot is a bucketed CoW write "
-                    "with retention-2 expiry"
-                )
+                "budget, not the frontier/seen size — every "
+                f"{args.compact_every} round(s) the frontier is compacted into "
+                "a full bucketed snapshot (retention-2 expiry); rounds in "
+                "between write merge-on-read row deltas (budget-proportional)"
             ),
         }
         os.makedirs(os.path.dirname(args.out), exist_ok=True)

@@ -55,7 +55,7 @@ def compiles_per_round(tmp: str) -> dict[int, int]:
         pages = ingest_pages(spark, paths, tmp)
         engine = CrawlEngine(
             spark, ParquetSnapshotCatalog(spark, tmp + "/state"), cfg.politeness,
-            n_buckets=8, frontier_mode="mor", mor_compact_every=2,
+            n_buckets=8, mor_compact_every=2,
         )
         engine.init_frontier(seeds, cfg.period_start, cfg.period_end)
         out = {}

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from web_scraper_spark.functions.urls import url_hash
+from web_scraper_spark.operators.revisit import RevisitPolicy
 from web_scraper_spark.oracle.crawler import OracleCrawler
 from web_scraper_spark.plans.rounds import FRONTIER_COLS, CrawlEngine
 from web_scraper_spark.sources.catalog import ParquetSnapshotCatalog
@@ -162,38 +163,49 @@ class _CrashingCatalog(ParquetSnapshotCatalog):
 
 
 # round 2's mutating catalog calls, in order, per (mor_compact_every,
-# snapshot_retention): compacting every 3rd round makes round 2 a delta
-# round, every 2nd a compaction round, and a retention adds the expiry
+# snapshot_retention, revisit): compacting every 3rd round makes round 2
+# a delta round, every 2nd a compaction round; a retention adds the
+# expiry and revisit the revisit_stats write
 _COMPACTION_CALLS = [
     "extractions", "fetch_log", "frontier", "commit_round", "drop_log_partitions",
 ]
 ROUND2_CALLS = {
-    (3, None): ["extractions", "fetch_log", "frontier_delta", "commit_round"],
-    (2, None): _COMPACTION_CALLS,
-    (2, 1): _COMPACTION_CALLS + ["expire_snapshots"],
+    (3, None, False): ["extractions", "fetch_log", "frontier_delta", "commit_round"],
+    (2, None, False): _COMPACTION_CALLS,
+    (2, 1, False): _COMPACTION_CALLS + ["expire_snapshots"],
+    (3, None, True): [
+        "extractions", "revisit_stats", "fetch_log", "frontier_delta", "commit_round",
+    ],
+    (2, None, True): ["extractions", "revisit_stats", *_COMPACTION_CALLS[1:]],
 }
 CRASH_CELLS = [
     pytest.param(
-        every, retention, k, id=f"{'delta' if every == 3 else 'compaction'}-{label}"
+        every, retention, revisit, k,
+        id=f"{'delta' if every == 3 else 'compaction'}-{label}",
     )
-    for (every, retention), labels in ROUND2_CALLS.items()
+    for (every, retention, revisit), labels in ROUND2_CALLS.items()
     for k, label in enumerate(labels)
-    # the retention crawl's other calls are the plain compaction's cells
-    if retention is None or label == "expire_snapshots"
+    # the retention and revisit crawls' other calls are the plain
+    # crawls' cells
+    if (retention is None or label == "expire_snapshots")
+    and (not revisit or label == "revisit_stats")
 ]
+REVISIT = RevisitPolicy(default_interval=2, max_interval=4)
 
 
-def _mor_engine(env, catalog, every, retention=None):
+def _mor_engine(env, catalog, every, retention=None, revisit=False):
     spark, cfg = env[0], env[1]
     return CrawlEngine(
         spark, catalog, cfg.politeness, n_buckets=8,
-        frontier_mode="mor", mor_compact_every=every,
+        mor_compact_every=every,
         snapshot_retention=retention,
+        revisit=REVISIT if revisit else None,
     )
 
 
 def _crawl_state(eng, as_of):
-    """Frontier (all FRONTIER_COLS), fetch_log and extractions rows."""
+    """Frontier (all FRONTIER_COLS), fetch_log and extractions rows, and
+    revisit_stats rows when revisits are on."""
 
     def rows(df):
         return sorted(
@@ -201,26 +213,31 @@ def _crawl_state(eng, as_of):
             for r in df.collect()
         )
 
-    return {
+    state = {
         "frontier": rows(eng._read_frontier(as_of).select(*FRONTIER_COLS)),
         "fetch_log": rows(eng.catalog.read_log("fetch_log")),
         "extractions": rows(eng.catalog.read_log("extractions")),
     }
+    if eng.revisit is not None:
+        state["revisit_stats"] = rows(eng.catalog.read("revisit_stats"))
+    return state
 
 
 @pytest.fixture(scope="module")
 def mor_reference(env):
-    """Per ``(mor_compact_every, snapshot_retention)``, one uninterrupted
-    3-round crawl: (a copy of its state after round 1, round 2's
-    mutating calls, its state after round 3)."""
+    """Per ``(mor_compact_every, snapshot_retention, revisit)``, one
+    uninterrupted 3-round crawl: (a copy of its state after round 1,
+    round 2's mutating calls, its state after round 3)."""
     spark, cfg, world, tmp, seeds, robots, pages = env
     cache = {}
 
-    def get(every, retention=None):
-        key = (every, retention)
+    def get(every, retention=None, revisit=False):
+        key = (every, retention, revisit)
         if key not in cache:
-            cat = _CrashingCatalog(spark, f"{tmp}/mor_ref_{every}_{retention}")
-            eng = _mor_engine(env, cat, every, retention)
+            cat = _CrashingCatalog(
+                spark, f"{tmp}/mor_ref_{every}_{retention}_{revisit}"
+            )
+            eng = _mor_engine(env, cat, every, retention, revisit)
             eng.init_frontier(seeds, cfg.period_start, cfg.period_end)
             eng.run(1, pages, robots, seeds)
             after_round1 = f"{cat.root}_r1"
@@ -235,23 +252,25 @@ def mor_reference(env):
     return get
 
 
-@pytest.mark.parametrize("every,retention,k", CRASH_CELLS)
+@pytest.mark.parametrize("every,retention,revisit,k", CRASH_CELLS)
 def test_mor_crash_at_every_write_resumes_exactly(
-    env, mor_reference, every, retention, k
+    env, mor_reference, every, retention, revisit, k
 ):
     """A merge-on-read round that crashes before any one of its
     mutating catalog calls must resume to the uninterrupted state: the
     frontier (discovery_round included), fetch_log and extractions
-    equal. Folded deltas stay readable until the round commit lands,
-    and a crash before the snapshot expiry leaves the expiry to a later
-    round."""
+    equal, and revisit_stats too when revisits are on. Folded deltas
+    stay readable until the round commit lands, and a crash before the
+    snapshot expiry leaves the expiry to a later round."""
     spark, cfg, world, tmp, seeds, robots, pages = env
-    after_round1, round2_calls, expected = mor_reference(every, retention)
-    assert round2_calls == ROUND2_CALLS[(every, retention)]
+    after_round1, round2_calls, expected = mor_reference(every, retention, revisit)
+    assert round2_calls == ROUND2_CALLS[(every, retention, revisit)]
 
-    cat = _CrashingCatalog(spark, f"{tmp}/mor_crash_{every}_{retention}_{k}")
+    cat = _CrashingCatalog(
+        spark, f"{tmp}/mor_crash_{every}_{retention}_{revisit}_{k}"
+    )
     shutil.copytree(after_round1, cat.root, dirs_exist_ok=True)
-    eng = _mor_engine(env, cat, every, retention)
+    eng = _mor_engine(env, cat, every, retention, revisit)
     cat.arm(k)
     with pytest.raises(RuntimeError, match=f"crash before {round2_calls[k]}"):
         eng.run_round(2, pages, robots, seeds)

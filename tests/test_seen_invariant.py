@@ -5,10 +5,12 @@ A round applies the URL-seen test to discoveries only (the exact
 reference oracle. Fetch candidates get no seen check: they are the
 frontier's ``pending`` rows and the seen set is its ``fetched`` rows,
 which cannot overlap as long as the frontier holds exactly one row per
-key. These tests pin that invariant after every round in copy-on-write,
-merge-on-read and revisit-on mode, and pin that the candidate-side
-probe (a co-grouped bloom ``applyInPandas``) and its ``seen_bloom``
-table stay gone. The same crawls pin the round's one html-fetch path:
+key. These tests pin that invariant after every round in a crawl that
+compacts the frontier every round (``cow``, the default: a snapshot per
+round), one that compacts every second round (``mor``: merge-on-read
+deltas in between) and one with revisits on, and pin that the
+candidate-side probe (a co-grouped bloom ``applyInPandas``) and its
+``seen_bloom`` table stay gone. The same crawls pin the round's one html-fetch path:
 a broadcast key left-semi into the pages scan, with extraction fused
 to that scan so html crosses no exchange, and the exact set of tables
 each mode writes. They also pin the tables' layout: the catalog
@@ -39,7 +41,7 @@ KEYS = ["url_hash", "url"]
 
 MODES = {
     "cow": {},
-    "mor": {"frontier_mode": "mor", "mor_compact_every": 2},
+    "mor": {"mor_compact_every": 2},
     "revisit": {"revisit": RevisitPolicy(default_interval=2, max_interval=4)},
 }
 

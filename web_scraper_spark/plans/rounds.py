@@ -7,7 +7,8 @@ bot_controller.py:89-107, with wall-clock sleeps re-expressed as budgets):
              ─ fetch (pages-table lookup join)
              ─ outcome split (success / empty / timeout)
              ─ extract (Arrow UDF) ─ discoveries anti-join + merge-back
-             ─ snapshot commits (frontier v<round>) + round manifest
+             ─ frontier commit (row delta, or snapshot v<round>)
+             + round manifest
 
 The URL-seen test is the exact (url_hash, url) anti-join of each
 round's discoveries against the frontier keys — the reference applies
@@ -20,6 +21,11 @@ round id; log partitions = dynamic overwrite on round_id), so a crashed
 or re-run round converges to the same state — the checkpoint/resume
 story. Selection is a pure function of the previous snapshot, so a
 resumed round re-derives the identical set (SURVEY.md §4.2).
+
+The frontier has one code path, merge-on-read: a round reads the newest
+snapshot with the ``frontier_delta`` partitions since overlaid, and
+commits a delta of the rows it changed or, every ``mor_compact_every``-th
+round (every round by default), a compacted snapshot.
 
 Scale notes (10^10 frontier):
 - the snapshot is written by ``host_bucket`` and read back unpartitioned,
@@ -52,8 +58,9 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import InitVar, dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -134,29 +141,24 @@ class CrawlEngine:
     # downstream (parity pinned by tests/test_live_round.py). None =
     # offline lookup mode (the only network-free mode in this sandbox).
     client_factory: Callable[[], object] | None = None
-    # keep this many frontier snapshot versions (None = all).
-    # Every round is a copy-on-write snapshot; an unbounded daily crawl
-    # retains its full history forever without this. Resume only ever
-    # needs the last committed round; deeper time travel is a retention
-    # policy choice.
+    # keep this many frontier snapshot versions (None = all). An
+    # unbounded daily crawl retains its full snapshot history forever
+    # without this. Resume only ever needs the last committed round;
+    # deeper time travel is a retention policy choice.
     snapshot_retention: int | None = None
-    # frontier persistence strategy:
-    #   "cow" — every round commits a full copy-on-write frontier
-    #           snapshot (simple; write cost is frontier-proportional:
-    #           ~22 s/round at a 10M-row frontier in the steady-state
-    #           bench, and the one history-sized cost at 10^10);
-    #   "mor" — merge-on-read: a round writes ONLY its changed rows
-    #           (state transitions + discoveries — budget-proportional)
-    #           as a `frontier_delta` round partition; reads overlay
-    #           deltas onto the last snapshot (latest-per-key), and
-    #           every `mor_compact_every` rounds the merged view is
-    #           folded into a fresh snapshot and the deltas dropped.
-    #           This is exactly Iceberg's MoR row-delta design; on a
-    #           real Iceberg catalog the read-side overlay collapses
-    #           into the scan (equality deletes) instead of the
-    #           explicit window/anti-join the parquet shim runs.
-    frontier_mode: str = "cow"
-    mor_compact_every: int = 8
+    # The frontier is merge-on-read, Iceberg's row-delta design: a
+    # round writes only the rows it changed (state transitions and
+    # discoveries, budget-proportional) as a `frontier_delta` round
+    # partition, and reads overlay those deltas onto the newest
+    # snapshot (latest per key). Every `mor_compact_every`-th round
+    # folds the merged view into a fresh snapshot instead and drops the
+    # deltas, so 1 writes a full snapshot every round and no delta. On
+    # a real Iceberg catalog the overlay collapses into the scan
+    # (equality deletes) instead of the window/anti-join the parquet
+    # shim runs.
+    mor_compact_every: int = 1
+    # init-only and never stored; "mor" is its one value
+    frontier_mode: InitVar[str] = "mor"
     # adaptive re-crawl (None = off, the reference-parity mode): a
     # RevisitPolicy turns `fetched` frontier rows whose change-rate
     # schedule says they are due back into candidates. The schedule is
@@ -169,17 +171,18 @@ class CrawlEngine:
     # *freshness*); they still pass the robots gate and compete for the
     # same politeness budget.
     revisit: "RevisitPolicy | None" = None
-    # politeness identity: "host" (reference-parity default) or
-    # "domain" — budget per registrable domain (eTLD+1), closing the
-    # wildcard-subdomain / minted-hostname budget-multiplication hole
-    # (functions/domains.py; operators/politeness.select_polite grain)
-    politeness_grain: str = "host"
-
     # selection sizes up to here broadcast the narrow crawl attrs onto
     # the extraction output so the attrs join shuffles no extracted
     # text; beyond it the attrs join shuffles rather than build a
     # driver-side hash table of every selected row
     ATTRS_BROADCAST_THRESHOLD: int = 1_000_000
+
+    def __post_init__(self, frontier_mode: str) -> None:
+        if frontier_mode != "mor":
+            raise ValueError(
+                f"frontier_mode={frontier_mode!r}: the frontier is merge-on-read "
+                "only; mor_compact_every=1 writes a snapshot every round"
+            )
 
     # ------------------------------------------------------------------
     # frontier bootstrap: T1 (weekly periods) + T3 (seeds x periods)
@@ -273,18 +276,20 @@ class CrawlEngine:
         return _keyed(self.catalog.read("frontier"))
 
     def _read_frontier(self, as_of_round: int) -> DataFrame:
-        """The frontier as of ``as_of_round``.
+        """The frontier as of ``as_of_round``."""
+        return self._overlaid_frontier(as_of_round)[0]
 
-        cow: plain snapshot read (no shuffle). mor: overlay the delta
-        partitions in ``(base, as_of]`` onto the newest snapshot ≤
-        ``as_of`` — latest-per-key within the deltas (delta-
-        proportional shuffle), then a key anti-join to drop superseded
-        base rows. A key appears at most once per round partition, so
-        ``round_id`` is a total per-key order. Resume/time-travel reads
-        pick the right base from the version history, so re-reading an
-        old round after later compactions stays correct."""
-        if self.frontier_mode != "mor":
-            return _keyed(self.catalog.read("frontier", version=as_of_round))
+    def _overlaid_frontier(self, as_of_round: int) -> tuple[DataFrame, bool]:
+        """(the frontier as of ``as_of_round``, whether deltas were
+        overlaid): the delta partitions in ``(base, as_of]`` overlaid
+        onto the newest snapshot ≤ ``as_of`` — latest-per-key within the
+        deltas (delta-proportional shuffle), then a key anti-join to drop
+        superseded base rows. With no delta in that range it is the
+        snapshot read alone (no shuffle). A key appears at most once per
+        round partition, so ``round_id`` is a total per-key order.
+        Resume/time-travel reads pick the right base from the version
+        history, so re-reading an old round after later compactions
+        stays correct."""
         base_v = max(
             v for v in self.catalog.versions("frontier") if v <= as_of_round
         )
@@ -295,7 +300,7 @@ class CrawlEngine:
             if base_v < r <= as_of_round
         ]
         if not delta_rounds:
-            return base
+            return base, False
         deltas = _keyed(
             self.catalog.read_log("frontier_delta").filter(
                 (F.col("round_id") > base_v) & (F.col("round_id") <= as_of_round)
@@ -314,7 +319,7 @@ class CrawlEngine:
             ["url_hash", "url"],
             "left_anti",
         )
-        return survivors.unionByName(latest)
+        return survivors.unionByName(latest), True
 
     # ------------------------------------------------------------------
     def _fetch_live(
@@ -469,18 +474,14 @@ class CrawlEngine:
             _mark[0] = now
 
         round_caches: list = []
-        frontier = self._read_frontier(round_id - 1)
-        if self.frontier_mode == "mor":
-            # The merged (base ⊕ deltas) view is consumed by several jobs
-            # per round (candidates, discovery anti-join, state
-            # transitions). Unpersisted, EVERY one re-runs the overlay
-            # window + anti-join over the full frontier — measured 10-60 s
-            # of recompute per job at a 10M-row frontier, dwarfing the
-            # delta-write savings. Persist SERIALIZED (spillable) once;
-            # a real Iceberg catalog removes this entirely by folding the
-            # row-delta overlay into the scan.
-            from pyspark import StorageLevel
-
+        frontier, overlaid = self._overlaid_frontier(round_id - 1)
+        if overlaid:
+            # Several jobs per round consume the frontier; unpersisted,
+            # each re-runs the overlay's window + anti-join over all of
+            # it (10-60 s per job at a 10M-row frontier). A plain
+            # snapshot read is cheaper to re-scan than to persist
+            # (BENCH/BASELINE.md); a real Iceberg catalog folds the
+            # overlay into the scan.
             frontier = frontier.persist(StorageLevel.MEMORY_AND_DISK)
             round_caches.append(frontier)
 
@@ -549,7 +550,6 @@ class CrawlEngine:
             self.spec,
             cache_handles=round_caches,
             candidate_upper_bound=frontier_rows,
-            grain=self.politeness_grain,
         )
 
         # P1 fetch + extraction — the only Python stage, Arrow-batched
@@ -751,10 +751,7 @@ class CrawlEngine:
                 .drop("outcome")
             )
 
-        mor_delta_round = (
-            self.frontier_mode == "mor"
-            and round_id % self.mor_compact_every != 0
-        )
+        delta_round = round_id % self.mor_compact_every != 0
 
         # discovery count rides the state write as an OBSERVATION —
         # previously a separate count job that re-scanned the entire
@@ -767,7 +764,7 @@ class CrawlEngine:
         ).alias("n")
 
         tw = time.monotonic()
-        if mor_delta_round:
+        if delta_round:
             # W4 as an Iceberg-style row delta: ONLY the rows this round
             # changed — outcome transitions (≤ budget rows), newly
             # robots-blocked rows, and discoveries. Write cost is
@@ -790,6 +787,8 @@ class CrawlEngine:
             )
             self.catalog.write_round_partition("frontier_delta", delta)
         else:
+            # compaction: the merged view with this round's changes
+            # becomes snapshot v<round_id>
             new_frontier = _transitions(
                 frontier.join(outcome, ["url_hash", "url"], "left")
             )
@@ -866,12 +865,12 @@ class CrawlEngine:
             + counts["empty"]
             - n_revisit_seen,
             "wall_seconds": wall_s,
-            # per-round cost of the frontier write (CoW snapshot, MoR
-            # delta or compaction) — the state write that must stay
+            # per-round cost of the frontier write (delta or compaction
+            # snapshot) — the state write that must stay
             # budget-proportional as the frontier grows
             "frontier_write_seconds": round(frontier_write_s, 3),
             "urls_per_sec": counts["selected"] / wall_s if wall_s > 0 else 0.0,
-            # mor delta rounds do not advance the snapshot version —
+            # delta rounds do not advance the snapshot version —
             # the round's state lives in its frontier_delta partition
             "frontier_version": self.catalog.current_version("frontier"),
         }
@@ -880,7 +879,7 @@ class CrawlEngine:
         self.catalog.commit_round(round_id, info)
         # maintenance only AFTER the round commit, so a crash anywhere in
         # the round leaves every input a resume reads in place
-        if self.frontier_mode == "mor" and not mor_delta_round:
+        if not delta_round:
             # compaction point: deltas ≤ round_id are folded into the
             # snapshot this round committed. Dropped earlier, a crash
             # before the commit would make the re-run read the older
@@ -914,3 +913,8 @@ class CrawlEngine:
             self.run_round(r, pages_resolved, robots, seeds)
             for r in range(1, n_rounds + 1)
         ]
+
+
+# dataclasses leaves an InitVar's default on the class; without it,
+# ``engine.frontier_mode`` fails like any attribute the engine lacks
+del CrawlEngine.frontier_mode
