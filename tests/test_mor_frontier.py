@@ -59,11 +59,21 @@ def mor_pair(spark, world):
     shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _physical_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_mor_matches_cow_every_round(mor_pair):
     cow, mor, (pages, robots, seeds) = mor_pair
     for r in range(1, N_ROUNDS + 1):
         s_cow = cow.run_round(r, pages, robots, seeds)
         s_mor = mor.run_round(r, pages, robots, seeds)
+        overlay, overlaid = mor._overlaid_frontier(r)
+        # deltas after every odd round; the overlay keys its anti-join
+        # on latest-per-key, which already holds each delta key once
+        assert overlaid == (r % 2 == 1)
+        if overlaid:
+            assert "HashAggregate" not in _physical_plan(overlay), f"round {r}"
         for k in ("selected", "success", "empty", "error", "robots", "discovered", "seen_total"):
             assert s_cow[k] == s_mor[k], f"round {r}: {k}"
         assert _frontier_rows(cow, r) == _frontier_rows(mor, r), f"round {r}"

@@ -261,10 +261,13 @@ def test_mor_crash_at_every_write_resumes_exactly(
     frontier (discovery_round included), fetch_log and extractions
     equal, and revisit_stats too when revisits are on. Folded deltas
     stay readable until the round commit lands, and a crash before the
-    snapshot expiry leaves the expiry to a later round."""
+    snapshot expiry leaves the expiry to a later round. The crashed
+    round leaves nothing cached in the session."""
     spark, cfg, world, tmp, seeds, robots, pages = env
     after_round1, round2_calls, expected = mor_reference(every, retention, revisit)
     assert round2_calls == ROUND2_CALLS[(every, retention, revisit)]
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # what earlier tests left cached
 
     cat = _CrashingCatalog(
         spark, f"{tmp}/mor_crash_{every}_{retention}_{revisit}_{k}"
@@ -274,6 +277,7 @@ def test_mor_crash_at_every_write_resumes_exactly(
     cat.arm(k)
     with pytest.raises(RuntimeError, match=f"crash before {round2_calls[k]}"):
         eng.run_round(2, pages, robots, seeds)
+    assert cache_manager.isEmpty()
     assert cat.calls == round2_calls[:k]
     assert cat.last_committed_round() == (2 if "commit_round" in cat.calls else 1)
     eng.run(3, pages, robots, seeds)

@@ -314,10 +314,9 @@ class CrawlEngine:
             .filter(F.col("_rn") == 1)
             .select(*FRONTIER_COLS)
         )
+        # latest has one row per delta key: its keys are the deltas' key set
         survivors = base.join(
-            deltas.select("url_hash", "url").distinct(),
-            ["url_hash", "url"],
-            "left_anti",
+            latest.select("url_hash", "url"), ["url_hash", "url"], "left_anti"
         )
         return survivors.unionByName(latest), True
 
@@ -462,6 +461,27 @@ class CrawlEngine:
         """Execute (or resume past) one crawl round."""
         if self.catalog.round_committed(round_id):
             return self.catalog.read_round_manifest(round_id)
+        round_caches: list = []
+        try:
+            return self._run_round(
+                round_id, pages_resolved, robots, seeds, round_caches
+            )
+        finally:
+            # on every exit: a crashed round must not leave its caches
+            # in the session
+            for h in round_caches:
+                h.unpersist()
+
+    def _run_round(
+        self,
+        round_id: int,
+        pages_resolved: DataFrame,
+        robots: DataFrame,
+        seeds: DataFrame,
+        round_caches: list,
+    ) -> dict:
+        """``run_round``'s body; every frame it caches goes into
+        ``round_caches``."""
         t0 = time.monotonic()
         # per-section walls (scaling diagnosis: which sections are
         # data-proportional vs fixed overhead) — keyed by pipeline order
@@ -473,7 +493,6 @@ class CrawlEngine:
             sections[name] = round(now - _mark[0], 3)
             _mark[0] = now
 
-        round_caches: list = []
         frontier, overlaid = self._overlaid_frontier(round_id - 1)
         if overlaid:
             # Several jobs per round consume the frontier; unpersisted,
@@ -568,6 +587,7 @@ class CrawlEngine:
                 pages_resolved,
                 broadcast_attrs=selection_bound <= self.ATTRS_BROADCAST_THRESHOLD,
             )
+        round_caches.append(fetched)
         timeouts = fetched.filter(F.col("outcome") == "timeout").drop("outcome")
         empties = fetched.filter(F.col("outcome") == "empty").drop("outcome")
 
@@ -895,9 +915,6 @@ class CrawlEngine:
                 self.catalog.expire_snapshots(
                     "revisit_stats", self.snapshot_retention
                 )
-        fetched.unpersist()
-        for h in round_caches:
-            h.unpersist()
         return {"round_id": round_id, "status": "committed", **info}
 
     # ------------------------------------------------------------------

@@ -5,6 +5,21 @@ Designed for a 1000-executor cluster reading ~100 TB, tested on
 enabled for the few vectorized-UDF stages, shuffle partitions sized by
 cores (overridable per deployment), dynamic partition overwrite for the
 idempotent round commits.
+
+Sessions built here fork their Python workers from
+``web_scraper_spark.worker_daemon`` instead of pyspark's stock daemon.
+The round's one Python stage is the Arrow extraction, and its fixed
+per-task cost was worker set-up, not rows: every worker imported pandas
+and pyarrow into private memory after the fork, and every task's
+``importlib.invalidate_caches()`` re-read pyspark.zip's central
+directory once per cached zip importer (~0.3 s of CPU per task,
+BENCH/BASELINE.md). The daemon preloads those imports, so workers share
+them copy-on-write, and drops the zip importers before it forks. It
+applies only to ``get_spark`` sessions in local mode: the executors
+import it from the package root that holds this module, which
+``spark.executorEnv.PYTHONPATH`` puts on their path, and executors on
+other hosts do not see the driver's files. Sessions built elsewhere
+(``benchkit/submit_round.py``) keep pyspark's daemon.
 """
 
 from __future__ import annotations
@@ -14,6 +29,9 @@ import os
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "stop_spark"]
+
+# the directory (or zip) that holds the web_scraper_spark package
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Spark keeps the classes it generates in one JVM-wide cache of
 # ``spark.sql.codegen.cache.maxEntries`` (default 100), evicting the
@@ -99,6 +117,10 @@ def get_spark(
         # user CPU idle). Enough for ~1 GiB wide-column shuffles.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.python.daemon.module", "web_scraper_spark.worker_daemon"
+        ).config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
